@@ -108,6 +108,16 @@ def mix31_duckdb_sql(e: str) -> str:
     return _mix31(e, "xor({a}, {b})", "({a} >> {b})")
 
 
+def eval_split_spark_sql(key: str) -> str:
+    """The deterministic 20% held-out split: true when mix31(key) % 5
+    is 0 — Spark spelling."""
+    return f"({mix31_spark_sql(key)}) % 5 = 0"
+
+
+def eval_split_duckdb_sql(key: str) -> str:
+    return f"({mix31_duckdb_sql(key)}) % 5 = 0"
+
+
 def str_code_spark_sql(col: str) -> str:
     """Polynomial code-point fold of a string column — Spark spelling.
     NULL/empty fold to the bare seed (the engines disagree on what a

@@ -49,15 +49,3 @@ def dec_avg(c: str | Column, scale: int) -> Column:
     c = _col(c)
     return F.round(F.sum(c.cast(DEC)).cast("double") / F.count(c), scale)
 
-
-def dec_sum_sql(expr: str, scale: int) -> str:
-    """DuckDB-side twin of :func:`dec_sum` (use in oracle_sql strings)."""
-    return f"CAST(ROUND(SUM(CAST({expr} AS DECIMAL(38,6))), {scale}) AS DOUBLE)"
-
-
-def dec_avg_sql(expr: str, scale: int) -> str:
-    """DuckDB-side twin of :func:`dec_avg`."""
-    return (
-        f"ROUND(CAST(SUM(CAST({expr} AS DECIMAL(38,6))) AS DOUBLE)"
-        f" / COUNT({expr}), {scale})"
-    )

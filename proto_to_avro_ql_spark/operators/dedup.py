@@ -27,27 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from proto_to_avro_ql_spark.functions.text import normalize_text
-
-# --- shingling -------------------------------------------------------------
-
-
-def tokens(col: Column) -> Column:
-    return F.split(normalize_text(col), " ")
-
-
-def shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of the normalized text."""
-    toks = tokens(col)
-    return F.array_distinct(
-        F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-            ),
-        ).otherwise(F.array(F.concat_ws(" ", toks)))
-    )
+from proto_to_avro_ql_spark.functions.text import normalize_text, shingles, tokens
 
 
 # --- exact & normalized ----------------------------------------------------
@@ -187,20 +167,6 @@ def containment_pairs(
 
 
 # --- MinHash LSH -----------------------------------------------------------
-
-
-def minhash_signature(sh: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature as an array<long>: for seed k, min over shingles
-    of xxhash64(k, h(shingle)). One narrow projection, no shuffle.
-
-    Each shingle string is hashed ONCE (xxhash64 of the string); the k
-    hash functions then re-hash that 8-byte long — the standard
-    one-string-hash + k-cheap-rehash construction, ~10× cheaper than
-    hashing the string k times."""
-    base = F.transform(sh, lambda s: F.xxhash64(s))
-    return F.array(
-        *[F.array_min(F.transform(base, _rehash(k))) for k in range(num_hashes)]
-    )
 
 
 def _rehash(k: int):

@@ -46,7 +46,7 @@ def repetition_signals(
     """
     toks = docs.select(
         F.col(id_col),
-        F.explode(F.split(TX.normalize_text(F.col(text_col)), " ")).alias("t"),
+        F.explode(TX.tokens(F.col(text_col))).alias("t"),
     )
     tc = toks.groupBy(id_col, "t").agg(F.count(F.lit(1)).alias("c"))
     per_doc = tc.groupBy(id_col).agg(
@@ -133,7 +133,7 @@ def unigram_lm_score(
 
     toks = docs.select(
         F.col(id_col),
-        F.explode(F.split(TX.normalize_text(F.col(text_col)), " ")).alias("t"),
+        F.explode(TX.tokens(F.col(text_col))).alias("t"),
     )
     vocab = toks.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
     total = vocab.agg(F.sum("c").alias("total"))
@@ -217,7 +217,7 @@ def bigram_lm_score(
     """
     from proto_to_avro_ql_spark.functions.stable import DEC
 
-    toks = F.split(TX.normalize_text(F.col(text_col)), " ")
+    toks = TX.tokens(F.col(text_col))
     n = F.size(toks)
     pairs = F.arrays_zip(
         F.slice(toks, 1, n - 1).alias("w1"),
@@ -277,7 +277,7 @@ def token_entropy(
 
     toks = docs.select(
         F.col(id_col),
-        F.explode(F.split(TX.normalize_text(F.col(text_col)), " ")).alias("t"),
+        F.explode(TX.tokens(F.col(text_col))).alias("t"),
     )
     tc = toks.groupBy(id_col, "t").agg(F.count(F.lit(1)).alias("c"))
     w = Window.partitionBy(id_col)

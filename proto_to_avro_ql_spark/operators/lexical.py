@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from proto_to_avro_ql_spark.functions.text import normalize_text
+from proto_to_avro_ql_spark.functions.text import tokens
 from proto_to_avro_ql_spark.sources.io import ensure_min_parallelism
 
 
@@ -51,7 +51,7 @@ def bm25_search(
         ensure_min_parallelism(docs)
         .select(
             F.col(id_col),
-            F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("t"),
+            F.explode(tokens(F.col(text_col))).alias("t"),
         )
         .where(F.col("t") != "")
     )
@@ -105,14 +105,13 @@ def tfidf_top_terms(
     tf). At 100 TB the df relation is vocabulary-scale and the join
     key is the term — skew on stopword-like terms is bounded because
     tf rows are already aggregated per doc."""
-    from proto_to_avro_ql_spark.functions.text import normalize_text
     from pyspark.sql.window import Window
 
     toks = (
         ensure_min_parallelism(docs)
         .select(
             F.col(id_col),
-            F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("term"),
+            F.explode(tokens(F.col(text_col))).alias("term"),
         )
         .where(F.col("term") != "")
     )

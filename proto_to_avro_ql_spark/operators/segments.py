@@ -27,15 +27,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from proto_to_avro_ql_spark.functions.text import normalize_text
+from proto_to_avro_ql_spark.functions.text import normalize_text, tokens
 
 
 def _tokens(col: Column) -> Column:
     """Whitespace tokens of the normalized text; blank → [] (Spark's
     split('', ' ') is [''], which would fabricate a chunk)."""
-    norm = normalize_text(col)
-    return F.when(norm == "", F.array().cast("array<string>")).otherwise(
-        F.split(norm, " ")
+    return F.when(normalize_text(col) == "", F.array().cast("array<string>")).otherwise(
+        tokens(col)
     )
 
 

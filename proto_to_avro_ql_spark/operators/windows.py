@@ -107,17 +107,3 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts_str"),
         F.sum(is_start).over(w_cum).alias("session_seq"),
     )
-
-
-def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Per-session aggregates over the sessionized stream."""
-    s = sessionize(events, gap_minutes)
-    joined = s.join(
-        events.select("event_id", "value"), "event_id"
-    )
-    return joined.groupBy("user_id", "session_seq").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min("ts_str").alias("session_start"),
-        F.max("ts_str").alias("session_end"),
-        dec_sum("value", 4).alias("sum_value"),
-    )

@@ -42,11 +42,6 @@ def parse_recursive_json(
     return F.from_json(col, unroll_recursive_schema(leaf_fields, child_field, max_depth))
 
 
-def level_accessor(root: str, child_field: str, depth: int) -> str:
-    """Dot-path to the node at ``depth`` (0 = root)."""
-    return ".".join([root] + [child_field] * depth)
-
-
 def make_chain_json(value_cols: list[Column]) -> Column:
     """Helper to synthesize a recursive JSON chain {"v":a,"child":{"v":b,...}}
     from per-level value columns (used by tests/fixtures)."""

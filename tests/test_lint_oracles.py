@@ -9,7 +9,7 @@ fires by planting one violation per rule.
 
 from __future__ import annotations
 
-from tools.lint_oracles import find_violations, lint_all
+from tools.lint_oracles import find_fragment_copies, find_violations, lint_all
 
 
 class TestCorpusClean:
@@ -46,6 +46,50 @@ class TestPlantedViolationsFire:
             "SELECT CAST(x / y AS DECIMAL(38,6)) FROM t"
         )
         assert any(h.startswith("R4") for h in hits), hits
+
+
+class TestFragmentCopiesFire:
+    """R6: hand-written copies of the shared text fragments outside
+    functions/text.py and functions/portable.py."""
+
+    def test_spark_tokenizer_copy(self):
+        hits = find_fragment_copies(
+            'toks = F.split(TX.normalize_text(F.col("text")), " ")\n'
+        )
+        assert any("tokenizer" in h for h in hits), hits
+
+    def test_sql_tokenizer_copy(self):
+        hits = find_fragment_copies(
+            "SQL = r\"\"\"SELECT string_split(trim(regexp_replace("
+            "lower(text), '\\s+', ' ', 'g')), ' ') FROM documents\"\"\"\n"
+        )
+        assert any("tokenizer" in h for h in hits), hits
+
+    def test_pair_copies(self):
+        spark = (
+            'p = F.expr("zip_with(slice(a, 1, size(a) - 1),'
+            ' slice(a, 2, size(a) - 1), (x, y) -> concat(x, y))")\n'
+        )
+        sql = 'q = "SELECT unnest(a[1:len(a)-1]) AS v FROM t"\n'
+        for src in (spark, sql):
+            hits = find_fragment_copies(src)
+            assert any("adjacent pairs" in h for h in hits), hits
+
+    def test_eval_split_copy(self):
+        hits = find_fragment_copies(
+            'e = f"CASE WHEN ({mix}) % 5 = 0 THEN 1 ELSE 0 END"\n'
+        )
+        assert any("eval split" in h for h in hits), hits
+
+    def test_renderer_calls_and_prose_clean(self):
+        assert not find_fragment_copies(
+            '"""Docstring: F.split(normalize_text(c), " ") per doc."""\n'
+            "# comment: zip_with(slice(a, 1, n - 1), ...)\n"
+            'toks = TX.nonempty_tokens(F.col("text"))\n'
+            "sql = f\"SELECT {TX.adjacent_pairs_sql('a')} FROM t"
+            " WHERE {PK.eval_split_duckdb_sql('doc_id')}\"\n"
+            'u = F.when(F.col("doc_id") % 5 == 0, "#frag")\n'
+        )
 
 
 class TestSanctionedPatternsPass:

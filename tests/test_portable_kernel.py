@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from proto_to_avro_ql_spark.functions import portable as P
+from proto_to_avro_ql_spark.functions import text as TX
 
 
 @pytest.fixture(scope="module")
@@ -158,3 +159,109 @@ class TestCmsFragmentParity:
         )
         assert tuple(d) == s
         assert 0 <= d[1] and d[2] < P.CMS_W
+
+
+# Whitespace edge cases for the shared tokenizer: vertical tab (Java's
+# \s matches it, RE2's does not unless named), no-break space, em
+# space, the FS control and NEL (no engine's \s matches those), empty,
+# all-blank, and mixed case / tab / newline prose.
+TEXT_GRID = [
+    "a\x0bb",
+    "a\u00a0b",
+    "a\u2003b",
+    "a\x1cb",
+    "a\x85b",
+    "",
+    " \t\n\x0b\x0c\r ",
+    "  Mixed\tCASE\ntext \r\n with  TABS\t\tand\x0bNewlines ",
+    "The cat and the dog of the house went to the market and the fair, the end!",
+    "one two",
+    "Word isn't\x0b--it's 42!",
+]
+
+
+class TestTextFragmentParity:
+    """Each shared text fragment renders the same values in Spark and
+    DuckDB over TEXT_GRID (shingle/n-gram lists compared as sorted
+    lists: DuckDB's list_distinct does not keep first-seen order)."""
+
+    @staticmethod
+    def _duck(con, expr: str, texts: list[str]) -> list:
+        return [
+            con.execute(
+                f"SELECT {expr} FROM (SELECT CAST(? AS VARCHAR) AS text, "
+                f"{TX.nonempty_tokens_sql()} AS a, {TX.tokens_sql()} AS t)",
+                [s],
+            ).fetchone()[0]
+            for s in texts
+        ]
+
+    @staticmethod
+    def _spark(spark, col, texts: list[str]) -> list:
+        sdf = spark.createDataFrame([(i, s) for i, s in enumerate(texts)], "i int, text string")
+        sdf = sdf.select(
+            "i", "text", TX.nonempty_tokens(F.col("text")).alias("a"),
+            TX.tokens(F.col("text")).alias("t"),
+        )
+        return [r[1] for r in sdf.select("i", col).orderBy("i").collect()]
+
+    def test_scalar_fragments(self, spark, con):
+        pairs = [
+            ("t", TX.tokens(F.col("text")), TX.tokens_sql()),
+            ("a", TX.nonempty_tokens(F.col("text")), TX.nonempty_tokens_sql()),
+            ("ws", TX.token_count_ws(F.col("text")), TX.token_count_ws_sql()),
+            ("bpe", TX.token_count_bpe(F.col("text")), TX.token_count_bpe_sql()),
+            ("punct", TX.punct_ratio(F.col("text")), TX.punct_ratio_sql()),
+            ("stop", TX.stopword_ratio(F.col("text")), TX.stopword_ratio_sql()),
+            ("quality", TX.quality_score(F.col("text")), TX.quality_score_sql()),
+            ("joined", TX.joined_pairs("a"), TX.joined_pairs_sql("a")),
+            ("joined_sep", TX.joined_pairs("a", "·"), TX.joined_pairs_sql("a", "·")),
+        ]
+        for name, sc, dq in pairs:
+            s = self._spark(spark, sc, TEXT_GRID)
+            d = self._duck(con, dq, TEXT_GRID)
+            assert [list(x) if isinstance(x, list) else x for x in s] == d, name
+
+    @pytest.mark.parametrize("n", [3, 8])
+    def test_shingles_and_ngrams(self, spark, con, n):
+        s = self._spark(spark, TX.shingles(F.col("text"), n), TEXT_GRID)
+        d = self._duck(con, TX.shingles_sql("t", n), TEXT_GRID)
+        assert [sorted(x) for x in s] == [sorted(x) for x in d]
+        s = self._spark(
+            spark,
+            F.expr(
+                f"CASE WHEN size(a) >= {n} THEN transform(sequence(1, size(a) - {n - 1}),"
+                f" i -> array_join(slice(a, i, {n}), ' ')) ELSE array() END"
+            ),
+            TEXT_GRID,
+        )
+        d = self._duck(con, TX.ngrams_sql("a", n), TEXT_GRID)
+        assert [list(x) for x in s] == d
+
+    def test_adjacent_pairs(self, spark, con):
+        s = [
+            [(p["v"], p["w"]) for p in x]
+            for x in self._spark(spark, TX.adjacent_pairs("a"), TEXT_GRID)
+        ]
+        d = [
+            con.execute(
+                f"SELECT {TX.adjacent_pairs_sql('a')} FROM "
+                f"(SELECT {TX.nonempty_tokens_sql()} AS a FROM "
+                f"(SELECT CAST(? AS VARCHAR) AS text))",
+                [x],
+            ).fetchall()
+            for x in TEXT_GRID
+        ]
+        assert s == [[tuple(r) for r in x] for x in d]
+
+    def test_eval_split(self, spark, con):
+        ks, kd = P.eval_split_spark_sql("v"), P.eval_split_duckdb_sql("v")
+        d = con.execute(
+            f"SELECT list(v ORDER BY v) FROM (SELECT unnest(range(0, 5000)) AS v) WHERE {kd}"
+        ).fetchone()[0]
+        s = [
+            r[0]
+            for r in spark.range(0, 5000).select(F.col("id").alias("v"))
+            .where(F.expr(ks)).orderBy("v").collect()
+        ]
+        assert s == d and 800 < len(s) < 1200

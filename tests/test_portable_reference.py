@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import math
 import random
+import re
 
 import pandas as pd
 import pytest
@@ -24,6 +25,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from proto_to_avro_ql_spark.functions import portable as P
+from proto_to_avro_ql_spark.functions import text as TX
+from tests.test_portable_kernel import TEXT_GRID
 
 # ---------------------------------------------------------------------------
 # The reference implementations. Deliberately written from the
@@ -537,3 +540,92 @@ class TestLnMicrosCrossEngine:
             t for t in self._tuples() if t[1] >= 10**12 and t[0] >= 10**6
         )
         assert (ct + 1) * (nr + 64) > 2**63 - 1
+
+
+# ---------------------------------------------------------------------------
+# Shared text fragments (functions/text.py) and the eval split
+# ---------------------------------------------------------------------------
+
+_WS = re.compile(r"[ \t\n\x0b\x0c\r]+")  # Java's \s: ASCII whitespace incl. VT
+
+
+def ref_tokens(s: str) -> list[str]:
+    return _WS.sub(" ", s.lower()).strip(" ").split(" ")
+
+
+def ref_nonempty(s: str) -> list[str]:
+    return [t for t in ref_tokens(s) if t]
+
+
+def ref_pairs(a: list[str]) -> list[tuple[str, str]]:
+    return list(zip(a, a[1:]))
+
+
+def ref_shingles(s: str, n: int) -> list[str]:
+    t = ref_tokens(s)
+    if len(t) < n:
+        return [" ".join(t)]
+    return sorted({" ".join(t[i:i + n]) for i in range(len(t) - n + 1)})
+
+
+class TestTextFragmentsAgainstPython:
+    """Both engines' renderings of the tokenizer, non-empty tokens,
+    adjacent pairs, shingles and eval split against plain Python."""
+
+    def _rows(self, spark, n):
+        sdf = spark.createDataFrame(
+            [(i, s) for i, s in enumerate(TEXT_GRID)], "i int, text string"
+        ).select("i", "text", TX.nonempty_tokens(F.col("text")).alias("a"))
+        return sdf.orderBy("i").select(
+            TX.tokens(F.col("text")).alias("t"),
+            "a",
+            TX.adjacent_pairs("a").alias("p"),
+            TX.shingles(F.col("text"), n).alias("sh"),
+        ).collect()
+
+    @pytest.mark.parametrize("n", [3, 8])
+    def test_spark_matches_python(self, spark, n):
+        for s, r in zip(TEXT_GRID, self._rows(spark, n)):
+            assert list(r["t"]) == ref_tokens(s), repr(s)
+            assert list(r["a"]) == ref_nonempty(s), repr(s)
+            assert [(p["v"], p["w"]) for p in r["p"]] == ref_pairs(ref_nonempty(s))
+            assert sorted(r["sh"]) == ref_shingles(s, n), repr(s)
+
+    @pytest.mark.parametrize("n", [3, 8])
+    def test_duckdb_matches_python(self, n):
+        import duckdb
+
+        con = duckdb.connect()
+        for s in TEXT_GRID:
+            t, a, sh = con.execute(
+                f"SELECT t, a, {TX.shingles_sql('t', n)} FROM (SELECT "
+                f"{TX.tokens_sql()} AS t, {TX.nonempty_tokens_sql()} AS a "
+                "FROM (SELECT CAST(? AS VARCHAR) AS text))",
+                [s],
+            ).fetchone()
+            assert t == ref_tokens(s), repr(s)
+            assert a == ref_nonempty(s), repr(s)
+            assert sorted(sh) == ref_shingles(s, n), repr(s)
+            p = con.execute(
+                f"SELECT {TX.adjacent_pairs_sql('a')} FROM (SELECT ? AS a)", [a]
+            ).fetchall()
+            assert [tuple(x) for x in p] == ref_pairs(a)
+
+    def test_eval_split_matches_python(self, spark):
+        import duckdb
+
+        keys = [int(k) for k in KEYS]
+        ref = [ref_mix31(k) % 5 == 0 for k in keys]
+        sdf = spark.createDataFrame([(k,) for k in keys], "doc_id long")
+        got = [r[0] for r in sdf.select(F.expr(P.eval_split_spark_sql("doc_id"))).collect()]
+        assert got == ref
+        con = duckdb.connect()
+        got = [
+            con.execute(
+                f"SELECT {P.eval_split_duckdb_sql('doc_id')} FROM "
+                "(SELECT CAST(? AS BIGINT) AS doc_id)",
+                [k],
+            ).fetchone()[0]
+            for k in keys
+        ]
+        assert got == ref

@@ -138,7 +138,7 @@ class TestUnicodeText:
             quality_score,
             token_count_ws,
         )
-        from proto_to_avro_ql_spark.operators.dedup import shingles
+        from proto_to_avro_ql_spark.functions.text import shingles
         from proto_to_avro_ql_spark.operators.sampling import hash_bucket
 
         docs = spark.createDataFrame(

@@ -23,7 +23,8 @@ Construction (deterministic, no RNG):
   NOT land in the same LSH bucket / near-dup pair as their source —
   replicating identical vectors would inflate the (by-design
   birthday-bounded) bucket joins quadratically and measure a data
-  artifact instead of the plan.
+  artifact instead of the plan. A ``factor`` above the vector
+  dimension is rejected: copies k and k + dim would be identical.
 - events: ``factor`` copies, event_id' likewise (ts unchanged);
   blockhash seeds (event_id div 4) stay distinct across copies, so the
   band-collision density stays at the sf0.1 design point.
@@ -48,11 +49,23 @@ def main() -> None:
     import pyarrow.parquet as pq
     import pyarrow as pa
 
+    emb = os.path.join(src, "embeddings.parquet")
+    if os.path.exists(emb):
+        vecs = pq.read_table(emb, columns=["embedding"])["embedding"].to_pylist()
+        dim = min((len(v) for v in vecs if v is not None), default=0)
+        if factor > dim:
+            raise SystemExit(
+                f"factor {factor} > embedding dim {dim}: copies would repeat rotations"
+            )
+
     os.makedirs(out_dir, exist_ok=True)
 
     def scale_ids(path: str, id_col: str, rotate_col: str | None, dest: str) -> None:
         t = pq.read_table(path)
         n = pc.max(t[id_col]).as_py() + 1
+        if rotate_col:
+            arr = t[rotate_col].combine_chunks()
+            vals = arr.to_pylist()
         parts = []
         for k in range(factor):
             cols = {}
@@ -60,12 +73,8 @@ def main() -> None:
                 if name == id_col:
                     cols[name] = pc.add(t[name], k * n)
                 elif name == rotate_col and k > 0:
-                    arr = t[name].combine_chunks()
-                    vals = arr.to_pylist()
-                    dim = len(vals[0]) if vals and vals[0] is not None else 0
-                    r = k % dim if dim else 0
                     cols[name] = pa.array(
-                        [v[r:] + v[:r] if v is not None else None for v in vals],
+                        [v[k:] + v[:k] if v is not None else None for v in vals],
                         type=arr.type,
                     )
                 else:

@@ -26,6 +26,12 @@ R4 computed-to-scaled-decimal: ``CAST(<expr with * or /> AS
    DuckDB the 1e6-scaled double (ext_ewma/ext_pagerank, r3s3).
    Exception: ``CAST(ROUND(...) AS DECIMAL...)`` — an already-rounded
    value is exact at its scale.
+R6 shared-fragment copy (source only, ratchet at zero): the text
+   tokenizer, the adjacent-pair construction and the mix31 eval split
+   are written once in functions/text.py and functions/portable.py,
+   which render both the Spark Column and the DuckDB SQL. A hand-
+   written copy anywhere else in the package can drift from its twin
+   (the RE2-vs-Java vertical-tab split was such a drift).
 
 Non-automatable invariants (still prose-only, checked in review):
 ``ROUND(quotient)`` as a final aggregate step is only a straddle when
@@ -217,6 +223,50 @@ _SOURCE_GLOBS = [
     "proto_to_avro_ql_spark/**/*.py",
 ]
 
+# R6: the modules that own the shared text fragments.
+FRAGMENT_OWNERS = (
+    "proto_to_avro_ql_spark/functions/text.py",
+    "proto_to_avro_ql_spark/functions/portable.py",
+)
+_FRAGMENT_COPIES = {
+    "tokenizer": re.compile(
+        r"split\(\s*(?:\w+\.)?normalize_text\("  # Spark split of normalized text
+        r"|regexp_replace\((?:[^'\"\n]|\"[^\"\n]*\")*?,"
+        r"\s*r?['\"](?:\\{1,2}s\+|\[\\{1,2}s)"  # whitespace collapse
+    ),
+    "adjacent pairs": re.compile(
+        r"zip_with\(\s*(?:F\.)?slice\(|\[1:len\((\w+)\)\s*-\s*1\]"
+    ),
+    "eval split": re.compile(r"mix\w*[^\n]*%\s*5\s*==?\s*0"),
+}
+
+
+def _strip_comments(source: str) -> str:
+    import io
+    import tokenize
+
+    try:
+        toks = list(tokenize.generate_tokens(io.StringIO(source).readline))
+    except (tokenize.TokenError, SyntaxError):
+        return source
+    lines = source.splitlines(keepends=True)
+    for t in reversed(toks):
+        if t.type == tokenize.COMMENT:
+            row, col = t.start
+            lines[row - 1] = lines[row - 1][:col] + "\n"
+    return "".join(lines)
+
+
+def find_fragment_copies(source: str) -> list[str]:
+    """R6 hits in one package source file (docstrings and comments are
+    prose, not copies)."""
+    text = _strip_comments(_strip_docstrings(source))
+    return [
+        f"R6 shared-fragment copy ({kind}): {m.group(0)[:60]}"
+        for kind, pat in _FRAGMENT_COPIES.items()
+        for m in pat.finditer(text)
+    ]
+
 
 def _strip_docstrings(source: str) -> str:
     """Blank out module/class/function docstrings (prose like
@@ -296,6 +346,8 @@ def lint_all(repo_root: str | Path | None = None) -> dict[str, list[str]]:
                 for h in find_violations(text)
                 if (rel, h.split(" ", 1)[0]) not in ALLOW
             ]
+            if rel not in FRAGMENT_OWNERS:
+                hits += find_fragment_copies(path.read_text())
             if hits:
                 bad[rel] = hits
     return bad
