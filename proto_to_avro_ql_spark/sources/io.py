@@ -48,57 +48,19 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """src_parquet_scan: columnar scan; filters/column pruning push down
     via Catalyst (check ``.explain``: PushedFilters / ReadSchema).
 
-    The events table carries TIMESTAMP(NANOS) which Spark's vectorized
-    parquet reader rejects; we read nanos as long (runtime conf) and
-    truncate to a microsecond TimestampType column. Session timezone is
-    pinned to UTC for every read: timestamp→date casts and date_format
-    are session-tz-sensitive, and the oracle (DuckDB) renders wall-clock
-    values — UTC keeps the two engines in agreement regardless of the
-    host/driver session timezone.
+    Split sizing is Spark's own. The events table's ``ts`` (parquet
+    TIMESTAMP(MICROS), read as timestamp_ntz) is cast to a session-tz
+    TimestampType column. Session timezone is pinned to UTC for every
+    read: timestamp→date casts and date_format are session-tz-sensitive,
+    and the oracle (DuckDB) renders wall-clock values — UTC keeps the
+    two engines in agreement regardless of the host/driver session
+    timezone.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Local-mode split sizing: the testdata tables are single ~1-10MB
-    # parquet files, which the default 128MB split turns into ONE task —
-    # serializing every scan-side stage on a 32-core box. Small splits
-    # restore parallelism (flagship sf0.1: 6.3s → 1.0s). On a real lake
-    # with 128MB+ files, override via SPARK_GRAFT_MAX_PARTITION_BYTES
-    # (or leave Spark's default by setting it to 128m).
-    spark.conf.set(
-        "spark.sql.files.maxPartitionBytes",
-        os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "1m"),
-    )
+    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
-        # The events table's ts encoding has varied across testdata
-        # generations: TIMESTAMP(NANOS) (which Spark's vectorized reader
-        # rejects — read as long and truncate) vs TIMESTAMP(MICROS)
-        # (reads natively as timestamp_ntz). Normalize either to a
-        # session-tz (UTC) TimestampType column.
-        prior = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        ts_type = dict(df.dtypes)["ts"]
-        if ts_type == "bigint":  # nanos-as-long
-            # The conf must stay set through execution for this plan;
-            # it leaks session-wide only on the legacy NANOS testdata
-            # generation (documented trade-off — a later nanos read in
-            # the same session would also want it set).
-            # Floor (not truncate-toward-zero) so hypothetical
-            # pre-epoch nanos land on the earlier microsecond.
-            return df.withColumn(
-                "ts",
-                F.timestamp_micros(
-                    F.expr("ts div 1000 - IF(ts % 1000 < 0, 1, 0)")
-                ),
-            )
-        # MICROS generation (all current testdata): the conf was never
-        # needed — restore it so other reads in this session see the
-        # default behavior.
-        if prior is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior)
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return df
 
 
 # ensure_min_parallelism width-probe memo (r12 VERDICT #7):
@@ -118,13 +80,13 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _WIDTH_MEMO: dict[tuple[str, int, int], bool] = {}
 
 
-def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition iff the plan currently has fewer
     partitions than the session's core count.
 
     Why: parquet can only split at row-group boundaries, and the
     testdata tables are single-row-group files — every scan is ONE real
-    task regardless of ``maxPartitionBytes`` (verified: all 600k
+    task regardless of the split size (verified: all 600k
     lineitem rows in one spark_partition_id). Any CPU-heavy expression
     fused into such a scan stage serializes on one core. Calling this
     between the read and the heavy projection detaches the work into a
@@ -133,7 +95,7 @@ def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> 
     false, and this is a no-op — no exchange enters the 100 TB plan.
     """
     sess = df.sparkSession
-    target = min_partitions or sess.sparkContext.defaultParallelism
+    target = sess.sparkContext.defaultParallelism
     try:
         key = (sess.sparkContext.applicationId, df.semanticHash(), target)
         needs = _WIDTH_MEMO.get(key)

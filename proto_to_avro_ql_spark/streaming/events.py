@@ -16,7 +16,6 @@ partial aggregation, identical to the batch plan.
 from __future__ import annotations
 
 import contextlib
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,9 +37,9 @@ from proto_to_avro_ql_spark.functions.stable import dec_avg, dec_sum
 # join 20.7 s -> 2.3 s, dedup 5.1 -> 1.1 s at 8 partitions, identical
 # results). Size state partitions to STATE VOLUME (~100 MB-1 GB per
 # partition, the usual shuffle-partition sizing), not to core count:
-# the default 8 suits the bench's MB-scale state at any core count;
-# a production job with TB-scale state sets the env var to hundreds+.
-STREAM_STATE_PARTITIONS_ENV = "SPARK_GRAFT_STREAM_STATE_PARTITIONS"
+# 8 suits the bench's MB-scale state at any core count; a production
+# job with TB-scale state wants hundreds+.
+STREAM_STATE_PARTITIONS = 8
 
 
 @contextlib.contextmanager
@@ -49,9 +48,8 @@ def stream_state_partitions(spark: SparkSession):
     streaming value while a streaming query is defined and started;
     restore the batch setting after. The running query keeps its own
     conf snapshot, so restoring post-start is safe."""
-    n = os.environ.get(STREAM_STATE_PARTITIONS_ENV, "8")
     saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_STATE_PARTITIONS)
     try:
         yield
     finally:
@@ -60,7 +58,7 @@ def stream_state_partitions(spark: SparkSession):
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),  # nanos (see sources.io.read_table)
+        T.StructField("ts", T.LongType()),  # epoch micros
         T.StructField("user_id", T.LongType()),
         T.StructField("event_type", T.StringType()),
         T.StructField("value", T.DoubleType()),
@@ -72,7 +70,6 @@ EVENTS_SCHEMA = T.StructType(
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet (file-source streaming — the
     local analog of a Kafka/Kinesis source; swap `.format` in prod)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # file stream sources monitor a directory; select just the events
     # table out of the shared sf_dir with a glob filter.
@@ -81,10 +78,8 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    # With an explicit LongType schema over a TIMESTAMP(NANOS) parquet
-    # column, Spark hands back MICROseconds (unlike the schemaless
-    # batch path in sources.io.read_table, which sees raw nanos and
-    # must `div 1000`).  No further scaling here.
+    # An explicit LongType schema over the TIMESTAMP(MICROS) parquet
+    # column reads the raw epoch micros.
     return raw.withColumn("ts", F.timestamp_micros(F.col("ts")))
 
 

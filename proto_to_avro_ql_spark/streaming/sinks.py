@@ -10,8 +10,6 @@ the pattern the incremental layer (sources/incremental.py) pairs with.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,14 +43,15 @@ def run_stream_to_partitioned_parquet(
 ) -> None:
     """availableNow streaming run writing per-window partitions
     idempotently via foreachBatch."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     ev = stream_events(spark, sf_dir).withWatermark("ts", "2 hours")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         agg = windowed_agg(batch_df, duration)
         # dynamic overwrite: only partitions present in this batch are
         # replaced — a replayed batch converges to the same state.
-        agg.write.mode("overwrite").partitionBy("window_part").parquet(out_path)
+        agg.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("window_part").parquet(out_path)
 
     q = (
         ev.writeStream.foreachBatch(write_batch)
@@ -61,10 +60,6 @@ def run_stream_to_partitioned_parquet(
         .start()
     )
     q.awaitTermination(300)
-
-
-def read_partitioned_output(spark: SparkSession, out_path: str) -> DataFrame:
-    return spark.read.parquet(out_path)
 
 
 def run_stream_append_parquet(

@@ -66,6 +66,24 @@ class TestEventsNanos:
         assert r.ts.year >= 2024
 
 
+class TestReadersLeaveSessionConf:
+    def test_only_the_utc_pin_is_written(self, spark, sf_dir):
+        """The readers are plain readers: apart from the UTC pin, a
+        fresh session's confs are the same after reading every table
+        and defining the events stream."""
+        from proto_to_avro_ql_spark.sources.io import TABLES
+        from proto_to_avro_ql_spark.streaming.events import stream_events
+
+        tz = "spark.sql.session.timeZone"
+        fresh = spark.newSession()
+        before = {k: v for k, v in fresh.conf.getAll.items() if k != tz}
+        for name in TABLES:
+            read_table(fresh, sf_dir, name)
+        stream_events(fresh, sf_dir)
+        after = {k: v for k, v in fresh.conf.getAll.items() if k != tz}
+        assert after == before
+
+
 class TestMultimodalPlumbing:
     def test_feature_extraction_values(self, spark):
         """The Arrow mapInPandas path produces the documented
@@ -266,14 +284,9 @@ class TestDynamicPartitionBackfill:
 
         before = files()
         target = sorted(before)[3]
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        try:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            daily.where(F.col("day") == target).write.mode("overwrite").partitionBy(
-                "day"
-            ).parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+        daily.where(F.col("day") == target).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("day").parquet(path)
         after = files()
         assert set(before) == set(after)  # no partition vanished (static would truncate)
         assert after[target] != before[target]  # target rewritten (new file names)

@@ -9,7 +9,12 @@ fires by planting one violation per rule.
 
 from __future__ import annotations
 
-from tools.lint_oracles import find_fragment_copies, find_violations, lint_all
+from tools.lint_oracles import (
+    find_conf_writes,
+    find_fragment_copies,
+    find_violations,
+    lint_all,
+)
 
 
 class TestCorpusClean:
@@ -89,6 +94,37 @@ class TestFragmentCopiesFire:
             "sql = f\"SELECT {TX.adjacent_pairs_sql('a')} FROM t"
             " WHERE {PK.eval_split_duckdb_sql('doc_id')}\"\n"
             'u = F.when(F.col("doc_id") % 5 == 0, "#frag")\n'
+        )
+
+
+class TestSessionConfWritesFire:
+    """R7: session-conf writes outside the (module, function)
+    allowlist."""
+
+    SRC = (
+        "def run_sink(spark, path):\n"
+        '    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")\n'
+        "    df.sparkSession.conf.unset('spark.sql.files.maxPartitionBytes')\n"
+        "\n"
+        "def read_table(spark, sf_dir, name):\n"
+        '    spark.conf.set("spark.sql.session.timeZone", "UTC")\n'
+    )
+
+    def test_writes_outside_allowlist_fire(self):
+        hits = find_conf_writes(self.SRC, "proto_to_avro_ql_spark/streaming/sinks.py")
+        assert len(hits) == 3, hits
+        assert all(h.startswith("R7") for h in hits), hits
+
+    def test_allowlisted_function_clean(self):
+        hits = find_conf_writes(self.SRC, "proto_to_avro_ql_spark/sources/io.py")
+        assert len(hits) == 2 and all("run_sink" in h for h in hits), hits
+
+    def test_reads_and_options_clean(self):
+        assert not find_conf_writes(
+            "def f(spark, df, p):\n"
+            '    tz = spark.conf.get("spark.sql.session.timeZone")\n'
+            '    df.write.option("partitionOverwriteMode", "dynamic").parquet(p)\n',
+            "proto_to_avro_ql_spark/streaming/sinks.py",
         )
 
 

@@ -56,17 +56,21 @@ class TestForeachBatchIdempotentSink:
 
         from proto_to_avro_ql_spark.sources.io import read_table
         from proto_to_avro_ql_spark.streaming.sinks import (
-            read_partitioned_output,
             run_stream_to_partitioned_parquet,
             windowed_agg,
         )
 
+        mode_key = "spark.sql.sources.partitionOverwriteMode"
+        mode_before = spark.conf.get(mode_key)
         out = tempfile.mkdtemp(prefix="stream_out_")
         ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
         run_stream_to_partitioned_parquet(spark, sf_dir, out, ckpt)
+        # the dynamic overwrite is a per-write option: the caller's
+        # session keeps its own mode
+        assert spark.conf.get(mode_key) == mode_before
         streamed = {
             (r.window_part, r.event_type): (r.n_events, r.sum_value)
-            for r in read_partitioned_output(spark, out).collect()
+            for r in spark.read.parquet(out).collect()
         }
         batch = {
             (r.window_part, r.event_type): (r.n_events, r.sum_value)
@@ -80,7 +84,7 @@ class TestForeachBatchIdempotentSink:
         run_stream_to_partitioned_parquet(spark, sf_dir, out, tempfile.mkdtemp(prefix="ck2_"))
         again = {
             (r.window_part, r.event_type): (r.n_events, r.sum_value)
-            for r in read_partitioned_output(spark, out).collect()
+            for r in spark.read.parquet(out).collect()
         }
         assert again == batch
 

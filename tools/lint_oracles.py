@@ -32,6 +32,13 @@ R6 shared-fragment copy (source only, ratchet at zero): the text
    which render both the Spark Column and the DuckDB SQL. A hand-
    written copy anywhere else in the package can drift from its twin
    (the RE2-vs-Java vertical-tab split was such a drift).
+R7 session-conf write (source only, ratchet at the allowlist): a
+   ``conf.set``/``conf.unset`` in a package function changes the
+   caller's session. Only the (module, function) pairs in
+   CONF_WRITERS may write: the UTC pins in the two readers and the
+   scoped save/restore of the streaming state width. Anything else
+   takes a per-operation option (``.option(...)`` on the write) or a
+   value the caller passes.
 
 Non-automatable invariants (still prose-only, checked in review):
 ``ROUND(quotient)`` as a final aggregate step is only a straddle when
@@ -241,6 +248,46 @@ _FRAGMENT_COPIES = {
 }
 
 
+# R7: the only package functions that may write a session conf.
+CONF_WRITERS = {
+    ("proto_to_avro_ql_spark/sources/io.py", "read_table"): "UTC pin",
+    ("proto_to_avro_ql_spark/streaming/events.py", "stream_events"): "UTC pin",
+    ("proto_to_avro_ql_spark/streaming/events.py", "stream_state_partitions"): (
+        "scoped save/restore of spark.sql.shuffle.partitions"
+    ),
+}
+
+
+def find_conf_writes(source: str, rel: str) -> list[str]:
+    """R7 hits in one package source file: ``<x>.conf.set``/``unset``
+    calls outside the CONF_WRITERS functions."""
+    import ast
+
+    hits: list[str] = []
+
+    def visit(node: ast.AST, func: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            f = getattr(child, "func", None) if isinstance(child, ast.Call) else None
+            if (
+                isinstance(f, ast.Attribute)
+                and f.attr in ("set", "unset")
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "conf"
+                and (rel, func) not in CONF_WRITERS
+            ):
+                hits.append(
+                    f"R7 session-conf write in {func or '<module>'}"
+                    f" (line {child.lineno}): {ast.unparse(child)[:60]}"
+                )
+            visit(child, func)
+
+    visit(ast.parse(source), "")
+    return hits
+
+
 def _strip_comments(source: str) -> str:
     import io
     import tokenize
@@ -348,6 +395,7 @@ def lint_all(repo_root: str | Path | None = None) -> dict[str, list[str]]:
             ]
             if rel not in FRAGMENT_OWNERS:
                 hits += find_fragment_copies(path.read_text())
+            hits += find_conf_writes(path.read_text(), rel)
             if hits:
                 bad[rel] = hits
     return bad
