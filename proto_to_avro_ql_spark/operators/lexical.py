@@ -20,15 +20,29 @@ cross-row double SUM — per-doc scores are expressions over exact
 integer counts, so the result is partition-order independent.
 For a standing search service you would stage `per_doc` as a bucketed
 table once and reuse across queries.
+
+The held-out n-gram corpus (token arrays and bigram counts over the
+mix31 eval split) that every held-out LM entry scores is also written
+here once, as Spark builders plus their DuckDB ``*_sql`` twins.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from proto_to_avro_ql_spark.functions.text import tokens
-from proto_to_avro_ql_spark.sources.io import ensure_min_parallelism
+from proto_to_avro_ql_spark.functions.portable import (
+    eval_split_duckdb_sql,
+    eval_split_spark_sql,
+)
+from proto_to_avro_ql_spark.functions.text import (
+    adjacent_pairs,
+    adjacent_pairs_sql,
+    nonempty_tokens,
+    nonempty_tokens_sql,
+    tokens,
+)
+from proto_to_avro_ql_spark.sources.io import ensure_min_parallelism, read_table
 
 
 def bm25_search(
@@ -141,3 +155,66 @@ def tfidf_top_terms(
         .where(F.col("rank") <= top_k)
         .select(id_col, "term", "tf", "df", "score", "rank")
     )
+
+
+# --- held-out n-gram corpus (the split every held-out LM entry scores) ----
+
+
+def heldout_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(is_eval, lang, a): each document's non-empty tokens, with
+    is_eval = 1 on the held-out 20% of the mix31(doc_id) split.
+    ensure_min_parallelism detaches the tokenize chain from a
+    single-row-group scan, which would otherwise run it as one task
+    (plans/r13/ext_katz_vs_kn_before.txt operators (5)-(9))."""
+    docs = ensure_min_parallelism(read_table(spark, sf_dir, "documents"))
+    return docs.select(
+        F.expr(f"CASE WHEN {eval_split_spark_sql('doc_id')} THEN 1 ELSE 0 END").alias(
+            "is_eval"
+        ),
+        "lang",
+        nonempty_tokens(F.col("text")).alias("a"),
+    )
+
+
+def heldout_tokens_sql() -> str:
+    """DuckDB twin of :func:`heldout_tokens`: the CTE ``arrs``."""
+    return f"""arrs AS MATERIALIZED (
+      SELECT CASE WHEN {eval_split_duckdb_sql('doc_id')} THEN 1 ELSE 0 END AS is_eval, lang,
+             {nonempty_tokens_sql()} AS a
+      FROM documents
+    )"""
+
+
+def heldout_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(is_eval, lang, v, w, cnt): adjacent-token bigram counts per
+    split side and language — the one corpus-scale aggregate (map-side
+    partials) that train statistics and eval scoring both slice, hence
+    persisted; released by the caller's session-hygiene sweep."""
+    pr = heldout_tokens(spark, sf_dir).select(
+        "is_eval",
+        "lang",
+        F.explode(adjacent_pairs("a")).alias("p"),
+    )
+    return (
+        pr.select(
+            "is_eval",
+            "lang",
+            F.col("p.v").alias("v"),
+            F.col("p.w").alias("w"),
+        )
+        .groupBy("is_eval", "lang", "v", "w")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .persist()
+    )
+
+
+def heldout_bigrams_sql() -> str:
+    """DuckDB twin of :func:`heldout_bigrams`: the CTEs ``arrs`` and
+    ``occ``."""
+    return f"""{heldout_tokens_sql()},
+    occ AS MATERIALIZED (
+      SELECT is_eval, lang, v, w, COUNT(*) AS cnt FROM (
+        SELECT is_eval, lang, {adjacent_pairs_sql('a')}
+        FROM arrs
+      ) GROUP BY 1, 2, 3, 4
+    )"""

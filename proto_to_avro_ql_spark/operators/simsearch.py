@@ -743,7 +743,7 @@ def _mean_vectors_int(
     exploded shape and skip the dim probe entirely."""
     if dim is not None:
         per = assigned.groupBy(*group, "cell").agg(
-            F.count(F.lit(1)).alias("n"),
+            F.count("v").alias("n"),  # NULL vectors add nothing, as exploded
             *[F.sum(F.col("v")[i]).alias(f"_s{i}") for i in range(dim)],
         )
         return per.select(

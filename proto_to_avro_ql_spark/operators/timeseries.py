@@ -14,15 +14,42 @@ Scale design:
   driver — then left-joins the sparse aggregates back on
   (entity, bucket). Both sides of that join are already bucketed by
   the same key, and AQE coalesces the tiny post-join partitions.
+- The daily revenue series (integer cents per event type and day) is
+  written once here, as a Spark builder plus its DuckDB twin; every
+  series entry (CUSUM, autocorrelation, OLS/Theil-Sen trends, ...)
+  starts from it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from proto_to_avro_ql_spark.functions.stable import dec_sum
+from proto_to_avro_ql_spark.functions.stable import DEC, dec_sum
+from proto_to_avro_ql_spark.sources.io import read_table
+
+
+def daily_cents(spark: SparkSession, sf_dir: str, alias: str) -> DataFrame:
+    """(event_type, day, <alias>): revenue per event type and day in
+    integer cents. The sum is DECIMAL(38,6) (partition-order
+    independent), rounded half-up to whole cents once."""
+    ev = read_table(spark, sf_dir, "events")
+    return ev.groupBy(
+        "event_type", F.col("ts").cast("date").alias("day")
+    ).agg(
+        F.round(F.sum(F.col("value").cast(DEC)) * 100, 0).cast("long").alias(alias)
+    )
+
+
+def daily_cents_sql(alias: str) -> str:
+    """DuckDB twin of :func:`daily_cents`: the CTE ``d``."""
+    return f"""d AS MATERIALIZED (
+         SELECT event_type, CAST(ts AS DATE) AS day,
+                CAST(ROUND(SUM(CAST(value AS DECIMAL(38,6))) * 100, 0)
+                     AS BIGINT) AS {alias}
+         FROM events GROUP BY 1, 2
+       )"""
 
 
 def forward_fill(

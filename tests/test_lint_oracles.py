@@ -97,6 +97,60 @@ class TestFragmentCopiesFire:
         )
 
 
+class TestRelationCopiesFire:
+    """R6 over the relation fragments: daily cents, the co-purchase
+    self-join, the label-propagation vote and the held-out bigram
+    aggregate, each owned by one operators module."""
+
+    CASES = {
+        "daily cents": (
+            'd = ev.groupBy(\n    "event_type", F.col("ts").cast("date").alias("day")\n'
+            ').agg(\n    F.round(F.sum(F.col("value").cast(DEC)) * 100, 0)\n)\n',
+            'q = """SELECT event_type, CAST(ts AS DATE) AS day,\n'
+            "  CAST(ROUND(SUM(CAST(value AS DECIMAL(38,6))) * 100, 0) AS BIGINT)"
+            ' AS c FROM events GROUP BY 1, 2"""\n',
+        ),
+        "co-purchase self-join": (
+            None,
+            'q = """SELECT DISTINCT a.pk AS u, b.pk AS v\n'
+            '  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk"""\n',
+        ),
+        "label vote": (
+            'w = Window.partitionBy("node").orderBy(F.desc("c"), "label")\n',
+            'q = """row_number() OVER (PARTITION BY a.node\n'
+            '  ORDER BY COUNT(*) DESC, l.label) AS rn"""\n',
+        ),
+        "held-out bigram aggregate": (
+            'occ = pr.groupBy("is_eval", "lang", "v", "w").agg(F.count("*"))\n',
+            'q = """SELECT is_eval, lang, v, w, COUNT(*) AS cnt FROM p"""\n',
+        ),
+    }
+
+    def test_spark_and_sql_copies_fire(self):
+        for kind, srcs in self.CASES.items():
+            for src in filter(None, srcs):
+                hits = find_fragment_copies(src, "proto_to_avro_ql_spark/entry_registry.py")
+                assert any(f"({kind})" in h for h in hits), (kind, hits)
+
+    def test_owner_exempt_only_for_its_own_kinds(self):
+        graphs = "proto_to_avro_ql_spark/operators/graphs.py"
+        vote = self.CASES["label vote"][0]
+        assert not find_fragment_copies(vote, graphs)
+        daily = self.CASES["daily cents"][1]
+        assert any("(daily cents)" in h for h in find_fragment_copies(daily, graphs))
+        tok = 'toks = F.split(TX.normalize_text(F.col("text")), " ")\n'
+        for owner in (graphs, "proto_to_avro_ql_spark/operators/timeseries.py",
+                      "proto_to_avro_ql_spark/operators/lexical.py"):
+            assert any("(tokenizer)" in h for h in find_fragment_copies(tok, owner))
+
+    def test_pair_count_relation_is_not_an_edge_copy(self):
+        """ext_assoc_rules keeps the pair count: not the edge relation."""
+        assert not find_fragment_copies(
+            'q = """SELECT a.pk AS u, c.pk AS v, COUNT(*) AS n_pair\n'
+            '  FROM b a JOIN b c ON a.ok = c.ok AND a.pk < c.pk"""\n'
+        )
+
+
 class TestSessionConfWritesFire:
     """R7: session-conf writes outside the (module, function)
     allowlist."""

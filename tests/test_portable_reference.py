@@ -629,3 +629,136 @@ class TestTextFragmentsAgainstPython:
             for k in keys
         ]
         assert got == ref
+
+
+# ---------------------------------------------------------------------------
+# Relation fragments: label propagation (operators/graphs.py) and the
+# daily revenue cents (operators/timeseries.py)
+# ---------------------------------------------------------------------------
+
+
+def ref_label_propagation(edges: list[tuple[int, int]], rounds: int) -> dict[int, int]:
+    """Synchronous rounds: every node takes the label most frequent
+    among its neighbours' previous labels, the smallest on a tie."""
+    nbrs: dict[int, list[int]] = {}
+    for u, v in edges:
+        nbrs.setdefault(u, []).append(v)
+        nbrs.setdefault(v, []).append(u)
+    labels = {n: n for n in nbrs}
+    for _ in range(rounds):
+        new = {}
+        for n, ns in nbrs.items():
+            counts: dict[int, int] = {}
+            for m in ns:
+                counts[labels[m]] = counts.get(labels[m], 0) + 1
+            top = max(counts.values())
+            new[n] = min(lab for lab, c in counts.items() if c == top)
+        labels = new
+    return labels
+
+
+# A path (every inner node sees a 1-1 tie), a triangle hanging off it,
+# a 4-cycle (2-2 ties) and a star whose hub is not the smallest id.
+LPA_EDGES = [
+    (1, 2), (2, 3), (3, 4), (4, 5), (5, 6),
+    (6, 7), (6, 8), (7, 8),
+    (10, 11), (11, 12), (12, 13), (10, 13),
+    (20, 9), (20, 21), (20, 22), (20, 23),
+]
+
+
+class TestLabelPropagationAgainstPython:
+    @pytest.mark.parametrize("rounds", [1, 2, 3])
+    def test_spark_matches_python(self, spark, rounds):
+        from proto_to_avro_ql_spark.operators import graphs as GR
+
+        sym = LPA_EDGES + [(v, u) for u, v in LPA_EDGES]
+        adj = spark.createDataFrame(sym, "node long, nbr long").cache()
+        got = {r["node"]: r["label"] for r in GR.label_propagation(adj, rounds).collect()}
+        adj.unpersist()
+        assert got == ref_label_propagation(LPA_EDGES, rounds)
+
+    @pytest.mark.parametrize("rounds", [1, 2, 3])
+    def test_duckdb_matches_python(self, rounds):
+        import duckdb
+
+        from proto_to_avro_ql_spark.operators import graphs as GR
+
+        values = ", ".join(f"({u}, {v}), ({v}, {u})" for u, v in LPA_EDGES)
+        got = dict(
+            duckdb.connect().execute(
+                f"WITH adj AS (SELECT * FROM (VALUES {values}) t(node, nbr)), "
+                f"{GR.label_propagation_sql(rounds)} SELECT node, label FROM r{rounds}"
+            ).fetchall()
+        )
+        assert got == ref_label_propagation(LPA_EDGES, rounds)
+
+
+# (event_type, ts, value): per (type, day) the sums land on half cents,
+# positive and negative, and each day has events at both of its ends.
+HALF_CENT_EVENTS = [
+    ("a", "2024-01-01 00:00:00", 0.005),
+    ("a", "2024-01-02 00:00:00", 0.015),
+    ("a", "2024-01-02 23:59:59", 0.01),
+    ("b", "2024-01-01 12:00:00", -0.005),
+    ("b", "2024-01-02 00:00:00", 1.125),
+    ("b", "2024-01-02 23:59:59", 1.0),
+    ("c", "2024-01-01 06:00:00", 2.675),
+    ("c", "2024-01-02 01:00:00", 0.1),
+    ("c", "2024-01-02 02:00:00", 0.2),
+    ("c", "2024-01-02 03:00:00", -0.305),
+    ("d", "2024-01-01 00:00:00", 0.004999),
+    ("d", "2024-01-01 23:59:59", -1.234565),
+]
+
+
+def ref_daily_cents(events) -> dict[tuple[str, str], int]:
+    from decimal import ROUND_HALF_UP, Decimal
+
+    sums: dict[tuple[str, str], Decimal] = {}
+    for et, ts, v in events:
+        key = (et, ts[:10])
+        sums[key] = sums.get(key, Decimal(0)) + Decimal(repr(v))
+    return {
+        k: int((s * 100).quantize(Decimal(1), rounding=ROUND_HALF_UP))
+        for k, s in sums.items()
+    }
+
+
+class TestDailyCentsAgainstPython:
+    @pytest.fixture(scope="class")
+    def events(self):
+        import pyarrow as pa
+
+        return pa.table({
+            "event_type": [e[0] for e in HALF_CENT_EVENTS],
+            "ts": pa.array(pd.to_datetime([e[1] for e in HALF_CENT_EVENTS]), pa.timestamp("us")),
+            "value": [e[2] for e in HALF_CENT_EVENTS],
+        })
+
+    def test_spark_matches_python(self, spark, events, tmp_path):
+        import pyarrow.parquet as pq
+
+        from proto_to_avro_ql_spark.operators import timeseries as TS
+
+        pq.write_table(events, tmp_path / "events.parquet")
+        got = {
+            (r["event_type"], str(r["day"])): r["cents"]
+            for r in TS.daily_cents(spark, str(tmp_path), "cents").collect()
+        }
+        assert got == ref_daily_cents(HALF_CENT_EVENTS)
+
+    def test_duckdb_matches_python(self, events):
+        import duckdb
+
+        from proto_to_avro_ql_spark.operators import timeseries as TS
+
+        con = duckdb.connect()
+        con.register("events", events)
+        got = {
+            (et, str(day)): c
+            for et, day, c in con.execute(
+                f"WITH {TS.daily_cents_sql('cents')} SELECT event_type, day, cents FROM d"
+            ).fetchall()
+        }
+        assert got == ref_daily_cents(HALF_CENT_EVENTS)

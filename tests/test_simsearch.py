@@ -157,6 +157,25 @@ class TestIntegerGridVariants:
         # observed 0.34 (sf0.001) / 0.48 (sf0.01); random baseline ~0.01
         assert len(b & p) / len(b) >= 0.2, (len(b & p), len(b))
 
+    def test_mean_vectors_fused_matches_exploded_with_null_vector(self, spark):
+        """The fused small-dim centroid update must skip a NULL vector
+        exactly like the exploded path (posexplode drops it), not count
+        it as a member."""
+        df = spark.createDataFrame(
+            [
+                (0, [1, 2, 3, 4]),
+                (0, [4, 4, 4, 5]),
+                (0, None),
+                (1, [-3, 0, 7, 1]),
+                (1, [2, -5, 8, 2]),
+            ],
+            "cell int, v array<bigint>",
+        )
+        fused = SS._mean_vectors_int(df, [], dim=4).orderBy("cell").collect()
+        exploded = SS._mean_vectors_int(df, []).orderBy("cell").collect()
+        assert [list(r.cv) for r in fused] == [list(r.cv) for r in exploded]
+        assert [list(r.cv) for r in fused] == [[2, 3, 3, 4], [-1, -3, 7, 1]]
+
 
 class TestSemDedup:
     def test_matches_python_reference(self, spark):

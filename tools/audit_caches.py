@@ -119,6 +119,10 @@ ALLOWED: dict[str, str] = {
         "banded corpus signatures (batch-vs-corpus band joins)",
     "proto_to_avro_ql_spark/operators/lexical.py:bm25_search":
         "per-doc token aggregate (df join + doc-length stats broadcast)",
+    "proto_to_avro_ql_spark/operators/lexical.py:heldout_bigrams":
+        "(is_eval, lang, v, w, cnt) bigram partials (one tokenize pass; "
+        "the train statistics and the eval scoring of every held-out "
+        "bigram LM entry both slice it)",
     "proto_to_avro_ql_spark/operators/simsearch.py:ivf_topk":
         "trained centroids (probe rank + assignment) and cell-assigned "
         "embeddings (candidate scan)",
@@ -172,18 +176,11 @@ ALLOWED: dict[str, str] = {
         "(doc_id, is_eval, lang, b, c) bucket partials (train statistics "
         "and eval scoring both slice it — one tokenize pass)",
     "proto_to_avro_ql_spark/entry_registry.py:q_ext_katz_backoff":
-        "(is_eval, lang, v, w, cnt) bigram partials (one tokenize "
-        "pass), the train bigram relation (five downstream aggregates "
-        "slice it), and the frozen per-bigram pico relation (the "
-        "context-mass build and the eval scoring both read it)",
+        "the train bigram relation (five downstream aggregates slice "
+        "it) and the frozen per-bigram pico relation (the context-mass "
+        "build and the eval scoring both read it)",
     "proto_to_avro_ql_spark/entry_registry.py:q_ext_kneser_ney_holdout":
-        "(is_eval, lang, v, w, cnt) bigram partials (train statistics "
-        "and the eval scoring both slice it — one tokenize pass); "
-        "r12 adds: train counts bc (4 branches)",
-    "proto_to_avro_ql_spark/entry_registry.py:q_ext_mmr_select":
-        "quantized candidate relation with query distances (scanned "
-        "once per greedy step, k = 8 steps; each step's argmax is a "
-        "1-row driver collect)",
+        "train counts bc (4 branches)",
     "proto_to_avro_ql_spark/entry_registry.py:q_ext_winnowing":
         "tokenized doc relation (gram pass + doc spine), the k-gram "
         "hash relation (window expansion + per-doc counts), the "
@@ -248,9 +245,8 @@ ALLOWED: dict[str, str] = {
         "(v, w) continuation-count relation mid (midv, wl, t2r and "
         "the scoring join — four consumers)",
     "proto_to_avro_ql_spark/entry_registry.py:q_ext_katz_vs_kn":
-        "(is_eval, lang, v, w, cnt) bigram partials (one tokenize pass "
-        "shared by BOTH model branches), the train bigram relation bc "
-        "(five fused downstream aggregates slice it), the eval "
+        "the train bigram relation bc (shared by BOTH model branches; "
+        "five fused downstream aggregates slice it), the eval "
         "relation (the single merged scoring pass reads it), and the "
         "frozen per-bigram pico relation (context-mass build + "
         "scoring); r13 adds: the fused v-statistics vstats (pdrel "

@@ -26,12 +26,16 @@ R4 computed-to-scaled-decimal: ``CAST(<expr with * or /> AS
    DuckDB the 1e6-scaled double (ext_ewma/ext_pagerank, r3s3).
    Exception: ``CAST(ROUND(...) AS DECIMAL...)`` — an already-rounded
    value is exact at its scale.
-R6 shared-fragment copy (source only, ratchet at zero): the text
-   tokenizer, the adjacent-pair construction and the mix31 eval split
-   are written once in functions/text.py and functions/portable.py,
-   which render both the Spark Column and the DuckDB SQL. A hand-
-   written copy anywhere else in the package can drift from its twin
-   (the RE2-vs-Java vertical-tab split was such a drift).
+R6 shared-fragment copy (source only, ratchet at zero): each
+   cross-engine fragment is written once, in the module that owns it,
+   as a Spark builder plus its DuckDB twin — the text tokenizer, the
+   adjacent-pair construction and the mix31 eval split in
+   functions/text.py and functions/portable.py; the daily revenue
+   cents in operators/timeseries.py; the co-purchase self-join and the
+   label-propagation vote in operators/graphs.py; the held-out
+   (is_eval, lang, v, w) bigram aggregate in operators/lexical.py. A
+   hand-written copy anywhere else in the package can drift from its
+   twin (the RE2-vs-Java vertical-tab split was such a drift).
 R7 session-conf write (source only, ratchet at the allowlist): a
    ``conf.set``/``conf.unset`` in a package function changes the
    caller's session. Only the (module, function) pairs in
@@ -230,21 +234,41 @@ _SOURCE_GLOBS = [
     "proto_to_avro_ql_spark/**/*.py",
 ]
 
-# R6: the modules that own the shared text fragments.
-FRAGMENT_OWNERS = (
+# R6: each shared fragment kind, the module(s) that own it, and the
+# pattern of a hand-written copy (Spark spelling | DuckDB spelling).
+_TEXT_OWNERS = (
     "proto_to_avro_ql_spark/functions/text.py",
     "proto_to_avro_ql_spark/functions/portable.py",
 )
-_FRAGMENT_COPIES = {
-    "tokenizer": re.compile(
+_GRAPHS = ("proto_to_avro_ql_spark/operators/graphs.py",)
+FRAGMENTS: dict[str, tuple[tuple[str, ...], re.Pattern]] = {
+    "tokenizer": (_TEXT_OWNERS, re.compile(
         r"split\(\s*(?:\w+\.)?normalize_text\("  # Spark split of normalized text
         r"|regexp_replace\((?:[^'\"\n]|\"[^\"\n]*\")*?,"
         r"\s*r?['\"](?:\\{1,2}s\+|\[\\{1,2}s)"  # whitespace collapse
-    ),
-    "adjacent pairs": re.compile(
+    )),
+    "adjacent pairs": (_TEXT_OWNERS, re.compile(
         r"zip_with\(\s*(?:F\.)?slice\(|\[1:len\((\w+)\)\s*-\s*1\]"
-    ),
-    "eval split": re.compile(r"mix\w*[^\n]*%\s*5\s*==?\s*0"),
+    )),
+    "eval split": (_TEXT_OWNERS, re.compile(r"mix\w*[^\n]*%\s*5\s*==?\s*0")),
+    "daily cents": (("proto_to_avro_ql_spark/operators/timeseries.py",), re.compile(
+        r'cast\("date"\)\.alias\("day"\)\s*\)\.agg\(\s*'
+        r'F\.round\(F\.sum\(F\.col\("value"\)\.cast\(DEC\)\)\s*\*\s*100'
+        r"|(?i:CAST\(ts AS DATE\) AS day,\s*"
+        r"CAST\(ROUND\(SUM\(CAST\(value AS DECIMAL\(38,\s*6\)\)\)\s*\*\s*100)"
+    )),
+    "co-purchase self-join": (_GRAPHS, re.compile(
+        r"(?i:\.pk AS u,\s*\w+\.pk AS v\s+FROM\s+\w+\s+\w+\s+JOIN\s+\w+\s+\w+"
+        r"\s+ON\s+\w+\.ok\s*=\s*\w+\.ok)"
+    )),
+    "label vote": (_GRAPHS, re.compile(
+        r'partitionBy\("node"\)\.orderBy\(F\.desc\("c"\),\s*"label"\)'
+        r"|(?i:ORDER BY COUNT\(\*\) DESC,\s*\w+\.label\))"
+    )),
+    "held-out bigram aggregate": (("proto_to_avro_ql_spark/operators/lexical.py",), re.compile(
+        r'groupBy\(\s*"is_eval",\s*"lang",\s*"v",\s*"w"\s*\)'
+        r"|(?i:SELECT is_eval, lang, v, w, COUNT\(\*\))"
+    )),
 }
 
 
@@ -304,13 +328,15 @@ def _strip_comments(source: str) -> str:
     return "".join(lines)
 
 
-def find_fragment_copies(source: str) -> list[str]:
-    """R6 hits in one package source file (docstrings and comments are
-    prose, not copies)."""
+def find_fragment_copies(source: str, rel: str = "") -> list[str]:
+    """R6 hits in one package source file ``rel`` (docstrings and
+    comments are prose, not copies); a file is not checked for the
+    kinds it owns."""
     text = _strip_comments(_strip_docstrings(source))
     return [
         f"R6 shared-fragment copy ({kind}): {m.group(0)[:60]}"
-        for kind, pat in _FRAGMENT_COPIES.items()
+        for kind, (owners, pat) in FRAGMENTS.items()
+        if rel not in owners
         for m in pat.finditer(text)
     ]
 
@@ -393,8 +419,7 @@ def lint_all(repo_root: str | Path | None = None) -> dict[str, list[str]]:
                 for h in find_violations(text)
                 if (rel, h.split(" ", 1)[0]) not in ALLOW
             ]
-            if rel not in FRAGMENT_OWNERS:
-                hits += find_fragment_copies(path.read_text())
+            hits += find_fragment_copies(path.read_text(), rel)
             hits += find_conf_writes(path.read_text(), rel)
             if hits:
                 bad[rel] = hits
