@@ -1,86 +1,47 @@
 """Duplicate-cluster resolution: near-dup PAIRS → CLUSTERS (connected
-components), and the composed corpus-cleaning pipeline.
+components), and k-core graph curation.
 
 The pair-producing operators (operators/dedup.py) emit edges; choosing
 one representative per duplicate *cluster* requires the transitive
-closure. ``connected_components`` is label propagation expressed as
-iterative DataFrame joins (small-step Pregel): each node adopts the
-min label among itself and its neighbors until fixpoint.
+closure. ``connected_components`` labels every node with the min node
+id reachable through the pair graph: an exact local union-find up to
+``LOCAL_CUTOFF`` edges, alternating large-star/small-star contraction
+(O(log n) distributed rounds) above it. ``connected_components_sql``
+renders the same closure as a DuckDB recursive CTE for the oracles.
 
-Scale notes: each iteration is one shuffle on the node id; iterations
-needed = graph diameter (near-dup clusters are tiny and dense, so 3-5
-rounds in practice; ``max_iter`` caps pathological chains). Labels are
-longs, edges live in the shuffle — never the document text. For
-planet-scale graphs you'd switch to the alternating large/small-star
-algorithm; the API is the seam.
+Labels are the node keys, edges live in the shuffle — never the
+document text. The distributed loops reach the exact fixpoint within
+their round cap (``CC_MAX_ROUNDS``, ``KCORE_MAX_ROUNDS``) or raise.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-# Hard ceiling on the bounded-collect contract shared by the local
-# tails below (collected edge list = two longs per row; 5M rows is a
-# few hundred driver-side MB — far above any sensible cutoff, far
-# below OOM). A caller passing a pathological cutoff gets a loud
-# ValueError instead of a driver OOM mid-collect.
-MAX_LOCAL_CUTOFF = 5_000_000
-
-
-def _check_local_cutoff(local_cutoff: int) -> None:
-    if local_cutoff > MAX_LOCAL_CUTOFF:
-        raise ValueError(
-            f"local_cutoff={local_cutoff} exceeds MAX_LOCAL_CUTOFF="
-            f"{MAX_LOCAL_CUTOFF}: the local tail COLLECTS up to that many "
-            "edge rows to the driver; raise MAX_LOCAL_CUTOFF deliberately "
-            "if you really have the driver memory"
-        )
-
-
-def _check_on_round_cap(on_round_cap: str) -> None:
-    if on_round_cap not in ("raise", "truncate"):
-        raise ValueError(
-            f"on_round_cap={on_round_cap!r}: expected 'raise' (exact "
-            "fixpoint or loud error — the default, keeps engine output "
-            "equal to the exact transitive-closure oracles) or "
-            "'truncate' (accept the round-capped, coarser answer)"
-        )
+# Graphs with at most this many edges run on the driver: the collected
+# edge list is two keys per row, a few MB. On such a graph every
+# distributed round is pure job scheduling, while the whole local
+# fixpoint takes milliseconds.
+LOCAL_CUTOFF = 200_000
+CC_MAX_ROUNDS = 12
+KCORE_MAX_ROUNDS = 16
 
 
 def _round_cap_error(algo: str, cap_name: str, cap: int) -> ValueError:
     return ValueError(
         f"{algo}: round cap {cap_name}={cap} exhausted before the "
-        "fixpoint — the capped answer would be coarser than the exact "
-        f"one. Raise {cap_name}, or pass on_round_cap='truncate' to "
-        "accept the truncated labels deliberately."
+        "fixpoint — the capped answer would be coarser than the exact one"
     )
 
 
-def _local_components_df(
-    spark, pdf, u_col: str, v_col: str, id_type
-) -> DataFrame:
-    """Exact min-label connected components of a COLLECTED pair list
-    via union-find (path compression, min-root-wins union, so every
-    final root is its component's minimum id) — the bounded local tail
-    both CC variants switch to under ``local_cutoff`` edges, mirroring
-    kcore_nodes' numpy tail: on a sub-cutoff graph every distributed
-    round is pure job scheduling, while the whole union-find runs in
-    milliseconds. Comparison semantics match the distributed plans:
-    Python's ``<`` on ints is Spark's long order, and on strings it is
-    code-point order == Spark's binary UTF-8 order (UTF-8 preserves
-    code-point ordering).
-
-    UNIFORM-SEMANTICS CONTRACT (round-7 verdict #3, superseding the
-    round-5 truncation note): the local tail always runs to the EXACT
-    fixpoint, and since round 7 the DISTRIBUTED paths default to
-    ``on_round_cap='raise'`` — they either reach (and confirm) the
-    same exact fixpoint within the round cap or raise loudly. Engine
-    output is therefore exact EVERYWHERE it returns, matching the
-    exact transitive-closure oracles with no caller convention;
-    ``on_round_cap='truncate'`` is the explicit opt-in for the old
-    capped (coarser) behavior, and the truncation tests pass it
-    together with ``local_cutoff=0``."""
+def local_components(spark, edges, id_type) -> DataFrame:
+    """Exact min-label connected components of a collected ``(u, v)``
+    pair iterable via union-find (path compression, min-root-wins
+    union, so every final root is its component's minimum id); one row
+    per node seen, in first-seen order. Comparison semantics match the
+    distributed plan: Python's ``<`` on ints is Spark's long order, and
+    on strings it is code-point order == Spark's binary UTF-8 order."""
     from pyspark.sql.types import StructField, StructType
 
     parent: dict = {}
@@ -95,7 +56,7 @@ def _local_components_df(
 
     seen = []
     seen_set = set()
-    for u, v in zip(pdf[u_col], pdf[v_col]):
+    for u, v in edges:
         for n in (u, v):
             if n not in seen_set:
                 seen_set.add(n)
@@ -113,292 +74,105 @@ def _local_components_df(
     return spark.createDataFrame(rows, schema)
 
 
-def connected_components(
-    pairs: DataFrame,
-    max_iter: int = 10,
-    checkpoint_every: int = 4,
-    local_cutoff: int = 200_000,
-    on_round_cap: str = "raise",
-) -> DataFrame:
+def _edge_metrics() -> list:
+    # (count, order-free hash sum) of an oriented edge relation: equal
+    # on two consecutive rounds means no edge moved
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(
+            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
+        ).alias("s"),
+    ]
+
+
+def _edge_checksum(e: DataFrame) -> tuple[int, int]:
+    row = e.agg(*_edge_metrics()).collect()[0]
+    return int(row["n"]), int(row["s"])
+
+
+def _star_round(edges: DataFrame) -> DataFrame:
+    """One large-star + small-star round over oriented edges (u > v).
+    Each star step is ONE center-keyed window min: the per-center
+    minimum rides every row in the same shuffle, no groupBy relation
+    to join back."""
+    wu = Window.partitionBy("u")
+    # large-star: center every node u over its FULL neighborhood; hook
+    # each larger neighbor v > u onto m = min(N(u) ∪ {u}).
+    sym = edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    large = (
+        sym.withColumn("m", F.min(F.least("v", "u")).over(wu))
+        .where(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+    )
+    # small-star: per center u with smaller neighbors {v}, m = min;
+    # connect u and every other smaller neighbor to m.
+    return (
+        large.withColumn("m", F.min("v").over(wu))
+        .select(
+            F.when(F.col("v") == F.col("m"), F.col("u")).otherwise(F.col("v")).alias("u"),
+            F.col("m").alias("v"),
+        )
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def connected_components(pairs: DataFrame, cast: str | None = "long") -> DataFrame:
     """pairs(id_a, id_b) → (id, cluster_id) where cluster_id is the min
     node id reachable through the pair graph. Nodes present in pairs
     only; singletons are their own cluster by construction elsewhere.
+    Any totally ordered key type works; ``cast=None`` keeps e.g.
+    string entity keys.
 
-    Under ``local_cutoff`` pairs the transitive closure runs as an
-    exact local union-find on the collected edge list (bounded by
-    contract — see _local_components_df); the distributed
-    label-propagation rounds below only engage on graphs too large to
-    collect, where their per-round shuffle is real work rather than
-    scheduling overhead. ``local_cutoff`` is capped by
-    MAX_LOCAL_CUTOFF (loud error, not a driver OOM).
-
-    UNIFORM SEMANTICS (round-7): both paths return the EXACT fixpoint.
-    If ``max_iter`` distributed rounds end without a confirmed
-    fixpoint, one cheap checksum-only probe round distinguishes
-    "converged exactly at the cap" from "genuinely truncated"; the
-    latter raises under the default ``on_round_cap='raise'`` (pass
-    ``'truncate'`` to accept the capped, coarser labels — e.g. for
-    bounded-latency jobs that prefer coarse clusters over a retry)."""
-    _check_local_cutoff(local_cutoff)
-    _check_on_round_cap(on_round_cap)
-    edges = pairs.select(
-        F.col("id_a").cast("long").alias("src"), F.col("id_b").cast("long").alias("dst")
-    ).persist()
-    n_pairs = edges.count()
-    if n_pairs <= local_cutoff:
-        pdf = edges.toPandas()
-        edges.unpersist()
-        return _local_components_df(
-            pairs.sparkSession, pdf, "src", "dst", edges.schema["src"].dataType
-        )
-    # undirected: both directions
-    sym = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    labels = (
-        sym.select("src").union(sym.select(F.col("dst").alias("src")))
-        .distinct()
-        .select(F.col("src").alias("id"), F.col("src").alias("label"))
-    )
-    sym = sym.persist()
-    labels = labels.persist()
-    # fixpoint detection mirrors star_contraction_components: labels
-    # only ever DECREASE (least of self and neighbor min), so
-    # consecutive rounds with equal (count, label-hash-sum) observed
-    # metrics mean no label moved — the comparison join the previous
-    # version ran each round is gone; the checksum rides the round's
-    # own materializing action. prev_sum is seeded with the INITIAL
-    # labels' checksum (r7 ADVICE: mirroring star contraction's
-    # pre-loop _checksum) so the post-loop probe can confirm a
-    # max_iter=0 fixpoint instead of unconditionally raising; the agg
-    # doubles as the action that materializes the labels cache.
-    prev_sum = int(
-        labels.agg(
-            F.coalesce(
-                F.sum(F.xxhash64("id", "label").cast("decimal(38,0)")), F.lit(0)
-            )
-        ).collect()[0][0]
-    )
-    converged = False
-    for it in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        obs = Observation()
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias(
-                    "label"
-                ),
-            )
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum(F.xxhash64("id", "label").cast("decimal(38,0)")), F.lit(0)
-                ).alias("s"),
-            )
-            .persist()
-        )
-        new_labels.count()  # one action: cache + metrics
-        if it == 0:
-            # sym's cache is populated through edges by the first
-            # round's action; edges has no further consumer
-            edges.unpersist()
-        cur_sum = int(obs.get["s"])
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            # truncate lineage: each round stacks joins on the previous
-            # labels; past a few rounds the growing plan costs more to
-            # analyze/schedule than the data costs to copy. Reads the
-            # just-populated cache, which is then dropped — the
-            # checkpoint replaces it (leaked otherwise: bench runs each
-            # query 3×, and orphaned caches accumulate across passes).
-            cp = new_labels.localCheckpoint(eager=True)
-            new_labels.unpersist()
-            new_labels = cp
-        labels.unpersist()
-        labels = new_labels
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # The loop exhausted max_iter with the LAST round still moving
-        # labels — but that round may itself have completed the
-        # fixpoint (the checksum compare needs one more round to
-        # confirm). One checksum-only probe round (no persist, no
-        # extra relation) settles it; only a genuinely unconverged
-        # graph pays anything beyond this agg.
-        nm = (
-            sym.join(labels, sym.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        probe = (
-            labels.join(nm, labels.id == nm.src, "left")
-            .select(
-                F.xxhash64(
-                    "id",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                    ),
-                ).alias("h")
-            )
-            .agg(F.coalesce(F.sum(F.col("h").cast("decimal(38,0)")), F.lit(0)))
-            .collect()[0][0]
-        )
-        converged = int(probe) == prev_sum
-        edges.unpersist()  # no-op unless max_iter == 0 skipped the loop
-        if not converged and on_round_cap == "raise":
-            sym.unpersist()
-            labels.unpersist()
-            raise _round_cap_error("connected_components", "max_iter", max_iter)
-    # sym fed only the per-round joins, every one already materialized
-    # through labels' actions; the returned plan reads labels' cache
-    # (recompute after eviction would just re-derive sym uncached), so
-    # holding sym past return is the same loop-scoped leak class the
-    # r04 ADVICE flagged on star contraction's input pairs.
-    sym.unpersist()
-    return labels.select("id", F.col("label").alias("cluster_id"))
-
-
-def star_contraction_components(
-    pairs: DataFrame,
-    max_rounds: int = 12,
-    checkpoint_every: int = 2,
-    cast: str | None = "long",
-    local_cutoff: int = 200_000,
-    on_round_cap: str = "raise",
-) -> DataFrame:
-    """pairs(id_a, id_b) → (id, cluster_id): the alternating
-    large-star / small-star connected-components algorithm (Kiveris et
-    al., "Connected Components in MapReduce and Beyond").
-
-    Same output contract as ``connected_components`` (cluster_id = min
-    reachable node id) but O(log n) rounds instead of O(diameter):
-    large-star hooks every node's larger neighbors onto its minimum
-    neighbor, small-star contracts the smaller neighbors, and the
+    Up to ``LOCAL_CUTOFF`` pairs the closure is an exact local
+    union-find on the collected pairs. Larger graphs run the
+    alternating large-star / small-star algorithm (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014): the
     alternation collapses each component into a star around its min in
-    logarithmically many passes. This is the planet-scale form the
-    ``connected_components`` docstring reserves the seam for — on a
-    path graph of 2^k nodes label propagation needs 2^k rounds, star
-    contraction ~k.
-
-    Scale shape per round: one symmetrize (union, no shuffle), then
-    each star step is ONE center-keyed window min (the per-center
-    minimum rides every row — min-over-partition replaces the
-    groupBy-min + join-back pair, halving exchanges per round) — edges
-    only, labels are the edges; document text or payloads never enter.
-    Edges are kept ORIENTED (first > second) between rounds, so each
-    round's relation is at most the component-spanning forest plus
-    not-yet-hooked edges. Convergence = the oriented edge set reaches
-    the star fixpoint (checksum-equal two rounds running), detected
-    from observed metrics on the round's own materializing action;
-    lineage is truncated with localCheckpoint like
-    ``connected_components``; the ``on_round_cap`` contract (exact
-    fixpoint or loud error by default, ``'truncate'`` to opt into the
-    capped coarser labels) is shared with it too.
-    """
-    from pyspark.sql import Window
-    _check_local_cutoff(local_cutoff)
-    _check_on_round_cap(on_round_cap)
-    # any totally ordered key type works (the algorithm only needs
-    # min/least comparisons); cast=None keeps e.g. string entity keys
+    O(log n) rounds. Edges stay ORIENTED (first > second) between
+    rounds, so each round's relation is at most the component-spanning
+    forest plus not-yet-hooked edges. Convergence = the edge set's
+    (count, hash-sum) is equal two rounds running, observed on the
+    round's own materializing action. If ``CC_MAX_ROUNDS`` ends first,
+    one unpersisted probe round confirms the fixpoint or the call
+    raises."""
     ua = F.col("id_a").cast(cast) if cast else F.col("id_a")
     vb = F.col("id_b").cast(cast) if cast else F.col("id_b")
     # persist the input pairs: the node universe AND the initial edge
     # relation both branch off them — uncached, an expensive upstream
     # (e.g. the co-purchase self-join) would evaluate twice
     raw = pairs.select(ua.alias("u"), vb.alias("v")).persist()
-    n_raw = raw.count()
-    if n_raw <= local_cutoff:
-        # bounded local tail (same contract as kcore_nodes): on a
-        # sub-cutoff graph the alternating star rounds are pure job
-        # scheduling; the exact min-label union-find replaces them.
+    if raw.count() <= LOCAL_CUTOFF:
         # raw (not the oriented distinct relation) is collected so
-        # self-loop-only nodes keep their row in the node universe.
+        # self-loop-only nodes keep their row in the node universe
         pdf = raw.toPandas()
         raw.unpersist()
-        return _local_components_df(
-            pairs.sparkSession, pdf, "u", "v", raw.schema["u"].dataType
+        return local_components(
+            pairs.sparkSession, zip(pdf["u"], pdf["v"]), raw.schema["u"].dataType
         )
     nodes = raw.select("u").unionAll(raw.select(F.col("v").alias("u"))).distinct()
     edges = (
         raw.where(F.col("u") != F.col("v"))
-        .select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )  # orient: u > v
+        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .distinct()
         .persist()
     )
-
-    def _checksum(e: DataFrame) -> tuple[int, int]:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
-            ).alias("s"),
-        ).collect()[0]
-        return int(row["n"]), int(row["s"])
-
-    prev = _checksum(edges)
+    prev = _edge_checksum(edges)
     # raw has now been read once (the checksum materialized the oriented
-    # edge cache through it); pin the node universe — |V| longs — and
+    # edge cache through it); pin the node universe — |V| keys — and
     # release raw so the input pairs' cache doesn't outlive the call
-    # (it has no owner after return; bench's 3 passes would stack it).
     nodes = nodes.localCheckpoint(eager=True)
     raw.unpersist()
     converged = False
-    for rnd in range(max_rounds):
-        # large-star: center every node u over its FULL neighborhood;
-        # hook each larger neighbor v > u onto m = min(N(u) ∪ {u}).
-        sym = edges.unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        wu = Window.partitionBy("u")
-        # min-over-partition window: the per-center minimum rides every
-        # row in the same shuffle — no groupBy relation to join back
-        large = (
-            sym.withColumn(
-                "m", F.min(F.least("v", "u")).over(wu)  # min(N(u) ∪ {u})
-            )
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        # small-star: edges are oriented (u > v); per center u with
-        # smaller neighbors {v}, m = min; connect u and every other
-        # smaller neighbor to m.
-        # convergence metrics ride the round's own materializing action
-        # as observed metrics (CollectMetrics — computed inline with the
-        # count, no separate checksum job/exchange over the persisted
-        # relation; round-3 verdict next-round #4)
+    for rnd in range(CC_MAX_ROUNDS):
         obs = Observation()
-        small = (
-            large.withColumn("m", F.min("v").over(wu))
-            .select(
-                F.when(F.col("v") == F.col("m"), F.col("u"))
-                .otherwise(F.col("v"))
-                .alias("u"),
-                F.col("m").alias("v"),
-            )
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
-                ).alias("s"),
-            )
-            .persist()
-        )
+        small = _star_round(edges).observe(obs, *_edge_metrics()).persist()
         small.count()  # one action: populates the cache AND the metrics
         got = obs.get
         cur = (int(got["n"]), int(got["s"]))
-        if checkpoint_every and (rnd + 1) % checkpoint_every == 0:
-            # lineage truncation reads the just-populated cache, then
-            # drops it — the checkpoint replaces it (no orphaned cache)
+        if rnd % 2 == 1:
+            # lineage truncation every second round reads the
+            # just-populated cache, then drops it
             cp = small.localCheckpoint(eager=True)
             small.unpersist()
             small = cp
@@ -408,54 +182,15 @@ def star_contraction_components(
             converged = True
             break
         prev = cur
-
-    if not converged:
-        # Same confirmation probe as connected_components: the final
-        # round may have completed the star fixpoint without the
-        # checksum compare seeing it. Re-derive one round's (count,
-        # hash-sum) WITHOUT persisting and compare; only a genuinely
-        # unconverged graph goes past this aggregate.
-        sym_p = edges.unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        wu_p = Window.partitionBy("u")
-        large_p = (
-            sym_p.withColumn("m", F.min(F.least("v", "u")).over(wu_p))
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        row = (
-            large_p.withColumn("m", F.min("v").over(wu_p))
-            .select(
-                F.when(F.col("v") == F.col("m"), F.col("u"))
-                .otherwise(F.col("v"))
-                .alias("u"),
-                F.col("m").alias("v"),
-            )
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
-                ).alias("s"),
-            )
-            .collect()[0]
-        )
-        converged = (int(row["n"]), int(row["s"])) == prev
-        if not converged and on_round_cap == "raise":
-            edges.unpersist()
-            raise _round_cap_error(
-                "star_contraction_components", "max_rounds", max_rounds
-            )
+    # the last round may have completed the fixpoint without the
+    # checksum compare seeing it: one more round, not persisted, decides
+    if not converged and _edge_checksum(_star_round(edges)) != prev:
+        edges.unpersist()
+        raise _round_cap_error("connected_components", "CC_MAX_ROUNDS", CC_MAX_ROUNDS)
 
     # fixpoint: every edge is (member, component_min); nodes without a
-    # parent edge (roots, self-loop-only nodes, isolated ids) label
-    # themselves — same node universe as connected_components. The
-    # min-aggregate (not distinct) keeps the one-row-per-id contract
-    # even if max_rounds truncated before the checksum fixpoint: a
-    # node still holding several parent edges degrades to its coarsest
-    # (min) label instead of emitting conflicting duplicate rows.
+    # parent edge (roots, self-loop-only nodes) label themselves. The
+    # min-aggregate keeps the one-row-per-id contract by construction.
     members = edges.select(F.col("u").alias("id"), F.col("v").alias("cluster_id"))
     return (
         nodes.alias("n")
@@ -469,28 +204,44 @@ def star_contraction_components(
     )
 
 
-def dedup_keep_representatives(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Drop every document that belongs to a near-dup cluster and is not
-    the cluster's min-id representative."""
-    clusters = connected_components(pairs)
-    drop = clusters.where(F.col("id") != F.col("cluster_id")).select(
-        F.col("id").alias(id_col)
+def connected_components_sql(pairs: str, a: str, b: str) -> str:
+    """DuckDB twin of ``connected_components`` over the relation
+    ``pairs``(a, b): the CTEs ``sym``, ``nodes``, the recursive ``cc``
+    and ``clusters``(id, cluster_id), the min id reachable by
+    transitive closure. The enclosing WITH must be RECURSIVE."""
+    return f"""sym AS (
+      SELECT {a} AS src, {b} AS dst FROM {pairs}
+      UNION ALL
+      SELECT {b}, {a} FROM {pairs}
+    ), nodes AS (
+      SELECT DISTINCT src AS id FROM sym
+    ), cc(id, lab) AS (
+      SELECT id, id FROM nodes
+      UNION
+      SELECT s.src, cc.lab FROM sym s JOIN cc ON cc.id = s.dst
+    ), clusters AS (
+      SELECT id, MIN(lab) AS cluster_id FROM cc GROUP BY id
+    )"""
+
+
+def _peel(edges: DataFrame, k: int) -> DataFrame:
+    """One k-core peel round: keep the edges whose ends both have
+    degree ≥ k (one degree aggregation + two semi-joins)."""
+    sym = edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    keep = (
+        sym.groupBy("u")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .where(F.col("deg") >= k)
+        .select("u")
     )
-    return docs.join(drop, id_col, "left_anti")
+    return (
+        edges.join(keep, "u", "left_semi")
+        .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
+        .select("u", "v")
+    )
 
 
-def kcore_nodes(
-    pairs: DataFrame,
-    k: int = 3,
-    max_rounds: int = 16,
-    checkpoint_every: int = 3,
-    local_cutoff: int = 200_000,
-    on_round_cap: str = "raise",
-) -> DataFrame:
+def kcore_nodes(pairs: DataFrame, k: int = 3) -> DataFrame:
     """pairs(id_a, id_b) → (id, core_degree): the k-core — the maximal
     subgraph in which every node keeps degree ≥ k — by iterative
     peeling (remove all sub-k nodes, recompute degrees, repeat to
@@ -498,34 +249,15 @@ def kcore_nodes(
     community seeding: a node's raw degree is gameable, its coreness
     is not (it needs k neighbors who THEMSELVES survive).
 
-    Each distributed round is one degree aggregation + two semi-joins
-    on the edge relation — edges only in the shuffle; ``max_rounds``
-    caps pathological chains the same way connected_components caps
-    label-propagation rounds.
-
     Peeling's cost profile is front-loaded: early rounds drop most of
     the graph, late rounds remove a trickle of edges from an
-    already-tiny relation, so their cost is pure job-scheduling, not
-    data (the r04 sweep inversion: sf0.01 peels 11 rounds and took 3×
-    sf0.1's 3 rounds — every round past the first was over <3k
-    edges). So the loop runs distributed rounds only WHILE the
-    relation exceeds ``local_cutoff`` edges, then collects the
-    bounded tail (≤ local_cutoff rows of two longs — a few MB by
-    construction, the same capped-collect contract as the bloom build
-    and the DBSCAN cell graph) and finishes the peel in numpy: the
-    whole remaining fixpoint iteration is a handful of milliseconds
-    instead of one scheduled multi-stage job per round. Fact-scale
-    work stays distributed at any input size; the cutoff bounds
-    driver memory independent of scale (capped by MAX_LOCAL_CUTOFF —
-    loud error, not a driver OOM). The numpy tail peels to the exact
-    fixpoint regardless of how many ``max_rounds`` remain, and the
-    distributed path shares the round-7 ``on_round_cap`` contract: if
-    ``max_rounds`` ends with the relation still above the cutoff, a
-    count-only probe peel confirms the fixpoint or (by default)
-    raises — engine output is the exact k-core everywhere it returns;
-    pass ``'truncate'`` to accept the partially-peeled supergraph."""
-    _check_local_cutoff(local_cutoff)
-    _check_on_round_cap(on_round_cap)
+    already-tiny relation, so their cost is pure job scheduling (the
+    r04 sweep inversion: sf0.01 peels 11 rounds and took 3× sf0.1's 3
+    rounds). So the loop runs distributed rounds only WHILE the
+    relation exceeds ``LOCAL_CUTOFF`` edges, then collects the bounded
+    tail and finishes the peel in numpy. If ``KCORE_MAX_ROUNDS`` ends
+    with the relation still above the cutoff, one count-only probe
+    peel confirms the fixpoint or the call raises."""
     import numpy as np
     import pandas as pd
 
@@ -540,25 +272,11 @@ def kcore_nodes(
     spark = pairs.sparkSession
     n_prev = edges.count()
     converged = False
-    for rnd in range(max_rounds):
-        if n_prev <= local_cutoff:
+    for rnd in range(KCORE_MAX_ROUNDS):
+        if n_prev <= LOCAL_CUTOFF:
             break
-        sym = edges.unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        keep = (
-            sym.groupBy("u")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .where(F.col("deg") >= k)
-            .select("u")
-        )
-        nxt = (
-            edges.join(keep, "u", "left_semi")
-            .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-            .select("u", "v")
-            .persist()
-        )
-        if checkpoint_every and (rnd + 1) % checkpoint_every == 0:
+        nxt = _peel(edges, k).persist()
+        if rnd % 3 == 2:
             cp = nxt.localCheckpoint(eager=True)
             nxt.unpersist()
             nxt = cp
@@ -570,39 +288,18 @@ def kcore_nodes(
             break
         n_prev = n_cur
 
-    if n_prev > local_cutoff:
-        sym = edges.unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        if not converged:
-            # max_rounds exhausted while still large AND the loop never
-            # saw n_cur == n_prev (r7 ADVICE: the probe is skipped when
-            # the loop already confirmed the fixpoint in-loop — a
-            # converged run no longer pays a redundant distributed
-            # peel). Peeling only ever removes edges, so one count-only
-            # probe peel (no persist) distinguishes "already at the
-            # fixpoint" from "genuinely truncated"; the latter raises
-            # by default (on_round_cap).
-            keep_p = (
-                sym.groupBy("u")
-                .agg(F.count(F.lit(1)).alias("deg"))
-                .where(F.col("deg") >= k)
-                .select("u")
-            )
-            n_next = (
-                edges.join(keep_p, "u", "left_semi")
-                .join(keep_p.select(F.col("u").alias("v")), "v", "left_semi")
-                .count()
-            )
-            if n_next != n_prev and on_round_cap == "raise":
-                edges.unpersist()
-                raise _round_cap_error("kcore_nodes", "max_rounds", max_rounds)
-        # stay distributed: exact (probe confirmed) or opted-in coarse
+    if n_prev > LOCAL_CUTOFF:
+        # peeling only ever removes edges: an unchanged count after one
+        # more (unpersisted) peel means the loop already reached it
+        if not converged and _peel(edges, k).count() != n_prev:
+            edges.unpersist()
+            raise _round_cap_error("kcore_nodes", "KCORE_MAX_ROUNDS", KCORE_MAX_ROUNDS)
+        sym = edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
         return sym.groupBy(F.col("u").alias("id")).agg(
             F.count(F.lit(1)).alias("core_degree")
         )
 
-    pdf = edges.toPandas()  # ≤ local_cutoff rows — bounded by contract
+    pdf = edges.toPandas()  # ≤ LOCAL_CUTOFF rows
     edges.unpersist()
     u = pdf["u"].to_numpy(dtype=np.int64)
     v = pdf["v"].to_numpy(dtype=np.int64)

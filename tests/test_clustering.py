@@ -1,109 +1,51 @@
 from __future__ import annotations
 
+from proto_to_avro_ql_spark.operators import clustering as CL
 from proto_to_avro_ql_spark.operators.clustering import (
     connected_components,
-    dedup_keep_representatives,
+    kcore_nodes,
 )
 
 
 class TestConnectedComponents:
-    def test_chain_collapses_to_one_cluster(self, spark):
+    def test_chain_collapses_to_one_cluster(self, spark, monkeypatch):
         # 1-2, 2-3, 3-4 chain plus isolated pair 10-11
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
         )
         out = {r.id: r.cluster_id for r in connected_components(pairs).collect()}
         assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
-        # the distributed label-propagation path (forced past the
+        # the distributed star-contraction path (forced past the
         # local-tail cutoff) must agree exactly
-        dist = {
-            r.id: r.cluster_id
-            for r in connected_components(pairs, local_cutoff=0).collect()
-        }
+        monkeypatch.setattr(CL, "LOCAL_CUTOFF", 0)
+        dist = {r.id: r.cluster_id for r in connected_components(pairs).collect()}
         assert dist == out
-
-    def test_keep_representatives(self, spark):
-        docs = spark.createDataFrame(
-            [(i, f"doc {i}") for i in range(1, 6)], "doc_id long, text string"
-        )
-        pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
-        kept = sorted(
-            r.doc_id for r in dedup_keep_representatives(docs, pairs).collect()
-        )
-        assert kept == [1, 4, 5]  # 2,3 dropped; 1 is the representative
 
 
 class TestStarContraction:
-    def test_matches_label_propagation(self, spark):
-        import random
-
-        from proto_to_avro_ql_spark.operators.clustering import (
-            star_contraction_components,
-        )
-
-        random.seed(7)
-        edges = [(i, i + 1) for i in range(40)]
-        edges += [(100 + i, 100 + random.randint(0, i)) for i in range(1, 30)]
-        edges += [(500, 501), (600, 600)]  # incl. a self-loop-only node
-        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        star = {
-            (r.id, r.cluster_id)
-            for r in star_contraction_components(pairs).collect()
-        }
-        lp = {
-            (r.id, r.cluster_id)
-            for r in connected_components(pairs, max_iter=60).collect()
-        }
-        assert star == lp
-        # all four paths agree: local union-find (defaults above) and
-        # both DISTRIBUTED algorithms forced past the cutoff
-        star_dist = {
-            (r.id, r.cluster_id)
-            for r in star_contraction_components(pairs, local_cutoff=0).collect()
-        }
-        lp_dist = {
-            (r.id, r.cluster_id)
-            for r in connected_components(
-                pairs, max_iter=60, local_cutoff=0
-            ).collect()
-        }
-        assert star_dist == lp_dist == star
-
-    def test_long_path_converges_in_log_rounds(self, spark):
-        # a 200-edge path needs ~200 label-propagation rounds but must
-        # collapse within the default 12 alternating star rounds
-        from proto_to_avro_ql_spark.operators.clustering import (
-            star_contraction_components,
-        )
-
+    def test_long_path_converges_in_log_rounds(self, spark, monkeypatch):
+        # a 200-edge path must collapse within the default 12
+        # alternating star rounds; a zero cutoff forces the DISTRIBUTED
+        # rounds (the default would route this graph through the local
+        # union-find)
+        monkeypatch.setattr(CL, "LOCAL_CUTOFF", 0)
         path = spark.createDataFrame(
             [(i, i + 1) for i in range(200)], "id_a long, id_b long"
         )
-        # local_cutoff=0 forces the DISTRIBUTED alternating-star rounds
-        # (the log-round property under test; the default cutoff would
-        # route this sub-cutoff graph through the local union-find)
-        out = star_contraction_components(
-            path, max_rounds=12, local_cutoff=0
-        ).collect()
+        out = connected_components(path).collect()
         assert len(out) == 201
         assert all(r.cluster_id == 0 for r in out)
 
 
 class TestGraphEdgeCases:
     def test_star_contraction_empty_and_selfloop_only(self, spark):
-        from proto_to_avro_ql_spark.operators.clustering import (
-            star_contraction_components,
-        )
-
         empty = spark.createDataFrame([], "id_a long, id_b long")
-        assert star_contraction_components(empty).count() == 0
+        assert connected_components(empty).count() == 0
         loops = spark.createDataFrame([(7, 7), (9, 9)], "id_a long, id_b long")
-        out = {(r.id, r.cluster_id) for r in star_contraction_components(loops).collect()}
+        out = {(r.id, r.cluster_id) for r in connected_components(loops).collect()}
         assert out == {(7, 7), (9, 9)}
 
     def test_kcore_empty_and_subcritical(self, spark):
-        from proto_to_avro_ql_spark.operators.clustering import kcore_nodes
-
         empty = spark.createDataFrame([], "id_a long, id_b long")
         assert kcore_nodes(empty, k=3).count() == 0
         # a path has max degree 2: the 3-core must be empty
@@ -113,81 +55,20 @@ class TestGraphEdgeCases:
         assert kcore_nodes(path, k=3).count() == 0
 
 
-def test_star_contraction_truncated_run_keeps_one_row_per_id(spark):
-    """Exhausting max_rounds before the checksum fixpoint must degrade
-    to coarse (min) labels — never duplicate (id, cluster_id) rows
-    (round-3 ADVICE #1): on a long path graph with max_rounds=1 the
-    edge relation still holds multiple parent edges per node."""
-    from proto_to_avro_ql_spark.operators.clustering import (
-        star_contraction_components,
-    )
-
-    n = 64
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
-    )
-    # truncation is a DISTRIBUTED-path behavior (the local union-find
-    # always reaches the exact fixpoint): force past the cutoff, and
-    # opt into truncation explicitly (round-7: the default RAISES on
-    # an unconverged round cap — see TestRoundCapContract)
-    out = star_contraction_components(
-        path, max_rounds=1, local_cutoff=0, on_round_cap="truncate"
-    ).collect()
-    ids = [r["id"] for r in out]
-    assert len(ids) == len(set(ids)) == n, (len(ids), len(set(ids)))
-    # labels may be coarse but must never exceed the node's own id
-    assert all(r["cluster_id"] <= r["id"] for r in out)
-
-
 class TestBoundedCollectContract:
-    """Round-6 (r5 verdict #6): the local tails COLLECT up to
-    local_cutoff edge rows — the defaults stay modest and a
-    pathological cutoff fails loudly instead of OOMing the driver."""
+    """The local tail COLLECTS up to LOCAL_CUTOFF edge rows and runs to
+    the exact fixpoint whatever the distributed round cap."""
 
-    def test_default_cutoffs_stay_bounded(self):
-        import inspect
-
-        from proto_to_avro_ql_spark.operators.clustering import (
-            MAX_LOCAL_CUTOFF,
-            connected_components,
-            kcore_nodes,
-            star_contraction_components,
-        )
-
-        for fn in (connected_components, star_contraction_components, kcore_nodes):
-            default = inspect.signature(fn).parameters["local_cutoff"].default
-            assert default <= 200_000, (fn.__name__, default)
-            assert default <= MAX_LOCAL_CUTOFF
-
-    def test_pathological_cutoff_raises_before_any_work(self, spark):
-        import pytest as _pytest
-
-        from proto_to_avro_ql_spark.operators.clustering import (
-            MAX_LOCAL_CUTOFF,
-            connected_components,
-            kcore_nodes,
-            star_contraction_components,
-        )
-
-        pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-        for fn in (connected_components, star_contraction_components, kcore_nodes):
-            with _pytest.raises(ValueError, match="MAX_LOCAL_CUTOFF"):
-                fn(pairs, local_cutoff=MAX_LOCAL_CUTOFF + 1)
-
-    def test_local_tail_is_exact_beyond_round_cap(self, spark):
-        """The documented truncation contract (r5 ADVICE): sub-cutoff
-        graphs reach the exact fixpoint even when max_iter/max_rounds
-        would truncate the distributed path. A 6-node path graph needs
-        >1 LPA round; with max_iter=1 the local tail still collapses it
-        to one cluster."""
+    def test_local_tail_is_exact_beyond_round_cap(self, spark, monkeypatch):
+        """A 7-node path graph needs 3 star rounds; with a cap of 1 the
+        local tail still collapses it to one cluster."""
         from pyspark.sql import functions as F
 
-        from proto_to_avro_ql_spark.operators.clustering import connected_components
-
+        monkeypatch.setattr(CL, "CC_MAX_ROUNDS", 1)
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(6)], "id_a long, id_b long"
         )
-        out = connected_components(pairs, max_iter=1)  # local tail engages
+        out = connected_components(pairs)  # local tail engages
         assert out.select(F.countDistinct("cluster_id")).collect()[0][0] == 1
 
 
@@ -243,210 +124,135 @@ class TestEdgeBuildProperty:
 
 
 class TestRoundCapContract:
-    """Round-7 verdict #3: engine semantics are UNIFORM — every path
-    returns the exact fixpoint or raises loudly when the round cap
-    truncates; 'truncate' is an explicit opt-in. This removes the
-    caller convention ('pass local_cutoff=0 for capped parity') the
-    r6 verdict flagged: the exact transitive-closure oracles now match
-    whatever the engine returns, on any graph."""
+    """Every path returns the exact fixpoint or raises loudly when the
+    round cap ends first, so the exact transitive-closure oracles
+    match whatever the engine returns, on any graph. A zero
+    LOCAL_CUTOFF forces the distributed loops; the caps are lowered
+    by patching the module constants."""
 
     def _path(self, spark, n):
         return spark.createDataFrame(
             [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
         )
 
-    def test_cc_distributed_raises_on_non_convergence(self, spark):
+    def _distributed(self, monkeypatch, **caps):
+        monkeypatch.setattr(CL, "LOCAL_CUTOFF", 0)
+        for name, cap in caps.items():
+            monkeypatch.setattr(CL, name, cap)
+
+    def test_cc_distributed_raises_on_non_convergence(self, spark, monkeypatch):
         import pytest as _pytest
 
-        from proto_to_avro_ql_spark.operators.clustering import (
-            connected_components,
-        )
+        # 40-node path: star contraction needs 6 rounds; cap 3.
+        self._distributed(monkeypatch, CC_MAX_ROUNDS=3)
+        with _pytest.raises(ValueError, match="CC_MAX_ROUNDS=3 exhausted"):
+            connected_components(self._path(spark, 40)).collect()
 
-        # 40-node path: min-label propagation needs 39 rounds; cap 3.
-        with _pytest.raises(ValueError, match="max_iter=3 exhausted"):
-            connected_components(
-                self._path(spark, 40), max_iter=3, local_cutoff=0
-            ).collect()
-
-    def test_cc_distributed_truncate_is_explicit_optin(self, spark):
+    def test_cc_converged_exactly_at_cap_does_not_false_raise(
+        self, spark, monkeypatch
+    ):
+        """A 7-node path reaches the star fixpoint in round 3 (a cap of
+        2 raises) — with a cap of 3 the loop exhausts WITHOUT the
+        checksum compare confirming; the probe round must prove
+        convergence instead of raising."""
         from pyspark.sql import functions as F
 
-        from proto_to_avro_ql_spark.operators.clustering import (
-            connected_components,
-        )
-
-        out = connected_components(
-            self._path(spark, 40), max_iter=3, local_cutoff=0,
-            on_round_cap="truncate",
-        )
-        rows = out.collect()
-        assert len(rows) == 40 and len({r["id"] for r in rows}) == 40
-        # coarse: more than one label survives the capped run
-        assert len({r["cluster_id"] for r in rows}) > 1
-
-    def test_cc_converged_exactly_at_cap_does_not_false_raise(self, spark):
-        """A 7-node path converges in round 6 (it index 5) — with
-        max_iter=6 the loop exhausts WITHOUT the checksum compare
-        confirming; the probe round must prove convergence instead of
-        raising."""
-        from pyspark.sql import functions as F
-
-        from proto_to_avro_ql_spark.operators.clustering import (
-            connected_components,
-        )
-
-        out = connected_components(
-            self._path(spark, 7), max_iter=6, local_cutoff=0
-        )
+        self._distributed(monkeypatch, CC_MAX_ROUNDS=3)
+        out = connected_components(self._path(spark, 7))
         assert out.select(F.countDistinct("cluster_id")).collect()[0][0] == 1
 
-    def test_star_distributed_raises_on_non_convergence(self, spark):
+    def test_star_distributed_raises_on_non_convergence(self, spark, monkeypatch):
         import pytest as _pytest
 
-        from proto_to_avro_ql_spark.operators.clustering import (
-            star_contraction_components,
-        )
+        self._distributed(monkeypatch, CC_MAX_ROUNDS=1)
+        with _pytest.raises(ValueError, match="CC_MAX_ROUNDS=1 exhausted"):
+            connected_components(self._path(spark, 64)).collect()
 
-        with _pytest.raises(ValueError, match="max_rounds=1 exhausted"):
-            star_contraction_components(
-                self._path(spark, 64), max_rounds=1, local_cutoff=0
-            ).collect()
-
-    def test_kcore_distributed_raises_on_non_convergence(self, spark):
+    def test_kcore_distributed_raises_on_non_convergence(self, spark, monkeypatch):
         import pytest as _pytest
-
-        from proto_to_avro_ql_spark.operators.clustering import kcore_nodes
 
         # 2-core peel of a path removes endpoints each round — a
         # 12-node path needs ~6 rounds; cap 1, distributed forced.
-        with _pytest.raises(ValueError, match="max_rounds=1 exhausted"):
-            kcore_nodes(
-                self._path(spark, 12), k=2, max_rounds=1, local_cutoff=0
-            ).collect()
+        self._distributed(monkeypatch, KCORE_MAX_ROUNDS=1)
+        with _pytest.raises(ValueError, match="KCORE_MAX_ROUNDS=1 exhausted"):
+            kcore_nodes(self._path(spark, 12), k=2).collect()
 
-    def test_kcore_truncate_returns_partial_peel(self, spark):
-        from proto_to_avro_ql_spark.operators.clustering import kcore_nodes
-
-        out = kcore_nodes(
-            self._path(spark, 12), k=2, max_rounds=1, local_cutoff=0,
-            on_round_cap="truncate",
-        )
-        # after one peel round the supergraph is still non-empty even
-        # though the true 2-core of a path is empty
-        assert out.count() > 0
-
-    def test_kcore_fixpoint_at_cap_does_not_false_raise(self, spark):
-        from proto_to_avro_ql_spark.operators.clustering import kcore_nodes
-
+    def test_kcore_fixpoint_at_cap_does_not_false_raise(self, spark, monkeypatch):
         # a 4-cycle IS its own 2-core: one round confirms no removal
+        self._distributed(monkeypatch, KCORE_MAX_ROUNDS=1)
         cyc = spark.createDataFrame(
             [(0, 1), (1, 2), (2, 3), (3, 0)], "id_a long, id_b long"
         )
-        out = kcore_nodes(cyc, k=2, max_rounds=1, local_cutoff=0)
+        out = kcore_nodes(cyc, k=2)
         assert sorted((r["id"], r["core_degree"]) for r in out.collect()) == [
             (0, 2), (1, 2), (2, 2), (3, 2)
         ]
 
-    def test_cc_zero_cap_fixpoint_confirmed_by_probe(self, spark):
-        """r7 ADVICE: with max_iter=0, prev_sum used to be None, so the
-        probe could NEVER confirm convergence and a graph already at
-        the fixpoint raised anyway — inconsistent with star contraction
-        and k-core, which confirm a zero-cap fixpoint via a pre-loop
-        baseline. A self-loop-only graph is at the label fixpoint from
-        the start (every node's only neighbor is itself), so max_iter=0
-        must return exact self-clusters, not raise."""
+    def test_cc_zero_cap_fixpoint_confirmed_by_probe(self, spark, monkeypatch):
+        """A self-loop-only graph is at the fixpoint from the start (its
+        oriented edge set is empty), so a zero round cap must return
+        exact self-clusters, confirmed against the pre-loop checksum,
+        not raise."""
+        self._distributed(monkeypatch, CC_MAX_ROUNDS=0)
         loops = spark.createDataFrame(
             [(i, i) for i in range(6)], "id_a long, id_b long"
         )
-        from proto_to_avro_ql_spark.operators.clustering import (
-            connected_components,
-        )
-
-        out = connected_components(loops, max_iter=0, local_cutoff=0)
+        out = connected_components(loops)
         assert sorted((r["id"], r["cluster_id"]) for r in out.collect()) == [
             (i, i) for i in range(6)
         ]
 
-    def test_kcore_in_loop_convergence_with_spare_rounds_stays_exact(self, spark):
-        """r7 ADVICE companion: when the loop confirms the fixpoint
-        in-loop (n_cur == n_prev with rounds to spare), the
-        confirmation probe is skipped — the converged distributed path
-        must still return the exact core."""
-        from proto_to_avro_ql_spark.operators.clustering import kcore_nodes
-
+    def test_kcore_in_loop_convergence_with_spare_rounds_stays_exact(
+        self, spark, monkeypatch
+    ):
+        """When the loop confirms the fixpoint in-loop (n_cur == n_prev
+        with rounds to spare), the confirmation probe is skipped — the
+        converged distributed path must still return the exact core."""
+        self._distributed(monkeypatch, KCORE_MAX_ROUNDS=8)
         cyc = spark.createDataFrame(
             [(0, 1), (1, 2), (2, 3), (3, 0)], "id_a long, id_b long"
         )
-        out = kcore_nodes(cyc, k=2, max_rounds=8, local_cutoff=0)
+        out = kcore_nodes(cyc, k=2)
         assert sorted((r["id"], r["core_degree"]) for r in out.collect()) == [
             (0, 2), (1, 2), (2, 2), (3, 2)
         ]
 
-    def test_bad_on_round_cap_rejected(self, spark):
-        import pytest as _pytest
-
-        from proto_to_avro_ql_spark.operators.clustering import (
-            connected_components,
-            kcore_nodes,
-            star_contraction_components,
-        )
-
-        pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-        for fn in (connected_components, star_contraction_components, kcore_nodes):
-            with _pytest.raises(ValueError, match="on_round_cap"):
-                fn(pairs, on_round_cap="ignore")
-
     def test_sub_cutoff_graph_needing_many_rounds_is_green_by_default(
-        self, spark
+        self, spark, monkeypatch
     ):
-        """The r7 verdict's 'done' case: a sub-cutoff graph whose
-        fixpoint needs more rounds than any cap is exact with DEFAULT
-        arguments — no local_cutoff/on_round_cap knowledge needed —
-        and agrees with an independent transitive-closure oracle."""
+        """A sub-cutoff graph whose fixpoint needs more rounds than the
+        cap is exact with DEFAULT arguments, and agrees with the
+        transitive-closure oracle."""
         import duckdb
-        from pyspark.sql import functions as F
 
         from proto_to_avro_ql_spark.operators.clustering import (
-            connected_components,
-            star_contraction_components,
+            connected_components_sql,
         )
 
-        n = 40  # needs 39 LPA rounds > max_iter=10 and > the 16-round unrolls
-        for fn in (connected_components, star_contraction_components):
-            out = fn(self._path(spark, n))
-            got = {(r["id"], r["cluster_id"]) for r in out.collect()}
-            assert got == {(i, 0) for i in range(n)}, fn.__name__
-        # independent oracle: DuckDB recursive closure over the pairs
+        monkeypatch.setattr(CL, "CC_MAX_ROUNDS", 3)  # the path needs 6
+        n = 40
+        out = connected_components(self._path(spark, n))
+        got = {(r["id"], r["cluster_id"]) for r in out.collect()}
+        assert got == {(i, 0) for i in range(n)}
+        # the DuckDB twin over the same pairs
         want = duckdb.sql(
             f"""WITH RECURSIVE e AS (
                   SELECT i AS a, i + 1 AS b FROM range({n - 1}) t(i)
-                ), sym AS (
-                  SELECT a AS src, b AS dst FROM e
-                  UNION ALL SELECT b, a FROM e
-                ), cc(id, lab) AS (
-                  SELECT DISTINCT src, src FROM sym
-                  UNION
-                  SELECT s.src, cc.lab FROM sym s JOIN cc ON cc.id = s.dst
-                )
-                SELECT id, MIN(lab) FROM cc GROUP BY id"""
+                ), {connected_components_sql("e", "a", "b")}
+                SELECT id, cluster_id FROM clusters"""
         ).fetchall()
         assert {(int(a), int(b)) for a, b in want} == {
             (i, 0) for i in range(n)
         }
 
-    def test_star_fixpoint_at_cap_does_not_false_raise(self, spark):
+    def test_star_fixpoint_at_cap_does_not_false_raise(self, spark, monkeypatch):
         """A 3-node path contracts to a star IN the single allowed
         round; the checksum compare can't confirm it in-loop (the
         round changed the edge set), so the probe must prove
         convergence and return exact labels instead of raising."""
-        from proto_to_avro_ql_spark.operators.clustering import (
-            star_contraction_components,
-        )
-
+        self._distributed(monkeypatch, CC_MAX_ROUNDS=1)
         pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
-        out = star_contraction_components(
-            pairs, max_rounds=1, local_cutoff=0
-        ).collect()
+        out = connected_components(pairs).collect()
         assert sorted((r["id"], r["cluster_id"]) for r in out) == [
             (1, 1), (2, 1), (3, 1)
         ]

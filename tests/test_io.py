@@ -66,6 +66,19 @@ class TestEventsNanos:
         assert r.ts.year >= 2024
 
 
+class TestWidthMemo:
+    def test_stale_application_entries_dropped(self, spark, monkeypatch):
+        """The ensure_min_parallelism memo keeps the current
+        application's entries only: one call drops a stale key."""
+        from proto_to_avro_ql_spark.sources import io
+
+        stale = ("stale-application", 1, 1)
+        monkeypatch.setattr(io, "_WIDTH_MEMO", {stale: True})
+        io.ensure_min_parallelism(spark.range(4))
+        assert stale not in io._WIDTH_MEMO
+        assert io._WIDTH_MEMO, "the current application's entry is kept"
+
+
 class TestReadersLeaveSessionConf:
     def test_only_the_utc_pin_is_written(self, spark, sf_dir):
         """The readers are plain readers: apart from the UTC pin, a

@@ -99,8 +99,9 @@ class TestFragmentCopiesFire:
 
 class TestRelationCopiesFire:
     """R6 over the relation fragments: daily cents, the co-purchase
-    self-join, the label-propagation vote and the held-out bigram
-    aggregate, each owned by one operators module."""
+    self-join, the label-propagation vote, the held-out bigram
+    aggregate and the min-label closure, each owned by one operators
+    module."""
 
     CASES = {
         "daily cents": (
@@ -124,6 +125,11 @@ class TestRelationCopiesFire:
             'occ = pr.groupBy("is_eval", "lang", "v", "w").agg(F.count("*"))\n',
             'q = """SELECT is_eval, lang, v, w, COUNT(*) AS cnt FROM p"""\n',
         ),
+        "min-label closure": (
+            "def _find(x):\n    while parent[x] != x:\n        x = parent[x]\n",
+            'q = """cc(id, lab) AS (SELECT id, id FROM nodes UNION\n'
+            '  SELECT e.src, c.lab FROM sym e JOIN c ON c.id = e.dst)"""\n',
+        ),
     }
 
     def test_spark_and_sql_copies_fire(self):
@@ -142,6 +148,14 @@ class TestRelationCopiesFire:
         for owner in (graphs, "proto_to_avro_ql_spark/operators/timeseries.py",
                       "proto_to_avro_ql_spark/operators/lexical.py"):
             assert any("(tokenizer)" in h for h in find_fragment_copies(tok, owner))
+
+    def test_dense_cell_closure_is_not_a_components_copy(self):
+        """ext_dbscan_grid's closure is seeded from every dense cell,
+        not from the pair nodes: not the connected-components twin."""
+        assert not find_fragment_copies(
+            'q = """r(cell, label) AS (SELECT key, key FROM dense UNION\n'
+            '  SELECT e.dst, r.label FROM r JOIN edges e ON e.src = r.cell)"""\n'
+        )
 
     def test_pair_count_relation_is_not_an_edge_copy(self):
         """ext_assoc_rules keeps the pair count: not the edge relation."""

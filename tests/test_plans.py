@@ -864,25 +864,26 @@ class TestSession7Plans:
         assert plan.count("Exchange hashpartitioning") == 1, plan
         assert plan.count("Window ") == 1, plan
 
-    def test_star_contraction_components_keyed_only(self, spark, sf_dir):
-        """Every star round is edge-keyed groupBy + join: no cartesian,
-        no single-partition exchange. At test SF the default cutoff
-        routes the whole graph through the bounded local union-find
-        (r05), so the distributed shape is asserted with cutoff=0 and
-        the two paths must agree row-for-row."""
-        from proto_to_avro_ql_spark.operators.clustering import (
-            star_contraction_components,
-        )
+    def test_connected_components_keyed_only(self, spark, sf_dir, monkeypatch):
+        """Every star round is edge-keyed window + distinct: no
+        cartesian, no single-partition exchange. At test SF the default
+        cutoff routes the whole graph through the bounded local
+        union-find (r05), so the distributed shape is asserted with
+        LOCAL_CUTOFF patched to 0 and the two paths must agree
+        row-for-row."""
+        from proto_to_avro_ql_spark.operators import clustering as CL
         from proto_to_avro_ql_spark.operators.graphs import copurchase_edges
 
         e0 = copurchase_edges(spark, sf_dir, min_support=2).select(
             F.col("u").alias("id_a"), F.col("v").alias("id_b")
         )
-        dist = star_contraction_components(e0, local_cutoff=0)
+        with monkeypatch.context() as m:
+            m.setattr(CL, "LOCAL_CUTOFF", 0)
+            dist = CL.connected_components(e0)
         plan = physical_plan(dist)
         assert "CartesianProduct" not in plan, plan
         assert "Exchange SinglePartition" not in plan, plan
-        local = star_contraction_components(e0)
+        local = CL.connected_components(e0)
         assert sorted(map(tuple, dist.collect())) == sorted(
             map(tuple, local.collect())
         )
@@ -906,25 +907,27 @@ class TestSession7Plans:
         assert "BroadcastHashJoin" in plan, plan
         assert "CartesianProduct" not in plan, plan
 
-    def test_kcore_semi_joins_keyed(self, spark, sf_dir):
+    def test_kcore_semi_joins_keyed(self, spark, sf_dir, monkeypatch):
         """Distributed peeling rounds are degree aggregates + LeftSemi
         equi joins — never cartesian, never single-partition. At test
-        SF the default local_cutoff routes the whole graph through the
+        SF the default LOCAL_CUTOFF routes the whole graph through the
         bounded numpy tail (the r05 fix for scheduling-bound late
-        rounds), so the distributed shape is asserted by forcing
-        cutoff=0, and the two paths must agree row-for-row."""
-        from proto_to_avro_ql_spark.operators.clustering import kcore_nodes
+        rounds), so the distributed shape is asserted with the cutoff
+        patched to 0, and the two paths must agree row-for-row."""
+        from proto_to_avro_ql_spark.operators import clustering as CL
         from proto_to_avro_ql_spark.operators.graphs import copurchase_edges
 
         e0 = copurchase_edges(spark, sf_dir, min_support=2).select(
             F.col("u").alias("id_a"), F.col("v").alias("id_b")
         )
-        dist = kcore_nodes(e0, k=3, local_cutoff=0)
+        with monkeypatch.context() as m:
+            m.setattr(CL, "LOCAL_CUTOFF", 0)
+            dist = CL.kcore_nodes(e0, k=3)
         plan = physical_plan(dist)
         assert "LeftSemi" in plan, plan
         assert "CartesianProduct" not in plan, plan
         assert "Exchange SinglePartition" not in plan, plan
-        local = kcore_nodes(e0, k=3)  # default cutoff: numpy tail
+        local = CL.kcore_nodes(e0, k=3)  # default cutoff: numpy tail
         assert sorted(map(tuple, dist.collect())) == sorted(
             map(tuple, local.collect())
         )

@@ -604,13 +604,14 @@ class TestGraphProperties:
 
 
 class TestUniformCCSemantics:
-    """Round-7: with on_round_cap='raise' the engine contract is 'exact
-    fixpoint or loud error' on EVERY path. Fuzz arbitrary small graphs
-    (self-loops, duplicates, hubs, disconnected chains) through all
-    three component paths — local union-find (default cutoffs),
-    distributed label propagation, distributed star contraction — and
-    an independent Python reachability reference; all four must agree
-    exactly. Any silent-truncation regression on any path breaks this."""
+    """The engine contract is 'exact fixpoint or loud error' on EVERY
+    path. Fuzz arbitrary small graphs (self-loops, duplicates, hubs,
+    disconnected chains) through both component paths — local
+    union-find (default cutoff) and distributed star contraction
+    (LOCAL_CUTOFF patched to 0) — on long and on string keys
+    (``cast=None``), against an independent Python reachability
+    reference; all must agree exactly. Any silent-truncation
+    regression on any path breaks this."""
 
     @given(
         edges=st.lists(
@@ -627,10 +628,12 @@ class TestUniformCCSemantics:
         deadline=None,
         suppress_health_check=[HealthCheck.function_scoped_fixture],
     )
-    def test_all_paths_agree_with_reachability_reference(self, spark, edges):
+    def test_all_paths_agree_with_reachability_reference(
+        self, spark, monkeypatch, edges
+    ):
+        from proto_to_avro_ql_spark.operators import clustering as CL
         from proto_to_avro_ql_spark.operators.clustering import (
             connected_components,
-            star_contraction_components,
         )
 
         # Python reference: min reachable id per node (BFS closure),
@@ -651,34 +654,34 @@ class TestUniformCCSemantics:
             expected[start] = min(seen)
 
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        local = {
-            (r["id"], r["cluster_id"])
-            for r in connected_components(pairs).collect()
-        }
-        # distributed paths forced past the cutoff; max_iter generous
-        # enough that the exact fixpoint is reachable (12 nodes)
-        lp = {
-            (r["id"], r["cluster_id"])
-            for r in connected_components(
-                pairs, max_iter=15, local_cutoff=0
-            ).collect()
-        }
-        star = {
-            (r["id"], r["cluster_id"])
-            for r in star_contraction_components(
-                pairs, local_cutoff=0
-            ).collect()
-        }
+        # string keys: zero-padded so that their order is the ids' order
+        spairs = spark.createDataFrame(
+            [(f"n{u:02d}", f"n{v:02d}") for u, v in edges],
+            "id_a string, id_b string",
+        )
         want = set(expected.items())
+        swant = {(f"n{u:02d}", f"n{c:02d}") for u, c in want}
+
+        def run(p, cast="long"):
+            return {
+                (r["id"], r["cluster_id"])
+                for r in connected_components(p, cast=cast).collect()
+            }
+
+        local, slocal = run(pairs), run(spairs, cast=None)
+        with monkeypatch.context() as m:
+            m.setattr(CL, "LOCAL_CUTOFF", 0)
+            star, sstar = run(pairs), run(spairs, cast=None)
         assert local == want, ("local", sorted(local), sorted(want))
-        assert lp == want, ("label-prop", sorted(lp), sorted(want))
         assert star == want, ("star", sorted(star), sorted(want))
+        assert slocal == swant, ("local str", sorted(slocal), sorted(swant))
+        assert sstar == swant, ("star str", sorted(sstar), sorted(swant))
 
 
 class TestKCoreProperties:
     """Fuzz iterative k-core peeling on arbitrary small graphs against
     a Python reference, on BOTH paths (local numpy tail and the
-    distributed rounds forced past the cutoff) — complements
+    distributed rounds, LOCAL_CUTOFF patched to 0) — complements
     TestUniformCCSemantics for the third iterative graph operator."""
 
     @given(
@@ -697,7 +700,8 @@ class TestKCoreProperties:
         deadline=None,
         suppress_health_check=[HealthCheck.function_scoped_fixture],
     )
-    def test_kcore_matches_reference_peel(self, spark, edges, k):
+    def test_kcore_matches_reference_peel(self, spark, monkeypatch, edges, k):
+        from proto_to_avro_ql_spark.operators import clustering as CL
         from proto_to_avro_ql_spark.operators.clustering import kcore_nodes
 
         simple = {(min(u, v), max(u, v)) for u, v in edges if u != v}
@@ -725,10 +729,12 @@ class TestKCoreProperties:
             (r["id"], r["core_degree"])
             for r in kcore_nodes(pairs, k=k).collect()
         }
-        dist = {
-            (r["id"], r["core_degree"])
-            for r in kcore_nodes(pairs, k=k, local_cutoff=0).collect()
-        }
+        with monkeypatch.context() as m:
+            m.setattr(CL, "LOCAL_CUTOFF", 0)
+            dist = {
+                (r["id"], r["core_degree"])
+                for r in kcore_nodes(pairs, k=k).collect()
+            }
         want = set(expected.items())
         assert local == want, ("local", sorted(local), sorted(want))
         assert dist == want, ("distributed", sorted(dist), sorted(want))

@@ -33,9 +33,11 @@ R6 shared-fragment copy (source only, ratchet at zero): each
    functions/text.py and functions/portable.py; the daily revenue
    cents in operators/timeseries.py; the co-purchase self-join and the
    label-propagation vote in operators/graphs.py; the held-out
-   (is_eval, lang, v, w) bigram aggregate in operators/lexical.py. A
-   hand-written copy anywhere else in the package can drift from its
-   twin (the RE2-vs-Java vertical-tab split was such a drift).
+   (is_eval, lang, v, w) bigram aggregate in operators/lexical.py; the
+   min-label connected-components closure (local union-find and
+   recursive CTE) in operators/clustering.py. A hand-written copy
+   anywhere else in the package can drift from its twin (the
+   RE2-vs-Java vertical-tab split was such a drift).
 R7 session-conf write (source only, ratchet at the allowlist): a
    ``conf.set``/``conf.unset`` in a package function changes the
    caller's session. Only the (module, function) pairs in
@@ -268,6 +270,12 @@ FRAGMENTS: dict[str, tuple[tuple[str, ...], re.Pattern]] = {
     "held-out bigram aggregate": (("proto_to_avro_ql_spark/operators/lexical.py",), re.compile(
         r'groupBy\(\s*"is_eval",\s*"lang",\s*"v",\s*"w"\s*\)'
         r"|(?i:SELECT is_eval, lang, v, w, COUNT\(\*\))"
+    )),
+    # a union-find loop | the closure's recursive step over sym(src, dst)
+    "min-label closure": (("proto_to_avro_ql_spark/operators/clustering.py",), re.compile(
+        r"while\s+parent(?:\[|\.get\()"
+        r"|(?i:SELECT\s+(\w+)\.src,\s*(\w+)\.lab\s+FROM\s+\w+\s+\1\s+"
+        r"JOIN\s+\2\s+ON\s+\2\.id\s*=\s*\1\.dst)"
     )),
 }
 
