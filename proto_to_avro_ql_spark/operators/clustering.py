@@ -19,13 +19,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-# Graphs with at most this many edges run on the driver: the collected
-# edge list is two keys per row, a few MB. On such a graph every
-# distributed round is pure job scheduling, while the whole local
-# fixpoint takes milliseconds.
+# Inputs with at most this many rows run on the driver (see
+# ``local_rows``): the collected edge or word list is a few fields per
+# row, a few MB. On such an input every distributed round is pure job
+# scheduling, while the whole local loop takes milliseconds. It is the
+# only threshold: patching it to 0 forces every distributed path.
 LOCAL_CUTOFF = 200_000
 CC_MAX_ROUNDS = 12
 KCORE_MAX_ROUNDS = 16
+
+
+def local_rows(df: DataFrame) -> list | None:
+    """The collected rows of ``df`` when it holds at most
+    ``LOCAL_CUTOFF`` rows, else ``None``: the one size guard in front
+    of every driver-side tail (connected components, BPE training,
+    label propagation). One ``limit(cutoff + 1)`` action both sizes
+    and collects, so a small input is read once and a large one stops
+    after ``cutoff + 1`` rows."""
+    rows = df.limit(LOCAL_CUTOFF + 1).collect()
+    return rows if len(rows) <= LOCAL_CUTOFF else None
 
 
 def _round_cap_error(algo: str, cap_name: str, cap: int) -> ValueError:
@@ -138,18 +150,17 @@ def connected_components(pairs: DataFrame, cast: str | None = "long") -> DataFra
     raises."""
     ua = F.col("id_a").cast(cast) if cast else F.col("id_a")
     vb = F.col("id_b").cast(cast) if cast else F.col("id_b")
-    # persist the input pairs: the node universe AND the initial edge
-    # relation both branch off them — uncached, an expensive upstream
-    # (e.g. the co-purchase self-join) would evaluate twice
+    # persist the input pairs: above the cutoff the node universe AND
+    # the initial edge relation both branch off them (and reuse the
+    # partitions the size guard already read) — uncached, an expensive
+    # upstream (e.g. the co-purchase self-join) would evaluate twice
     raw = pairs.select(ua.alias("u"), vb.alias("v")).persist()
-    if raw.count() <= LOCAL_CUTOFF:
-        # raw (not the oriented distinct relation) is collected so
-        # self-loop-only nodes keep their row in the node universe
-        pdf = raw.toPandas()
+    # raw (not the oriented distinct relation) is collected so
+    # self-loop-only nodes keep their row in the node universe
+    rows = local_rows(raw)
+    if rows is not None:
         raw.unpersist()
-        return local_components(
-            pairs.sparkSession, zip(pdf["u"], pdf["v"]), raw.schema["u"].dataType
-        )
+        return local_components(pairs.sparkSession, rows, raw.schema["u"].dataType)
     nodes = raw.select("u").unionAll(raw.select(F.col("v").alias("u"))).distinct()
     edges = (
         raw.where(F.col("u") != F.col("v"))

@@ -15,7 +15,8 @@ oracles embed, so the relation is written once per engine.
 The `queries()` contract stays independent — entries still EXECUTE
 per-entry (no cross-entry caching here); only the definition is shared.
 Caching decisions stay at call sites, where reuse within one plan is
-visible.
+visible, except for the adjacency that ``label_propagation`` builds and
+persists itself.
 
 Scale shape: the self-join key is the order id, so baskets co-locate on
 one shuffle; pair work is quadratic per order ONLY (bounded by basket
@@ -115,14 +116,33 @@ def copurchase_edges_sql(name: str, min_support: int) -> str:
        )"""
 
 
-def label_propagation(adj: DataFrame, rounds: int) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
     """(node, label) after ``rounds`` synchronous label-propagation
-    rounds over the symmetric adjacency ``adj`` (node, nbr). Every node
+    rounds over the undirected edges ``edges`` (u, v). Every node
     starts with its own id; each round it adopts the label most
-    frequent among its neighbours, the smallest label on a tie. Pass
-    ``adj`` cached: every round joins it."""
+    frequent among its neighbours, the smallest label on a tie. A
+    duplicate edge counts once per copy and a self-loop makes a node
+    its own neighbour twice, as in the symmetric adjacency (node, nbr)
+    that ``label_propagation_sql`` reads.
+
+    Up to ``clustering.LOCAL_CUTOFF`` edges the rounds run on the
+    collected edge list; above it every round is one neighbour-label
+    join, one (node, label) count and one per-node argmax window over
+    the adjacency, which this operator builds and persists."""
     from pyspark.sql import Window
 
+    from proto_to_avro_ql_spark.operators import clustering as CL
+
+    rows = CL.local_rows(edges.select("u", "v"))
+    if rows is not None:
+        return _local_label_propagation(
+            edges.sparkSession, rows, rounds, edges.schema["u"].dataType
+        )
+    adj = (
+        edges.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
+        .unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
+        .persist()  # every round joins it
+    )
     labels = adj.select("node").distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -139,6 +159,30 @@ def label_propagation(adj: DataFrame, rounds: int) -> DataFrame:
             .select("node", "label")
         )
     return labels
+
+
+def _local_label_propagation(spark, edges, rounds: int, key_type) -> DataFrame:
+    """The label-propagation rounds over a collected (u, v) edge list;
+    Python's ``<`` on the keys is Spark's order on them."""
+    from collections import Counter
+
+    from pyspark.sql.types import StructField, StructType
+
+    nbrs: dict = {}
+    for u, v in edges:
+        nbrs.setdefault(u, []).append(v)
+        nbrs.setdefault(v, []).append(u)
+    labels = {n: n for n in nbrs}
+    for _ in range(rounds):
+        new = {}
+        for n, ns in nbrs.items():
+            c = Counter(labels[m] for m in ns)
+            new[n] = min(c, key=lambda lab: (-c[lab], lab))
+        labels = new
+    schema = StructType(
+        [StructField("node", key_type, True), StructField("label", key_type, True)]
+    )
+    return spark.createDataFrame(list(labels.items()), schema)
 
 
 def label_propagation_sql(rounds: int) -> str:

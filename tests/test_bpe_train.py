@@ -12,7 +12,9 @@ SQL, no replace trick) from the documented algorithm and pins:
    single-separator formulation provably deviates — back-to-back
    alternating runs, multi-char symbols);
 2. the full entry's merge table equals the Python reference trained on
-   the same corpus, re-derived here with pandas (not Spark).
+   the same corpus, re-derived here with pandas (not Spark), on the
+   driver-side tail and on the distributed loop (``LOCAL_CUTOFF``
+   patched to 0), including a corpus whose argmax ties at most steps.
 """
 
 from __future__ import annotations
@@ -21,8 +23,10 @@ import random
 import re
 
 import duckdb
+import pytest
 
 from proto_to_avro_ql_spark.entry_queries import QUERIES
+from proto_to_avro_ql_spark.operators import clustering as CL
 
 SF = "/root/testdata/sf0.001"
 SEP = "·"
@@ -120,28 +124,61 @@ class TestReplaceMergeEqualsGreedyMerge:
             assert replace_merge(toks, x, y) == ref_merge(toks, x, y)
 
 
+def sf_word_counts() -> dict[str, int]:
+    """Independent corpus path: DuckDB reads the parquet, Python does
+    the normalize/tokenize (mirroring normalize_text's documented
+    lower/collapse/trim semantics)."""
+    texts = [
+        r[0]
+        for r in duckdb.connect()
+        .execute(f"SELECT text FROM '{SF}/documents.parquet'")
+        .fetchall()
+    ]
+    wc: dict[str, int] = {}
+    for t in texts:
+        for tok in re.sub(r"\s+", " ", t.lower()).strip().split(" "):
+            if tok and re.fullmatch(r"[a-z0-9]+", tok):
+                wc[tok] = wc.get(tok, 0) + 1
+    return wc
+
+
+def merge_table(spark, sf_dir: str) -> list[tuple[int, str, str, int]]:
+    return [
+        (r["step"], r["merge_left"], r["merge_right"], r["freq"])
+        for r in QUERIES["ext_bpe_train"](spark, sf_dir).collect()
+    ]
+
+
 class TestEntryAgainstPythonReference:
     def test_merge_table_matches(self, spark):
-        # Independent corpus path: DuckDB reads the parquet, Python does
-        # the normalize/tokenize (mirroring normalize_text's documented
-        # lower/collapse/trim semantics), and ref_bpe trains.
-        texts = [
-            r[0]
-            for r in duckdb.connect()
-            .execute(f"SELECT text FROM '{SF}/documents.parquet'")
-            .fetchall()
-        ]
+        assert merge_table(spark, SF) == ref_bpe(sf_word_counts(), 8)
+
+    def test_distributed_merge_table_matches(self, spark, monkeypatch):
+        monkeypatch.setattr(CL, "LOCAL_CUTOFF", 0)
+        assert merge_table(spark, SF) == ref_bpe(sf_word_counts(), 8)
+
+
+# Step 2 ties at freq 2 between (a, 0</w>), (a, b</w>) and (c, d</w>),
+# broken on the right symbol ('0' < 'b'); steps 5-8 tie at freq 1
+# between many pairs; '0' < '<' < 'a' puts digits before </w>.
+TIE_DOCS = ["ab ab cd cd ba a0 a0", "a aaaa aaa xyxy yx 12 21"]
+
+
+class TestBothPathsAgainstPythonReference:
+    @pytest.mark.parametrize("distributed", [False, True], ids=["local", "distributed"])
+    def test_tie_corpus(self, spark, tmp_path, monkeypatch, distributed):
+        import pandas as pd
+
+        pd.DataFrame(
+            {"doc_id": range(len(TIE_DOCS)), "text": TIE_DOCS}
+        ).to_parquet(tmp_path / "documents.parquet")
         wc: dict[str, int] = {}
-        for t in texts:
-            for tok in re.sub(r"\s+", " ", t.lower()).strip().split(" "):
-                if tok and re.fullmatch(r"[a-z0-9]+", tok):
-                    wc[tok] = wc.get(tok, 0) + 1
-        ref = ref_bpe(wc, 8)
-        got = [
-            (r["step"], r["merge_left"], r["merge_right"], r["freq"])
-            for r in QUERIES["ext_bpe_train"](spark, SF).collect()
-        ]
-        assert got == ref
+        for t in TIE_DOCS:
+            for tok in t.split(" "):
+                wc[tok] = wc.get(tok, 0) + 1
+        if distributed:
+            monkeypatch.setattr(CL, "LOCAL_CUTOFF", 0)
+        assert merge_table(spark, str(tmp_path)) == ref_bpe(wc, 8)
 
 
 class TestEncodeAgainstPythonReference:

@@ -800,13 +800,30 @@ class TestSession6Plans:
         assert "Exchange" not in plan, plan
         assert "EvalPython" not in plan, plan
 
-    def test_label_propagation_reuses_cached_adjacency(self, spark, sf_dir):
-        """Three rounds iterate over the CACHED adjacency relation with
-        keyed joins — no cartesian, no single-partition stage."""
+    def test_label_propagation_reuses_cached_adjacency(
+        self, spark, sf_dir, monkeypatch
+    ):
+        """Three distributed rounds iterate over the CACHED adjacency
+        relation with keyed joins — no cartesian, no single-partition
+        stage. At test SF the default cutoff routes the graph through
+        the local tail, so the distributed shape is asserted with
+        LOCAL_CUTOFF patched to 0."""
+        from proto_to_avro_ql_spark.operators import clustering as CL
+
+        monkeypatch.setattr(CL, "LOCAL_CUTOFF", 0)
         plan = self._plan(spark, sf_dir, "ext_label_propagation")
         assert "InMemoryTableScan" in plan, plan
         assert "CartesianProduct" not in plan, plan
         assert "Exchange SinglePartition" not in plan, plan
+
+    def test_label_propagation_local_tail_has_no_rounds(self, spark, sf_dir):
+        """Below the cutoff the rounds run on the driver: the labels are
+        a collected leaf, so the plan keeps no per-round argmax window
+        and no per-round join — one exchange for the community count."""
+        plan = self._plan(spark, sf_dir, "ext_label_propagation")
+        assert "Window" not in plan, plan
+        assert "Join" not in plan, plan
+        assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
 class TestSession7Plans:
@@ -1283,6 +1300,10 @@ class TestRound6Plans:
         shuffle for the whole graph family)."""
         from proto_to_avro_ql_spark.operators.graphs import copurchase_edges
 
+        # earlier tests build entries that cache these edges (and a local
+        # tail materializes that cache at build time); a cached copy would
+        # print its own initial AND final plan in place of the build
+        spark.catalog.clearCache()
         df = copurchase_edges(spark, sf_dir, min_support=2)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Exchange hashpartitioning") == 2, plan

@@ -658,24 +658,32 @@ def ref_label_propagation(edges: list[tuple[int, int]], rounds: int) -> dict[int
 
 
 # A path (every inner node sees a 1-1 tie), a triangle hanging off it,
-# a 4-cycle (2-2 ties) and a star whose hub is not the smallest id.
+# a 4-cycle (2-2 ties) and a star whose hub is not the smallest id;
+# the duplicate (2, 3) and the self-loop (20, 20) each change every
+# round's labels, so both must count once per copy, as in the union.
 LPA_EDGES = [
     (1, 2), (2, 3), (3, 4), (4, 5), (5, 6),
     (6, 7), (6, 8), (7, 8),
     (10, 11), (11, 12), (12, 13), (10, 13),
     (20, 9), (20, 21), (20, 22), (20, 23),
+    (2, 3), (20, 20),
 ]
 
 
 class TestLabelPropagationAgainstPython:
-    @pytest.mark.parametrize("rounds", [1, 2, 3])
-    def test_spark_matches_python(self, spark, rounds):
+    @pytest.mark.parametrize(
+        "rounds, distributed",
+        [pytest.param(r, False, id=str(r)) for r in (1, 2, 3)]
+        + [pytest.param(r, True, id=f"distributed-{r}") for r in (1, 2, 3)],
+    )
+    def test_spark_matches_python(self, spark, monkeypatch, rounds, distributed):
+        from proto_to_avro_ql_spark.operators import clustering as CL
         from proto_to_avro_ql_spark.operators import graphs as GR
 
-        sym = LPA_EDGES + [(v, u) for u, v in LPA_EDGES]
-        adj = spark.createDataFrame(sym, "node long, nbr long").cache()
-        got = {r["node"]: r["label"] for r in GR.label_propagation(adj, rounds).collect()}
-        adj.unpersist()
+        if distributed:
+            monkeypatch.setattr(CL, "LOCAL_CUTOFF", 0)
+        edges = spark.createDataFrame(LPA_EDGES, "u long, v long")
+        got = {r["node"]: r["label"] for r in GR.label_propagation(edges, rounds).collect()}
         assert got == ref_label_propagation(LPA_EDGES, rounds)
 
     @pytest.mark.parametrize("rounds", [1, 2, 3])

@@ -117,6 +117,9 @@ ALLOWED: dict[str, str] = {
         "simhash signature table (pigeonhole band branches)",
     "proto_to_avro_ql_spark/operators/dedup.py:incremental_lsh_admit":
         "banded corpus signatures (batch-vs-corpus band joins)",
+    "proto_to_avro_ql_spark/operators/graphs.py:label_propagation":
+        "symmetric adjacency (every distributed LPA round joins it; the "
+        "returned labels plan reads it, so it cannot be released here)",
     "proto_to_avro_ql_spark/operators/lexical.py:bm25_search":
         "per-doc token aggregate (df join + doc-length stats broadcast)",
     "proto_to_avro_ql_spark/operators/lexical.py:heldout_bigrams":
@@ -269,16 +272,9 @@ ALLOWED: dict[str, str] = {
     "proto_to_avro_ql_spark/entry_registry.py:q_ext_cuped": _SHARED,
     "proto_to_avro_ql_spark/entry_registry.py:q_ext_dbscan_grid":
         "cell counts (dense filter + point labeling)",
-    "proto_to_avro_ql_spark/entry_registry.py:_bpe_word_freq":
-        "distinct-word frequency relation (all k merge iterations train "
-        "on it — the corpus is read once)",
-# _bpe_learn's former persist is now a bounded 1-row collect +
-# createDataFrame leaf (round 12; round 11 used localCheckpoint):
-# persist made EXECUTION linear in k but left the analyzed plan
-# 2^k nodes (m_i's plan nests sym_i's nests m_{i-1}'s...), costing
-# seconds of Catalyst re-analysis per downstream action; the
-# driver-side leaf truncates the plan without localCheckpoint's
-# executor-block-loss exposure. Not a cache site anymore.
+# _bpe_learn persists the word-frequency relation only on its
+# distributed path and releases it once the k rules are collected
+# (paired); the rules are literals, so no plan references the cache.
     "proto_to_avro_ql_spark/entry_registry.py:q_ext_bpe_encode":
         "per-(lang, word) counts (the one corpus pass; the global "
         "word-frequency relation and the encode chain both derive "
@@ -317,8 +313,6 @@ ALLOWED: dict[str, str] = {
         "marginals + dense grid branch off it (one fact scan)",
     "proto_to_avro_ql_spark/entry_registry.py:q_ext_ks_test":
         "totals, running sums, and band totals share it",
-    "proto_to_avro_ql_spark/entry_registry.py:q_ext_label_propagation":
-        "adjacency reused every LPA round",
     "proto_to_avro_ql_spark/entry_registry.py:q_ext_mann_kendall":
         "pairs + marginals share it",
     "proto_to_avro_ql_spark/entry_registry.py:q_ext_mann_whitney":
@@ -328,8 +322,8 @@ ALLOWED: dict[str, str] = {
     "proto_to_avro_ql_spark/entry_registry.py:q_ext_minhash_merge":
         "signature agg + set sizes + exact intersection share it",
     "proto_to_avro_ql_spark/entry_registry.py:q_ext_modularity":
-        "edges (LPA rounds + degree agg); labels (intra-edge join, u "
-        "AND v sides, + D_c rollup)",
+        "edges (LPA input + m + intra-edge join + degrees); labels "
+        "(intra-edge join, u AND v sides, + D_c rollup)",
     "proto_to_avro_ql_spark/entry_registry.py:q_ext_mutual_information": _SHARED,
     "proto_to_avro_ql_spark/entry_registry.py:q_ext_negative_sampling":
         "positive pairs (anti-join + rate calibration)",

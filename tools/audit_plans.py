@@ -129,14 +129,8 @@ ALLOWED: dict[str, set[str]] = {
     # bigram) and onto the per-doc copies arithmetic (resample);
     # resample's global window/exchange is the #bands-row offset
     # relation of banded_global_cumsum (bounded: docs/4096).
-    # round 10: BPE training — 8 chained 1-row merge-rule broadcasts
-    # (the allowlisted stat-join shape, one per learned rule).
-    "ext_bpe_encode": {'bnl_join'},
-    "ext_bpe_train": {'bnl_join'},
-    # round 11: same shapes — bpe_vocab chains the 8 1-row merge-rule
-    # broadcasts; good_turing crossJoins the 1-row totals; lm_ppl_filter
+    # round 11: good_turing crossJoins the 1-row totals; lm_ppl_filter
     # crossJoins the 1-row T and the 1-row (n_docs, Σavg) decision row.
-    "ext_bpe_vocab": {'bnl_join'},
     "ext_good_turing": {'bnl_join'},
     "ext_lm_ppl_filter": {'bnl_join'},
     "ext_dsir_bigram": {'bnl_join'},

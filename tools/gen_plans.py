@@ -101,7 +101,7 @@ AUDIT = {
     "ext_attribution": "integer-ledger attribution (user join + pid window)",
     "ext_snapshot_diff": "CDC diff (full-outer on id, hashes shuffle)",
     "ext_gopher_rules": "quality gate (zero exchanges, scan-stage only)",
-    "ext_label_propagation": "3-round LPA (cached adjacency, keyed rounds)",
+    "ext_label_propagation": "3-round LPA (driver-side rounds over the collected edges; keyed rounds over a cached adjacency above LOCAL_CUTOFF)",
     # round 3 session 5 additions
     "ext_cc_starcontraction": "star-contraction CC (log-round, edge-keyed rounds)",
     "ext_event_paths": "journey paths (ordering inside the agg, TakeOrdered)",
@@ -230,8 +230,8 @@ AUDIT = {
     # round 9
     "ext_dsir_weights": "DSIR selection (bucketed token counts, broadcast ratios, TakeOrdered)",
     "ext_dsir_bigram": "DSIR bigram features (map-side zip_with pairing, same scoring tail)",
-    "ext_bpe_train": "BPE merge training (word-freq relation, k chained pair-count aggregates + broadcast rules)",
-    "ext_bpe_encode": "BPE encoding (train chain + k broadcast-rule replaces over (lang, word) counts)",
+    "ext_bpe_train": "BPE merge training (one word-freq pass, driver-side merge loop; k pair-count aggregates above LOCAL_CUTOFF)",
+    "ext_bpe_encode": "BPE encoding (trained rules as k literal replaces over (lang, word) counts)",
     "ext_kneser_ney": "KN bigram LM (one corpus partial-agg, vocab-bounded joins, broadcast T)",
     "ext_kneser_ney_holdout": "held-out KN (split in the one partial-agg, vocab-bounded LEFT joins, OOV floor)",
     "ext_nb_langid": "NB lang-id (one bucket partial-agg, broadcast LxB model, per-doc argmax window)",
