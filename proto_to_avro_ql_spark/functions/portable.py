@@ -118,6 +118,25 @@ def eval_split_duckdb_sql(key: str) -> str:
     return f"({mix31_duckdb_sql(key)}) % 5 = 0"
 
 
+# ---------------------------------------------------------------------------
+# Event time (Spark only): the parquet timestamps read as timestamp_ntz,
+# which ``unix_micros`` rejects. Arithmetic on the NTZ epoch reads no
+# session zone; the oracles use DuckDB's own ``epoch_us``.
+# ---------------------------------------------------------------------------
+
+_NTZ_EPOCH = "TIMESTAMP_NTZ'1970-01-01 00:00:00'"
+
+
+def epoch_micros(c: str) -> str:
+    """Microseconds from the epoch to the timestamp_ntz ``c`` (BIGINT)."""
+    return f"timestampdiff(MICROSECOND, {_NTZ_EPOCH}, {c})"
+
+
+def ntz_from_micros(c: str) -> str:
+    """The timestamp_ntz ``c`` epoch microseconds after the epoch."""
+    return f"timestampadd(MICROSECOND, {c}, {_NTZ_EPOCH})"
+
+
 def str_code_spark_sql(col: str) -> str:
     """Polynomial code-point fold of a string column — Spark spelling.
     NULL/empty fold to the bare seed (the engines disagree on what a

@@ -48,19 +48,13 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """src_parquet_scan: columnar scan; filters/column pruning push down
     via Catalyst (check ``.explain``: PushedFilters / ReadSchema).
 
-    Split sizing is Spark's own. The events table's ``ts`` (parquet
-    TIMESTAMP(MICROS), read as timestamp_ntz) is cast to a session-tz
-    TimestampType column. Session timezone is pinned to UTC for every
-    read: timestamp→date casts and date_format are session-tz-sensitive,
-    and the oracle (DuckDB) renders wall-clock values — UTC keeps the
-    two engines in agreement regardless of the host/driver session
+    Split sizing is Spark's own. The parquet timestamps (events ``ts``,
+    ``o_orderdate``, ``l_shipdate``) are stored without a zone, so they
+    read as timestamp_ntz: the wall clock DuckDB's TIMESTAMP holds, and
+    no cast, date rendering or truncation of them reads the session
     timezone.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 # ensure_min_parallelism width-probe memo (r12 VERDICT #7):

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from proto_to_avro_ql_spark.functions.portable import ntz_from_micros
 from proto_to_avro_ql_spark.functions.stable import dec_avg, dec_sum
 
 # Stateful streaming queries pin their state-partition count from
@@ -69,8 +70,13 @@ EVENTS_SCHEMA = T.StructType(
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet (file-source streaming — the
-    local analog of a Kafka/Kinesis source; swap `.format` in prod)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    local analog of a Kafka/Kinesis source; swap `.format` in prod).
+
+    ``ts`` is the instant ``timestamp_micros(epoch micros)``, not the
+    batch reader's timestamp_ntz: a watermark needs a zoned timestamp.
+    Its epoch micros are the stored wall clock read as UTC, so
+    rendering it goes through ``portable.ntz_from_micros``, never the
+    session timezone."""
     # file stream sources monitor a directory; select just the events
     # table out of the shared sf_dir with a glob filter.
     raw = (
@@ -101,7 +107,9 @@ def stream_tumbling_window_agg(
             dec_avg("value", 6).alias("avg_value"),
         )
         .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            F.date_format(
+                F.expr(ntz_from_micros("unix_micros(w.start)")), "yyyy-MM-dd HH:mm:ss"
+            ).alias("window_start"),
             "event_type",
             "n_events",
             "sum_value",

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from proto_to_avro_ql_spark.functions.portable import epoch_micros, ntz_from_micros
 from proto_to_avro_ql_spark.functions.stable import dec_sum
 from proto_to_avro_ql_spark.streaming.events import (
     stream_events,
@@ -46,7 +47,10 @@ def run_stream_to_partitioned_parquet(
     ev = stream_events(spark, sf_dir).withWatermark("ts", "2 hours")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        agg = windowed_agg(batch_df, duration)
+        # the stream's ts is an instant; window it as the batch reader's
+        # timestamp_ntz so the partition names are the stored wall clock
+        ntz = batch_df.withColumn("ts", F.expr(ntz_from_micros("unix_micros(ts)")))
+        agg = windowed_agg(ntz, duration)
         # dynamic overwrite: only partitions present in this batch are
         # replaced — a replayed batch converges to the same state.
         agg.write.mode("overwrite").option(
@@ -109,13 +113,15 @@ def run_stream_append_parquet(
 
     from proto_to_avro_ql_spark.sources.io import read_table
 
-    ev_batch = read_table(spark, sf_dir, "events")
+    # Staged with ts as epoch micros, and read back as the instant
+    # stream_events builds, so the watermark has a zoned timestamp.
+    ev_batch = read_table(spark, sf_dir, "events").withColumn(
+        "ts", F.expr(epoch_micros("ts"))
+    )
     lo, hi = ev_batch.agg(F.min("ts"), F.max("ts")).first()
-    span_s = max((hi - lo).total_seconds(), 1.0)
-    lo_epoch = int(lo.timestamp())
+    span_us = max(hi - lo, 1_000_000)
     slice_expr = F.least(
-        F.lit(n_files - 1),
-        F.floor((F.unix_timestamp("ts") - lo_epoch) / (span_s / n_files)),
+        F.lit(n_files - 1), F.floor((F.col("ts") - lo) / (span_us / n_files))
     )
     base_mtime = int(os.path.getmtime(staging)) - 2 * (n_files + flush_sentinels)
     # All slices + sentinels staged in ONE job: a single dynamic-
@@ -131,9 +137,11 @@ def run_stream_append_parquet(
         # one future event per sentinel slice: ts beyond watermark +
         # duration past the real max, each an hour apart so every
         # sentinel batch advances the watermark again.
-        sent_ts = F.lit(hi) + F.expr(
-            f"INTERVAL {watermark} + INTERVAL {duration} "
-            f"+ INTERVAL {j + 1} HOUR"
+        sent_ts = F.expr(
+            epoch_micros(
+                f"{ntz_from_micros(str(hi))} + INTERVAL {watermark} "
+                f"+ INTERVAL {duration} + INTERVAL {j + 1} HOUR"
+            )
         )
         sent = spark.range(1).select(
             F.lit(-1 - j).cast("long").alias("event_id"),
@@ -160,6 +168,7 @@ def run_stream_append_parquet(
             .option("recursiveFileLookup", "true")
             .option("pathGlobFilter", "*.parquet")
             .parquet(staging)
+            .withColumn("ts", F.timestamp_micros("ts"))
             .withWatermark("ts", watermark)
         )
         agg = (
@@ -169,8 +178,8 @@ def run_stream_append_parquet(
                 dec_sum("value", 4).alias("sum_value"),
             )
             .select(
-                F.col("w.start").alias("window_start"),
-                F.col("w.end").alias("window_end"),
+                F.expr(ntz_from_micros("unix_micros(w.start)")).alias("window_start"),
+                F.expr(ntz_from_micros("unix_micros(w.end)")).alias("window_end"),
                 "event_type",
                 "n_events",
                 "sum_value",

@@ -11,7 +11,7 @@ from proto_to_avro_ql_spark.operators.analytics import (
 
 def _ev(spark, rows):
     return spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string, value double"
+        rows, "event_id long, ts timestamp_ntz, user_id long, event_type string, value double"
     )
 
 

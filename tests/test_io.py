@@ -58,12 +58,19 @@ class TestSinks:
         assert row.json == '{"a":1,"b":"x"}'
 
 
-class TestEventsNanos:
-    def test_ts_is_microsecond_timestamp(self, spark, sf_dir):
-        ev = read_table(spark, sf_dir, "events")
-        assert dict(ev.dtypes)["ts"] == "timestamp"
-        r = ev.orderBy("event_id").first()
-        assert r.ts.year >= 2024
+class TestTimestampsAreNtz:
+    def test_parquet_timestamps_read_as_ntz(self, spark, sf_dir):
+        """The three zone-less parquet timestamps keep their wall-clock
+        type: one rule for all of them, no cast in the reader."""
+        for table, col in (
+            ("events", "ts"),
+            ("orders", "o_orderdate"),
+            ("lineitem", "l_shipdate"),
+        ):
+            df = read_table(spark, sf_dir, table)
+            assert dict(df.dtypes)[col] == "timestamp_ntz", (table, col)
+        r = read_table(spark, sf_dir, "events").orderBy("event_id").first()
+        assert r.ts.year >= 2024 and r.ts.tzinfo is None
 
 
 class TestWidthMemo:
@@ -80,21 +87,20 @@ class TestWidthMemo:
 
 
 class TestReadersLeaveSessionConf:
-    def test_only_the_utc_pin_is_written(self, spark, sf_dir):
-        """The readers are plain readers: apart from the UTC pin, a
-        fresh session's confs are the same after reading every table
+    def test_readers_write_no_session_conf(self, spark, sf_dir):
+        """The readers are plain readers: a fresh session's confs,
+        its timezone included, are the same after reading every table
         and defining the events stream."""
         from proto_to_avro_ql_spark.sources.io import TABLES
         from proto_to_avro_ql_spark.streaming.events import stream_events
 
-        tz = "spark.sql.session.timeZone"
         fresh = spark.newSession()
-        before = {k: v for k, v in fresh.conf.getAll.items() if k != tz}
+        fresh.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+        before = fresh.conf.getAll
         for name in TABLES:
             read_table(fresh, sf_dir, name)
         stream_events(fresh, sf_dir)
-        after = {k: v for k, v in fresh.conf.getAll.items() if k != tz}
-        assert after == before
+        assert fresh.conf.getAll == before
 
 
 class TestMultimodalPlumbing:

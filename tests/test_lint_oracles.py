@@ -174,8 +174,9 @@ class TestSessionConfWritesFire:
         '    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")\n'
         "    df.sparkSession.conf.unset('spark.sql.files.maxPartitionBytes')\n"
         "\n"
-        "def read_table(spark, sf_dir, name):\n"
-        '    spark.conf.set("spark.sql.session.timeZone", "UTC")\n'
+        "@contextlib.contextmanager\n"
+        "def stream_state_partitions(spark):\n"
+        '    spark.conf.set("spark.sql.shuffle.partitions", 8)\n'
     )
 
     def test_writes_outside_allowlist_fire(self):
@@ -184,7 +185,7 @@ class TestSessionConfWritesFire:
         assert all(h.startswith("R7") for h in hits), hits
 
     def test_allowlisted_function_clean(self):
-        hits = find_conf_writes(self.SRC, "proto_to_avro_ql_spark/sources/io.py")
+        hits = find_conf_writes(self.SRC, "proto_to_avro_ql_spark/streaming/events.py")
         assert len(hits) == 2 and all("run_sink" in h for h in hits), hits
 
     def test_reads_and_options_clean(self):

@@ -1300,10 +1300,6 @@ class TestRound6Plans:
         shuffle for the whole graph family)."""
         from proto_to_avro_ql_spark.operators.graphs import copurchase_edges
 
-        # earlier tests build entries that cache these edges (and a local
-        # tail materializes that cache at build time); a cached copy would
-        # print its own initial AND final plan in place of the build
-        spark.catalog.clearCache()
         df = copurchase_edges(spark, sf_dir, min_support=2)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Exchange hashpartitioning") == 2, plan

@@ -364,7 +364,7 @@ class TestSession3Properties:
             for i, v in enumerate(vals)
         ]
         df = spark.createDataFrame(
-            rows, "event_id long, ts timestamp, user_id long, value double"
+            rows, "event_id long, ts timestamp_ntz, user_id long, value double"
         )
         got = {
             r.event_id: r.f

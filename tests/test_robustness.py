@@ -55,7 +55,7 @@ class TestEmptyInputs:
         )
 
         empty = spark.createDataFrame(
-            [], "event_id long, ts timestamp, user_id long, event_type string, value double"
+            [], "event_id long, ts timestamp_ntz, user_id long, event_type string, value double"
         )
         assert tumbling_window_agg(empty).count() == 0
         assert latest_event_per_user(empty).count() == 0
@@ -238,7 +238,7 @@ class TestEmptyInputsSession3:
         )
 
         empty = spark.createDataFrame(
-            [], "event_id long, ts timestamp, user_id long, value double"
+            [], "event_id long, ts timestamp_ntz, user_id long, value double"
         )
         assert resample_daily(empty).count() == 0
         assert (
@@ -256,7 +256,7 @@ class TestEmptyInputsSession3:
         nodocs = spark.createDataFrame([], "p_name string")
         assert fuzzy_name_matches(nodocs, "p_name").count() == 0
         noev = spark.createDataFrame(
-            [], "event_id long, ts timestamp, user_id long, event_type string, value double"
+            [], "event_id long, ts timestamp_ntz, user_id long, event_type string, value double"
         )
         row = conversion_funnel(noev).first()
         assert (row.n_users, row.n_view, row.n_click, row.n_purchase) == (0, 0, 0, 0)

@@ -91,7 +91,7 @@ class TestEwma:
             ],
             "event_id long, ts string, user_id long, event_type string,"
             " value double, props string",
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
+        ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
         path = str(tmp_path / "events.parquet")
         ev.coalesce(1).write.parquet(path)
         out = {r.event_id: r.ewma for r in
@@ -102,7 +102,7 @@ class TestEwma:
     def test_empty(self, spark, tmp_path):
         spark.createDataFrame(
             [],
-            "event_id long, ts timestamp, user_id long, event_type string,"
+            "event_id long, ts timestamp_ntz, user_id long, event_type string,"
             " value double, props string",
         ).write.parquet(str(tmp_path / "events.parquet"))
         assert QUERIES["ext_ewma"](spark, str(tmp_path)).count() == 0
@@ -402,7 +402,7 @@ class TestAuc:
             rows,
             "event_id long, ts string, user_id long, event_type string,"
             " value double, props string",
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
+        ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
         df.coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
         r = QUERIES["ext_auc"](spark, str(tmp_path)).first()
         assert r.auc == 1.0
@@ -443,7 +443,7 @@ class TestSessionEmptyInputs:
     def _empty_events(self, spark, tmp_path):
         spark.createDataFrame(
             [],
-            "event_id long, ts timestamp, user_id long, event_type string,"
+            "event_id long, ts timestamp_ntz, user_id long, event_type string,"
             " value double, props string",
         ).write.parquet(str(tmp_path / "events.parquet"))
         return str(tmp_path)
@@ -480,7 +480,7 @@ class TestCsvScan:
             ],
             "event_id long, ts string, user_id long, event_type string,"
             " value double, props string",
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
+        ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
         ev.coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
         out = {r.event_id: (r.event_type, r.value) for r in
                QUERIES["src_csv_scan"](spark, str(tmp_path)).collect()}

@@ -142,6 +142,7 @@ class TestStreamStreamJoin:
         join (the Kappa consistency check for joins)."""
         from pyspark.sql import functions as F
 
+        from proto_to_avro_ql_spark.functions.portable import epoch_micros
         from proto_to_avro_ql_spark.streaming.events import run_stream_join_to_memory
 
         streamed = {
@@ -173,7 +174,9 @@ class TestStreamStreamJoin:
                 "click_id",
                 "view_id",
                 "user_id",
-                (F.unix_micros("click_ts") - F.unix_micros("view_ts")).alias("gap_us"),
+                F.expr(f"{epoch_micros('click_ts')} - {epoch_micros('view_ts')}").alias(
+                    "gap_us"
+                ),
             )
             .collect()
         }

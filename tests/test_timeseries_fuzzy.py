@@ -11,7 +11,7 @@ from proto_to_avro_ql_spark.operators.timeseries import forward_fill, resample_d
 
 def _events(spark, rows):
     return spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, value double"
+        rows, "event_id long, ts timestamp_ntz, user_id long, value double"
     )
 
 

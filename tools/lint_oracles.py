@@ -41,10 +41,13 @@ R6 shared-fragment copy (source only, ratchet at zero): each
 R7 session-conf write (source only, ratchet at the allowlist): a
    ``conf.set``/``conf.unset`` in a package function changes the
    caller's session. Only the (module, function) pairs in
-   CONF_WRITERS may write: the UTC pins in the two readers and the
-   scoped save/restore of the streaming state width. Anything else
-   takes a per-operation option (``.option(...)`` on the write) or a
-   value the caller passes.
+   CONF_WRITERS may write: the one entry is the scoped save/restore
+   of the streaming state width, which Spark reads from the session
+   conf when a stateful query starts. Anything else takes a
+   per-operation option (``.option(...)`` on the write) or a value
+   the caller passes. No reader pins the session timezone: the
+   parquet timestamps read as timestamp_ntz, which no session zone
+   changes.
 
 Non-automatable invariants (still prose-only, checked in review):
 ``ROUND(quotient)`` as a final aggregate step is only a straddle when
@@ -282,8 +285,6 @@ FRAGMENTS: dict[str, tuple[tuple[str, ...], re.Pattern]] = {
 
 # R7: the only package functions that may write a session conf.
 CONF_WRITERS = {
-    ("proto_to_avro_ql_spark/sources/io.py", "read_table"): "UTC pin",
-    ("proto_to_avro_ql_spark/streaming/events.py", "stream_events"): "UTC pin",
     ("proto_to_avro_ql_spark/streaming/events.py", "stream_state_partitions"): (
         "scoped save/restore of spark.sql.shuffle.partitions"
     ),
