@@ -1,7 +1,18 @@
 """Similarity search over embedding columns (SURVEY.md §2.9
 ext_sim_search): brute-force cosine top-k as the exactness baseline,
-random-hyperplane-LSH bucketing as the scale path, and
-embedding-cosine near-dup pairs.
+random-hyperplane-LSH bucketing, embedding-cosine near-dup pairs, and
+the integer-grid k-means / IVF / PQ operators.
+
+Shared facts, each written once here as a Spark renderer plus the
+DuckDB ``*_sql`` twin the oracles embed (``tools/lint_oracles.py`` R6
+fails on a copy anywhere else):
+- the rounded cosine ``round(dot / (na·nb), 6)`` —
+  :func:`rounded_cosine` / :func:`rounded_cosine_sql`;
+- the sign-pattern bucket against the seeded hyperplanes, which no
+  other module knows — :func:`lsh_bucket` / :func:`lsh_bucket_sql`;
+- the exact and the bucketed top-k relations —
+  :func:`brute_force_topk` / :func:`brute_force_topk_sql` and
+  :func:`lsh_topk` / :func:`lsh_topk_sql`.
 
 Scale design:
 - The query side is tiny and explicitly ``broadcast()`` — the corpus
@@ -10,10 +21,10 @@ Scale design:
 - Dot products are pure ``zip_with``/``aggregate`` expressions (JVM)
   over array<float> cast to double — no Python, no UDF.
 - The LSH variant buckets corpus vectors by sign-pattern against a
-  fixed set of hyperplanes; queries probe only their own bucket
-  (+ optional multi-probe), turning top-k from O(N·Q) into
-  O(N·Q/2^planes) at a recall cost. Hyperplanes are deterministic
-  (seeded) literals, so plans are reproducible.
+  fixed set of hyperplanes; queries probe only their own bucket,
+  turning top-k from O(N·Q) into O(N·Q/2^planes) at a recall cost.
+  Hyperplanes are deterministic (seeded) literals, so plans are
+  reproducible.
 
 r12 pair-stage cost model (every quadratic pair scan in this module):
 - L2 norms are computed ONCE PER ROW before the pair join (n folds,
@@ -27,6 +38,11 @@ r12 pair-stage cost model (every quadratic pair scan in this module):
   1.1 s on ext_dedup_embed at sf0.1/32c). Cluster-derived width, not
   a local constant; at lake scale the scan already has ≥ width splits
   and the repartition is a cheap O(n) rebalance ahead of O(n²) work.
+- Within-key pair scans (LSH bucket, label cell, k-means cell) are
+  salted (the ext_skew_join_salted recipe): a few distinct keys alone
+  cannot occupy a cluster, so the probe side gets ``pmod(id, SALT)``
+  and the build side replicates ``SALT`` ways — the same pair set
+  over a ``SALT``× finer key space.
 - An UNROLLED fixed-dim dot (64 getItem terms, whether built as
   Column ops or one SQL string) was measured and REJECTED: pair
   predicates evaluate inside join conditions (CartesianProduct /
@@ -44,6 +60,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from proto_to_avro_ql_spark.sources.io import ensure_min_parallelism
+
+# Salt of the within-key pair scans: the probe side is keyed on
+# pmod(id, SALT), the build side replicated SALT ways. Replication
+# multiplies the build-side shuffle by SALT: ~cores/#keys locally, 1 on
+# clusters where #keys >> cores. A module constant, not an argument;
+# tools/skew_bench.py and the tests patch it.
+SALT = 8
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -64,8 +87,18 @@ def l2_norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+def rounded_cosine(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of the arrays ``a`` and ``b`` rounded to 6 places, from
+    their per-row L2 norms ``na`` and ``nb`` (one array fold per pair)."""
+    return F.round(dot(a, b) / (na * nb), 6)
+
+
+def rounded_cosine_sql(a: str, b: str) -> str:
+    """DuckDB twin of :func:`rounded_cosine` over two array columns."""
+    return (
+        f"ROUND(list_cosine_similarity(CAST({a} AS DOUBLE[]),"
+        f" CAST({b} AS DOUBLE[])), 6)"
+    )
 
 
 def _pair_width(df: DataFrame) -> int:
@@ -74,6 +107,38 @@ def _pair_width(df: DataFrame) -> int:
     repartition is exempt from AQE coalescing, which would otherwise
     fold a bytes-tiny but compute-quadratic stage back to one task."""
     return df.sparkSession.sparkContext.defaultParallelism
+
+
+def _top_k(scored: DataFrame, k: int, score: str, desc: bool) -> DataFrame:
+    """The ``k`` best (query_id, neighbor_id, score, rank) rows per
+    query: ``score`` descending (``desc``) or ascending, ties broken by
+    neighbor id."""
+    order = F.desc(score) if desc else F.asc(score)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", score, "rank")
+    )
+
+
+def _top_k_sql(k: int) -> str:
+    """DuckDB twin of :func:`_top_k` over the cosine-scored CTE ``scored``."""
+    return f"""SELECT query_id, neighbor_id, cos_sim,
+           CAST(row_number() OVER (PARTITION BY query_id
+                ORDER BY cos_sim DESC, neighbor_id ASC) AS INTEGER) AS rank
+    FROM scored
+    QUALIFY rank <= {k}"""
+
+
+def _ids_sql(query_ids: list[int]) -> str:
+    return ", ".join(str(int(i)) for i in query_ids)
+
+
+def _query_cosine() -> Column:
+    """Rounded cosine of a (qvec, _qn) query row and an (nvec, _nn)
+    candidate row."""
+    return rounded_cosine(F.col("qvec"), F.col("nvec"), F.col("_qn"), F.col("_nn"))
 
 
 def brute_force_topk(
@@ -105,23 +170,23 @@ def brute_force_topk(
         F.broadcast(q)
         .crossJoin(c)
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("qvec"), F.col("nvec")) / (F.col("_qn") * F.col("_nn")),
-                6,
-            ).alias("cos_sim"),
-        )
+        .select("query_id", "neighbor_id", _query_cosine().alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
+    return _top_k(scored, k, "cos_sim", desc=True)
+
+
+def brute_force_topk_sql(query_ids: list[int], k: int) -> str:
+    """DuckDB twin of :func:`brute_force_topk` over the ``embeddings``
+    table: one SELECT of (query_id, neighbor_id, cos_sim, rank)."""
+    return f"""WITH q AS (SELECT vec_id AS query_id, embedding AS qvec
+                  FROM embeddings WHERE vec_id IN ({_ids_sql(query_ids)})),
+    scored AS (
+      SELECT q.query_id, e.vec_id AS neighbor_id,
+             {rounded_cosine_sql("q.qvec", "e.embedding")} AS cos_sim
+      FROM q CROSS JOIN embeddings e
+      WHERE q.query_id <> e.vec_id
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    {_top_k_sql(k)}"""
 
 
 def _hyperplanes(dim: int, planes: int, seed: int = 42) -> list[list[float]]:
@@ -129,13 +194,25 @@ def _hyperplanes(dim: int, planes: int, seed: int = 42) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(planes)]
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-pattern bucket id against fixed hyperplanes."""
+def lsh_bucket(vec: Column, dim: int, planes: int) -> Column:
+    """Sign-pattern bucket id of ``vec`` against ``planes`` fixed
+    (seeded) ``dim``-dimensional hyperplanes."""
     bucket = F.lit(0)
-    for i, p in enumerate(planes):
+    for i, p in enumerate(_hyperplanes(dim, planes)):
         h = F.array(*[F.lit(x) for x in p])
         bucket = bucket + F.when(dot(vec, h) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
     return bucket
+
+
+def lsh_bucket_sql() -> str:
+    """DuckDB twin of :func:`lsh_bucket` over the ``embedding`` column
+    at the operators' default 64 dimensions and 4 planes: the same
+    hyperplane literals, inner products by ``list_inner_product``."""
+    return "\n         + ".join(
+        f"(CASE WHEN list_inner_product(CAST(embedding AS DOUBLE[]), "
+        f"[{', '.join(repr(x) for x in p)}]) >= 0 THEN {1 << i} ELSE 0 END)"
+        for i, p in enumerate(_hyperplanes(64, 4))
+    )
 
 
 def lsh_topk(
@@ -149,14 +226,15 @@ def lsh_topk(
 ) -> DataFrame:
     """Approximate top-k: compare only within the query's LSH bucket.
     2^planes buckets ⇒ ~N/2^planes candidates per query. Recall is
-    approximate by design (the driver records rows-only for this one;
-    exactness is the brute-force variant's job). r12: per-row norms +
-    corpus through ensure_min_parallelism ahead of the broadcast
-    bucket join (broadcast-hash preserves the corpus partitioning;
-    no-op at lake scale)."""
-    hp = _hyperplanes(dim, planes)
+    approximate by design (exactness is the brute-force variant's job;
+    the scores of the candidates it does find are exact). r12: per-row
+    norms + corpus through ensure_min_parallelism ahead of the
+    broadcast bucket join (broadcast-hash preserves the corpus
+    partitioning; no-op at lake scale)."""
     emb = embeddings.select(
-        F.col(id_col), F.col(vec_col), lsh_bucket(F.col(vec_col), hp).alias("bucket")
+        F.col(id_col),
+        F.col(vec_col),
+        lsh_bucket(F.col(vec_col), dim, planes).alias("bucket"),
     )
     q = emb.where(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"),
@@ -170,27 +248,87 @@ def lsh_topk(
         "neighbor_id",
         F.col(vec_col).alias("nvec"),
         l2_norm(F.col(vec_col)).alias("_nn"),
-        lsh_bucket(F.col(vec_col), hp).alias("bucket"),
+        lsh_bucket(F.col(vec_col), dim, planes).alias("bucket"),
     )
     scored = (
         F.broadcast(q)
         .join(c, "bucket")
         .where(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", _query_cosine().alias("cos_sim"))
+    )
+    return _top_k(scored, k, "cos_sim", desc=True)
+
+
+def lsh_topk_sql(query_ids: list[int], k: int) -> str:
+    """DuckDB twin of :func:`lsh_topk` (default 64-dim, 4 planes) over
+    the ``embeddings`` table: one SELECT of (query_id, neighbor_id,
+    cos_sim, rank)."""
+    return f"""WITH b AS (
+      SELECT vec_id, embedding,
+           {lsh_bucket_sql()} AS bucket
+      FROM embeddings
+    ), q AS (
+      SELECT vec_id AS query_id, embedding AS qvec, bucket
+      FROM b WHERE vec_id IN ({_ids_sql(query_ids)})
+    ), scored AS (
+      SELECT q.query_id, c.vec_id AS neighbor_id,
+             {rounded_cosine_sql("q.qvec", "c.embedding")} AS cos_sim
+      FROM q JOIN b c ON q.bucket = c.bucket AND q.query_id <> c.vec_id
+    )
+    {_top_k_sql(k)}"""
+
+
+def _pair_side(df: DataFrame, side: str, id_col: str, vec_col: str, *extra) -> DataFrame:
+    """One side of a pair join: ``{id_col}_{side}``, ``{vec_col}_{side}``,
+    the row's L2 norm ``_n{side}``, then ``extra``."""
+    return df.select(
+        *[F.col(c).alias(f"{c}_{side}") for c in (id_col, vec_col)],
+        l2_norm(F.col(vec_col)).alias(f"_n{side}"),
+        *extra,
+    )
+
+
+def _scored_pairs(
+    joined: DataFrame, threshold: float, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id_a, id_b, cos_sim) of the joined a/b sides with id_a < id_b
+    and cos_sim ≥ ``threshold``."""
+    return (
+        joined.where(F.col(f"{id_col}_a") < F.col(f"{id_col}_b"))
         .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("qvec"), F.col("nvec")) / (F.col("_qn") * F.col("_nn")),
-                6,
+            F.col(f"{id_col}_a").alias("id_a"),
+            F.col(f"{id_col}_b").alias("id_b"),
+            rounded_cosine(
+                F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b"), F.col("_na"), F.col("_nb")
             ).alias("cos_sim"),
         )
+        .where(F.col("cos_sim") >= threshold)
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+
+
+def _salted_pairs(
+    df: DataFrame, key: str, threshold: float, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id_a, id_b, cos_sim) pairs of ``df`` rows with equal ``key``,
+    id_a < id_b and cos_sim ≥ ``threshold``. The probe side is salted
+    on ``pmod(id, SALT)``, the build side replicated ``SALT`` ways,
+    both repartitioned to an explicit width on (key, salt) — AQE's
+    small-bytes coalescing would otherwise fold this CPU-bound
+    (bytes-tiny, pairs-quadratic) join to one task; a user-specified
+    partition count is exempt from coalescing."""
+    width = _pair_width(df)
+    a = _pair_side(
+        df, "a", id_col, vec_col, key, F.pmod(F.col(id_col), F.lit(SALT)).alias("_blk")
+    ).repartition(width, key, "_blk")
+    b = _pair_side(
+        df,
+        "b",
+        id_col,
+        vec_col,
+        key,
+        F.explode(F.sequence(F.lit(0), F.lit(SALT - 1))).alias("_blk"),
+    ).repartition(width, key, "_blk")
+    return _scored_pairs(a.join(b, [key, "_blk"]), threshold, id_col, vec_col)
 
 
 def embedding_near_dup_pairs(
@@ -201,196 +339,25 @@ def embedding_near_dup_pairs(
     planes: int = 4,
     dim: int = 64,
     exact: bool = False,
-    salt: int = 8,
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs (cos ≥ threshold).
+    """Embedding-cosine near-dup pairs (id_a < id_b, cos ≥ threshold).
 
-    exact=True: full O(n²) self-join — only for oracle-scale data.
-    exact=False (default): LSH-bucketed self-join; high-cosine pairs
-    land in the same sign bucket with high probability.
-
-    r12 pair-stage cost model (see module docstring): norms once per
-    row, pair stage parallelized. The exact path broadcasts one side
-    (nested loop over the ensure_min_parallelism'd other side — fine
-    at its documented oracle scale); the LSH path salts
-    the bucket join exactly like :func:`semantic_dedup_cells` —
-    2^planes distinct keys alone cannot occupy a cluster, so the
-    probe side gets ``pmod(id, salt)`` and the build side replicates
-    ``salt`` ways; same pair set, ``salt``× finer key space.
+    exact=True: full O(n²) self-join — only for oracle-scale data. One
+    side broadcasts; the other runs through ensure_min_parallelism
+    (nested loop, fine at its documented oracle scale).
+    exact=False (default): LSH-bucketed salted self-join
+    (:func:`_salted_pairs` keyed on the bucket); high-cosine pairs land
+    in the same sign bucket with high probability.
     Isolated noop-sink medians at sf0.1/32c: exact 36.9 s → 1.2 s,
-    LSH 3.4 s → 1.0 s.
+    LSH 3.4 s → 1.0 s (r12 pair-stage cost model, module docstring).
     """
-    width = _pair_width(embeddings)
-    na = l2_norm(F.col(vec_col)).alias("_na")
-    nb = l2_norm(F.col(vec_col)).alias("_nb")
     emb = embeddings.select(F.col(id_col), F.col(vec_col))
     if not exact:
-        hp = _hyperplanes(dim, planes)
-        emb = emb.select("*", lsh_bucket(F.col(vec_col), hp).alias("bucket"))
-        a = emb.select(
-            *[F.col(c).alias(f"{c}_a") for c in (id_col, vec_col)],
-            na,
-            "bucket",
-            F.pmod(F.col(id_col), F.lit(salt)).alias("_blk"),
-        ).repartition(width, "bucket", "_blk")
-        b = emb.select(
-            *[F.col(c).alias(f"{c}_b") for c in (id_col, vec_col)],
-            nb,
-            "bucket",
-            F.explode(F.sequence(F.lit(0), F.lit(salt - 1))).alias("_blk"),
-        ).repartition(width, "bucket", "_blk")
-        joined = a.join(b, ["bucket", "_blk"])
-    else:
-        a = ensure_min_parallelism(emb).select(
-            *[F.col(c).alias(f"{c}_a") for c in (id_col, vec_col)], na
-        )
-        b = emb.select(*[F.col(c).alias(f"{c}_b") for c in (id_col, vec_col)], nb)
-        joined = a.crossJoin(F.broadcast(b))
-    return (
-        joined.where(F.col(f"{id_col}_a") < F.col(f"{id_col}_b"))
-        .select(
-            F.col(f"{id_col}_a").alias("id_a"),
-            F.col(f"{id_col}_b").alias("id_b"),
-            F.round(
-                dot(F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b"))
-                / (F.col("_na") * F.col("_nb")),
-                6,
-            ).alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
-    )
-
-
-def _mean_vectors(assigned: DataFrame, vec_col: str) -> DataFrame:
-    """(cell, vec) → (cell, centroid=mean vec): posexplode → per-(cell,
-    pos) avg → re-assemble. All map-side-combined aggregates."""
-    pos = assigned.select("cell", F.posexplode(vec_col).alias("pos", "val"))
-    per_dim = pos.groupBy("cell", "pos").agg(F.avg("val").alias("avg"))
-    return (
-        per_dim.groupBy("cell")
-        .agg(F.sort_array(F.collect_list(F.struct("pos", "avg"))).alias("dims"))
-        .select("cell", F.transform("dims", lambda d: d["avg"]).alias("centroid"))
-    )
-
-
-def _assign_cells(emb: DataFrame, cents: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """Each vector → nearest centroid by cosine (deterministic tiebreak)."""
-    scored = emb.crossJoin(F.broadcast(cents)).select(
-        id_col, vec_col, "cell", cosine(F.col(vec_col), F.col("centroid")).alias("sim")
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("sim"), F.asc("cell"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(id_col, vec_col, "cell")
-    )
-
-
-def kmeans_train(
-    embeddings: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Train the IVF coarse quantizer: Lloyd's iterations with
-    deterministic seeds (the k lowest-id vectors — no RNG, reproducible
-    plans). Each iteration: one broadcast assignment pass + one
-    aggregate; centroids stay tiny and driver-free. Returns the FULL
-    trained (cell, centroid) relation — including a cell that ends the
-    final assignment empty (same contract as the integer-grid
-    kmeans_train_int; probe ranking must use this relation, not the
-    assignment join's surviving cells)."""
-    cents = embeddings.where(F.col(id_col) < k).select(
-        F.col(id_col).alias("cell"), F.col(vec_col).alias("centroid")
-    )
-    for _ in range(iters):
-        assigned = _assign_cells(embeddings, cents, id_col, vec_col)
-        cents = _mean_vectors(assigned, vec_col)
-    return cents
-
-
-def kmeans_cells(
-    embeddings: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Assignment view of kmeans_train: (id, vec, cell, centroid).
-    Inner join — a trained centroid with no final members carries no
-    row here; use kmeans_train for the complete probe set."""
-    cents = kmeans_train(embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
-    return _assign_cells(embeddings, cents, id_col, vec_col).join(
-        cents, "cell"
-    )
-
-
-def ivf_topk(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    probes: int = 2,
-    k_cells: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-style ANN: search only the ``probes`` inverted lists whose
-    centroids are nearest each query. At 100 TB the corpus is
-    partitioned by cell, so a query touches ~probes/k_cells of the
-    data; centroids are tiny and broadcast; the quantizer is trained
-    once and reused across queries. Probe ranking runs over the FULL
-    trained centroid relation (kmeans_train), not the assignment
-    join's surviving cells — same orphaned-centroid contract as
-    ivf_topk_int."""
-    # cents is k rows but carries the whole Lloyd's chain; persist so
-    # probe ranking and the assignment pass read the materialized rows
-    # (allowlisted in tools/audit_caches, single-shot).
-    cents = kmeans_train(
-        embeddings, k=k_cells, id_col=id_col, vec_col=vec_col
-    ).persist()
-    assigned = _assign_cells(embeddings, cents, id_col, vec_col).persist()
-    q = embeddings.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    # rank cells per query by centroid cosine; keep top `probes`
-    qc = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "qvec",
-            "cell",
-            cosine(F.col("qvec"), F.col("centroid")).alias("cent_sim"),
-        )
-    )
-    w_cell = Window.partitionBy("query_id").orderBy(F.desc("cent_sim"), F.asc("cell"))
-    probed = (
-        qc.withColumn("cell_rank", F.row_number().over(w_cell))
-        .where(F.col("cell_rank") <= probes)
-        .select("query_id", "qvec", "cell")
-    )
-    c = assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nvec"),
-        "cell",
-    )
-    scored = (
-        F.broadcast(probed)
-        .join(c, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("nvec")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+        emb = emb.select("*", lsh_bucket(F.col(vec_col), dim, planes).alias("bucket"))
+        return _salted_pairs(emb, "bucket", threshold, id_col, vec_col)
+    a = _pair_side(ensure_min_parallelism(emb), "a", id_col, vec_col)
+    b = _pair_side(emb, "b", id_col, vec_col)
+    return _scored_pairs(a.crossJoin(F.broadcast(b)), threshold, id_col, vec_col)
 
 
 def semantic_dedup_cells(
@@ -399,7 +366,6 @@ def semantic_dedup_cells(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    salt: int = 8,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): embeddings are partitioned into cells, pairwise
@@ -413,265 +379,34 @@ def semantic_dedup_cells(
     have no near-identical pairs.
 
     ``cell_col`` is the scale knob: the oracle-able entry uses the
-    deterministic ``label`` column as the cell; at corpus scale you
-    swap in :func:`kmeans_cells`'s assignment (cluster count grows
-    with n, bounding per-cell membership) — the plan is identical, one
-    column swap. Shuffles: one self-join keyed on the cell (pairs
-    never leave their cell; no corpus-wide cross join) + one key-only
+    deterministic ``label`` column as the cell; at corpus scale the
+    cell is a learned partition — :func:`semdedup` runs the same pair
+    scan over :func:`kmeans_cells_int`'s assignment (cluster count
+    grows with n, bounding per-cell membership). Shuffles: one salted
+    self-join keyed on the cell (:func:`_salted_pairs`; pairs never
+    leave their cell, no corpus-wide cross join) + one key-only
     anti-join of (id) against the survivors — vectors cross the wire
-    once each (``salt`` times for the replicated side), dup ids travel
+    once each (``SALT`` times for the replicated side), dup ids travel
     as bare keys.
-
-    Two cost controls on the quadratic pair stage:
-
-    - L2 norms are computed ONCE PER ROW before the join; the per-pair
-      predicate is dot/(na*nb) — the same expression tree (bit-equal
-      doubles) as cosine-per-pair, at 1 array fold per pair instead
-      of 3.
-    - ``salt`` splits each cell's pairs across ``salt`` tasks (probe
-      side salted on id, build side replicated — the same
-      salt-replicate recipe as ext_skew_join_salted), so a hot or
-      low-cardinality cell set still uses every core. Replication
-      multiplies the build-side shuffle by ``salt``: keep it ~cores/
-      #cells locally, 1 on clusters where #cells >> cores.
     """
-    na = l2_norm(F.col(vec_col))
-    a = emb.select(
-        F.col(cell_col).alias("_cell"),
-        F.col(id_col).alias("_id_a"),
-        F.col(vec_col).alias("_va"),
-        na.alias("_na"),
-        F.pmod(F.col(id_col), F.lit(salt)).alias("_blk"),
-    )
-    b = emb.select(
-        F.col(cell_col).alias("_cell"),
-        F.col(id_col).alias("_id_b"),
-        F.col(vec_col).alias("_vb"),
-        na.alias("_nb"),
-        F.explode(F.sequence(F.lit(0), F.lit(salt - 1))).alias("_blk"),
-    )
-    # explicit-width repartition: AQE's small-bytes coalescing would
-    # otherwise fold this CPU-bound (bytes-tiny, pairs-quadratic) join
-    # down to one task; a user-specified partition count is exempt
-    # from coalescing. Width = defaultParallelism — cluster-derived,
-    # and at lake scale the stage is bytes-large anyway.
-    width = emb.sparkSession.sparkContext.defaultParallelism
     dups = (
-        a.repartition(width, "_cell", "_blk")
-        .join(b.repartition(width, "_cell", "_blk"), ["_cell", "_blk"])
-        .where(F.col("_id_a") < F.col("_id_b"))
-        .where(
-            F.round(
-                dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")), 6
-            )
-            >= threshold
-        )
-        .select(F.col("_id_b").alias(id_col))
+        _salted_pairs(emb, cell_col, threshold, id_col, vec_col)
+        .select(F.col("id_b").alias(id_col))
         .distinct()
     )
     return emb.join(dups, id_col, "left_anti").select(id_col, cell_col)
 
 
 # ---------------------------------------------------------------------------
-# Product quantization (IVF-PQ's second stage): per-subspace codebooks,
-# 4-bit-ish codes, and asymmetric-distance search. Completes the ANN
-# ladder brute → LSH → IVF → PQ codes (the memory-bound regime: a
-# D-float vector becomes m small codes, so a 100 TB embedding corpus
-# fits in RAM-adjacent storage and distance evaluation becomes m
-# table lookups per candidate).
-# ---------------------------------------------------------------------------
-
-
-def l2sq(a: Column, b: Column) -> Column:
-    """Squared L2 distance between two float arrays, in codegen."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _sub_slices(vec_col: str, m: int, sub: int):
-    """(sub, subvector) pairs for one row: m slices exploded from a
-    cheap index transform (slice after the generate, per the
-    generate-pitfall rule)."""
-    return F.posexplode(
-        F.expr(
-            f"transform(sequence(0, {m - 1}),"
-            f" s -> slice({vec_col}, s * {sub} + 1, {sub}))"
-        )
-    )
-
-
-def pq_codebooks(
-    embeddings: DataFrame,
-    m: int = 4,
-    k: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Train per-subspace PQ codebooks: split each D-dim vector into m
-    contiguous D/m-dim subvectors and run deterministic Lloyd's (seeds
-    = the k lowest-id vectors, L2 metric — PQ quantizes distance, not
-    direction) independently per subspace. Returns (sub, cell,
-    centroid) with m*k rows — tiny and broadcastable at any corpus
-    size. Scale shape: ALL m subspaces train together — per iteration
-    ONE broadcast assignment pass over the exploded (row, sub)
-    relation, argmin as a min(struct) HASH aggregate (no sort window),
-    then one map-side-combined per-dimension mean; the corpus is read
-    once per iteration regardless of m and never shuffles by anything
-    bigger than a subvector."""
-    dim = len(embeddings.select(vec_col).first()[0])
-    sub = dim // m
-    sv = embeddings.select(
-        F.col(id_col).alias("_id"), _sub_slices(vec_col, m, sub).alias("sub", "_v")
-    )
-    books = embeddings.where(F.col(id_col) < k).select(
-        F.col(id_col).cast("int").alias("cell"),
-        _sub_slices(vec_col, m, sub).alias("sub", "centroid"),
-    )
-    for _ in range(iters):
-        scored = sv.join(F.broadcast(books), "sub").select(
-            "_id",
-            "sub",
-            "_v",
-            F.struct(
-                l2sq(F.col("_v"), F.col("centroid")).alias("d"),
-                F.col("cell").alias("cell"),
-            ).alias("dc"),
-        )
-        assigned = (
-            scored.groupBy("_id", "sub")
-            .agg(F.min("dc").alias("best"), F.first("_v").alias("v"))
-            .select("sub", F.col("best.cell").alias("cell"), "v")
-        )
-        per_dim = assigned.select(
-            "sub", "cell", F.posexplode("v").alias("pos", "val")
-        ).groupBy("sub", "cell", "pos").agg(F.avg("val").alias("avg"))
-        books = (
-            per_dim.groupBy("sub", "cell")
-            .agg(F.sort_array(F.collect_list(F.struct("pos", "avg"))).alias("dims"))
-            .select(
-                "sub",
-                "cell",
-                F.transform("dims", lambda d: d["avg"])
-                .cast("array<float>")
-                .alias("centroid"),
-            )
-        )
-    return books
-
-
-def pq_encode(
-    embeddings: DataFrame,
-    books: DataFrame,
-    m: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes array<int>): each subvector snaps to its nearest
-    codebook centroid. ONE pass: slices explode once per row, the m*k
-    codebook broadcasts into a sub-keyed join, and a per-(id, sub)
-    min(struct) HASH aggregate picks the code — the corpus is read
-    once regardless of m and nothing sorts."""
-    dim = len(embeddings.select(vec_col).first()[0])
-    sub = dim // m
-    sv = embeddings.select(
-        F.col(id_col), _sub_slices(vec_col, m, sub).alias("sub", "_v")
-    )
-    scored = sv.join(F.broadcast(books), "sub").select(
-        id_col,
-        "sub",
-        F.struct(
-            l2sq(F.col("_v"), F.col("centroid")).alias("d"),
-            F.col("cell").alias("cell"),
-        ).alias("dc"),
-    )
-    picked = (
-        scored.groupBy(id_col, "sub")
-        .agg(F.min("dc").alias("best"))
-        .select(id_col, "sub", F.col("best.cell").alias("cell"))
-    )
-    return picked.groupBy(id_col).agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("sub", "cell"))),
-            lambda c: c["cell"],
-        ).alias("codes")
-    )
-
-
-def pq_adc_topk(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    m: int = 4,
-    k_codes: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Asymmetric-distance PQ search: queries stay full-precision, the
-    corpus is its codes. Per query a (sub, code) → partial-distance
-    lookup table (m*k rows) is built against the codebooks; candidate
-    distance = Σ over subspaces of the LUT entry for the candidate's
-    code — a keyed join + hash aggregate, never a vector-sized
-    shuffle. The approximation error vs exact cosine/L2 is pinned in
-    pytest (recall@k against brute force)."""
-    books = pq_codebooks(
-        embeddings, m=m, k=k_codes, iters=iters, id_col=id_col, vec_col=vec_col
-    ).persist()
-    dim = len(embeddings.select(vec_col).first()[0])
-    sub = dim // m
-    codes = pq_encode(embeddings, books, m=m, id_col=id_col, vec_col=vec_col)
-    q = embeddings.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    lut = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(books))
-        .select(
-            "query_id",
-            "sub",
-            "cell",
-            l2sq(
-                F.slice(
-                    F.col("qvec"),
-                    F.col("sub") * F.lit(sub) + F.lit(1),
-                    F.lit(sub),
-                ),
-                F.col("centroid"),
-            ).alias("pd"),
-        )
-    )
-    cand = codes.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.posexplode("codes").alias("sub", "cell"),
-    )
-    scored = (
-        cand.join(F.broadcast(lut), ["sub", "cell"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("pd"), 6).alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", "rank")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Integer-grid variants (round 8): the same Lloyd's / IVF / PQ
-# algorithms over micro-quantized integer vectors, so every distance,
-# centroid, and rank is exact integer arithmetic that DuckDB reproduces
-# bit-for-bit (functions/portable.py holds the paired SQL fragments and
-# the unrolled-CTE oracle generator). The float variants above remain
-# the production path for raw recall work; these are the ORACLED path —
-# same scale shape (broadcast centroids/codebooks, map-side-combined
+# Integer grid: Lloyd's k-means, IVF and PQ over micro-quantized integer
+# vectors, so every distance, centroid and rank is exact integer
+# arithmetic that DuckDB reproduces bit for bit (functions/portable.py
+# holds the paired SQL fragments and the unrolled-CTE oracle generator).
+# These are the module's only k-means / IVF / PQ operators; their
+# recall against brute force is pinned in tests/test_simsearch.py.
+# Scale shape: broadcast centroids/codebooks, map-side-combined
 # per-dimension sums, never a vector-sized shuffle beyond the corpus
-# pass), deterministic to the last bit.
+# pass.
 # ---------------------------------------------------------------------------
 
 
@@ -825,9 +560,10 @@ def ivf_topk_int(
 ) -> DataFrame:
     """IVF ANN on the integer grid: probe the ``probes`` inverted lists
     whose centroids are L2-nearest each query; exact integer ranks
-    throughout (dist asc, id asc). Scale shape identical to ivf_topk:
-    centroids tiny and broadcast, a query touches ~probes/k_cells of a
-    cell-partitioned corpus.
+    throughout (dist asc, id asc). Centroids are tiny and broadcast;
+    at corpus scale the corpus is partitioned by cell, so a query
+    touches ~probes/k_cells of it and the quantizer is trained once
+    for all queries.
 
     Probe ranking runs over the FULL trained centroid relation from
     kmeans_train_int — NOT over ``assigned.select(cell, cv).distinct()``,
@@ -870,16 +606,11 @@ def ivf_topk_int(
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", l2sq_int("qv", "nv").alias("l2_dist"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("l2_dist"), F.asc("neighbor_id"))
     # cents and assigned stay persisted into the returned plan (cents:
     # probe ranking + the assignment pass; assigned: query extraction +
-    # the candidate scan) — same single-shot shape as ivf_topk,
-    # allowlisted in tools/audit_caches.
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "l2_dist", "rank")
-    )
+    # the candidate scan) — single-shot, allowlisted in
+    # tools/audit_caches.
+    return _top_k(scored, k, "l2_dist", desc=False)
 
 
 def _sub_slices_int(
@@ -916,13 +647,13 @@ def pq_adc_topk_int(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Integer-grid PQ ADC search (the oracled variant of pq_adc_topk):
-    per-subspace codebooks trained with integer Lloyd's over quantized
-    subvectors, candidates carried as (id, sub, code) rows, distance =
-    Σ over subspaces of the broadcast LUT entry. Same scale shape as
-    the float variant — codebooks m*k rows broadcast, one corpus pass
-    per training iteration, ADC is a keyed join + hash aggregate,
-    nothing vector-sized shuffles."""
+    """Integer-grid PQ asymmetric-distance search: per-subspace
+    codebooks trained with integer Lloyd's over quantized subvectors,
+    candidates carried as (id, sub, code) rows, distance = Σ over
+    subspaces of the broadcast LUT entry (queries stay full-precision,
+    the corpus is its codes). Codebooks are m*k rows and broadcast,
+    one corpus pass per training iteration, ADC is a keyed join + hash
+    aggregate; nothing vector-sized shuffles."""
     dim = len(embeddings.select(vec_col).first()[0])
     sv = _sub_slices_int(embeddings, m, id_col, vec_col, dim=dim).persist()
     books = sv.where(F.col("vec_id") < k_codes).select(
@@ -952,15 +683,10 @@ def pq_adc_topk_int(
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("pd").alias("adc_dist"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
     # sv stays persisted into the returned plan (codebook training,
     # encoding, and the query LUT all read it) — single-shot shape,
     # allowlisted in tools/audit_caches.
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", "rank")
-    )
+    return _top_k(scored, k, "adc_dist", desc=False)
 
 
 def semdedup(
@@ -995,8 +721,9 @@ def semdedup(
     corpus pass per iteration, (cell, dim, partial-sum) shuffles,
     broadcast centroids); the assigned relation is persisted once and
     read three ways (both self-join sides + the output spine); the
-    pair scan shuffles on cell (cluster-bucketed, co-partitioned
-    self-join); the dup-id set joins back on id.
+    pair scan is :func:`_salted_pairs` keyed on the cell (k cells
+    alone cannot occupy a cluster, hence the salt); the dup-id set
+    joins back on id.
     """
     assigned = (
         kmeans_cells_int(
@@ -1006,37 +733,9 @@ def semdedup(
         .join(embeddings.select(id_col, vec_col), id_col)
         .persist()
     )
-    # r12 pair stage: norms once per row; salted cell join (k cells
-    # alone cannot occupy a cluster — same recipe and rationale as
-    # semantic_dedup_cells); explicit-width repartition so AQE's
-    # small-bytes coalescing can't fold the compute-quadratic join to
-    # one task. Same pair set, same per-pair doubles (module docstring).
-    salt = 8
-    width = _pair_width(embeddings)
-    a = assigned.select(
-        F.col(id_col).alias("_id_a"),
-        F.col(vec_col).alias("_va"),
-        l2_norm(F.col(vec_col)).alias("_na"),
-        "cell",
-        F.pmod(F.col(id_col), F.lit(salt)).alias("_blk"),
-    ).repartition(width, "cell", "_blk")
-    b = assigned.select(
-        F.col(id_col).alias("_id_b"),
-        F.col(vec_col).alias("_vb"),
-        l2_norm(F.col(vec_col)).alias("_nb"),
-        "cell",
-        F.explode(F.sequence(F.lit(0), F.lit(salt - 1))).alias("_blk"),
-    ).repartition(width, "cell", "_blk")
     dups = (
-        a.join(b, ["cell", "_blk"])
-        .where(F.col("_id_a") < F.col("_id_b"))
-        .where(
-            F.round(
-                dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")), 6
-            )
-            >= threshold
-        )
-        .select(F.col("_id_b").alias(id_col))
+        _salted_pairs(assigned, "cell", threshold, id_col, vec_col)
+        .select(F.col("id_b").alias(id_col))
         .distinct()
         .withColumn("_dup", F.lit(1))
     )

@@ -11,7 +11,7 @@ dropped — bounded state, the streaming-at-scale requirement.
 
 from __future__ import annotations
 
-import os
+import tempfile
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
@@ -88,17 +88,22 @@ def run_stream_sessionize_to_memory(
 ) -> DataFrame:
     from proto_to_avro_ql_spark.streaming.events import stream_state_partitions
 
-    with stream_state_partitions(spark):
+    # A fresh checkpoint per run: a reused one would resume its offset
+    # log and process nothing. The memory table outlives it.
+    with stream_state_partitions(spark), tempfile.TemporaryDirectory(
+        prefix="sessionize_ckpt_"
+    ) as ckpt:
         q = (
             stream_sessionize(spark, sf_dir, gap_minutes)
             .writeStream.format("memory")
             .queryName(table_name)
             .outputMode("update")
             .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join("/tmp", f"ckpt_{table_name}"))
+            .option("checkpointLocation", ckpt)
             .start()
         )
         q.awaitTermination(300)
+        q.stop()
     return spark.table(table_name)
 
 

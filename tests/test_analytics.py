@@ -96,63 +96,3 @@ class TestMadOutliers:
         ev = _ev(spark, [(i, _at(i), 1, "t", v) for i, v in enumerate(vals)])
         out = mad_outliers(ev, k=3.0).collect()
         assert [r.value for r in out] == [1e6]
-
-
-class TestProductQuantization:
-    def test_pq_adc_beats_random_and_tracks_brute_force(self, spark, sf_dir):
-        """PQ ADC top-5 must (a) return exactly k rows per query,
-        (b) recall >= 0.2 of the exact top-5 (random baseline ~0.01),
-        and (c) keep >= 0.7 of brute force's mean exact cosine — the
-        compression-quality contract on this weakly-clustered
-        synthetic corpus (brute-force mean top-5 cosine is only ~0.32,
-        PQ's hardest regime)."""
-        import pyspark.sql.functions as F
-
-        from proto_to_avro_ql_spark.operators.simsearch import (
-            brute_force_topk,
-            cosine,
-            pq_adc_topk,
-        )
-        from proto_to_avro_ql_spark.sources.io import read_table
-
-        emb = read_table(spark, sf_dir, "embeddings").cache()
-        qids = [3, 17, 41, 77, 101, 150, 200, 260, 333, 444]
-        pq = pq_adc_topk(emb, qids, k=5, m=16, k_codes=32, iters=2).collect()
-        assert len(pq) == 5 * len(qids)
-        bf = brute_force_topk(emb, qids, k=5).collect()
-        b = {(r["query_id"], r["neighbor_id"]) for r in bf}
-        p = {(r["query_id"], r["neighbor_id"]) for r in pq}
-        assert len(b & p) / len(b) >= 0.2, (len(b & p), len(b))
-
-        def mean_cos(pairs):
-            e1 = emb.select(F.col("vec_id").alias("q"), F.col("embedding").alias("a"))
-            e2 = emb.select(F.col("vec_id").alias("n"), F.col("embedding").alias("c"))
-            pdf = spark.createDataFrame(sorted(pairs), "q long, n long")
-            return (
-                pdf.join(e1, "q")
-                .join(e2, "n")
-                .agg(F.avg(cosine(F.col("a"), F.col("c"))))
-                .first()[0]
-            )
-
-        assert mean_cos(p) / mean_cos(b) >= 0.7
-
-    def test_pq_encode_shape(self, spark, sf_dir):
-        """Every vector gets exactly m codes in [0, k)."""
-        import pyspark.sql.functions as F
-
-        from proto_to_avro_ql_spark.operators.simsearch import (
-            pq_codebooks,
-            pq_encode,
-        )
-        from proto_to_avro_ql_spark.sources.io import read_table
-
-        emb = read_table(spark, sf_dir, "embeddings")
-        books = pq_codebooks(emb, m=4, k=8, iters=1)
-        codes = pq_encode(emb, books, m=4)
-        assert codes.count() == emb.count()
-        bad = codes.where(
-            (F.size("codes") != 4)
-            | F.exists("codes", lambda c: (c < 0) | (c >= 8))
-        ).count()
-        assert bad == 0

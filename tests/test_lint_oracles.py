@@ -100,8 +100,8 @@ class TestFragmentCopiesFire:
 class TestRelationCopiesFire:
     """R6 over the relation fragments: daily cents, the co-purchase
     self-join, the label-propagation vote, the held-out bigram
-    aggregate and the min-label closure, each owned by one operators
-    module."""
+    aggregate, the min-label closure and the rounded cosine, each
+    owned by one operators module."""
 
     CASES = {
         "daily cents": (
@@ -130,6 +130,11 @@ class TestRelationCopiesFire:
             'q = """cc(id, lab) AS (SELECT id, id FROM nodes UNION\n'
             '  SELECT e.src, c.lab FROM sym e JOIN c ON c.id = e.dst)"""\n',
         ),
+        "rounded cosine": (
+            'c = F.round(\n    SS.dot(F.col("a"), F.col("b")) / (F.col("na") * F.col("nb")), 6\n)\n',
+            'q = """SELECT ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),\n'
+            '  CAST(b.embedding AS DOUBLE[])), 6) AS cos_sim"""\n',
+        ),
     }
 
     def test_spark_and_sql_copies_fire(self):
@@ -148,6 +153,15 @@ class TestRelationCopiesFire:
         for owner in (graphs, "proto_to_avro_ql_spark/operators/timeseries.py",
                       "proto_to_avro_ql_spark/operators/lexical.py"):
             assert any("(tokenizer)" in h for h in find_fragment_copies(tok, owner))
+
+    def test_rounded_cosine_owner_and_renderer_calls_clean(self):
+        simsearch = "proto_to_avro_ql_spark/operators/simsearch.py"
+        for src in self.CASES["rounded cosine"]:
+            assert not find_fragment_copies(src, simsearch)
+        assert not find_fragment_copies(
+            'q = f"""SELECT {SS.rounded_cosine_sql("a.embedding", "b.embedding")}"""\n'
+            'c = SS.rounded_cosine(F.col("a"), F.col("b"), F.col("na"), F.col("nb"))\n'
+        )
 
     def test_dense_cell_closure_is_not_a_components_copy(self):
         """ext_dbscan_grid's closure is seeded from every dense cell,

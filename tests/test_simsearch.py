@@ -1,7 +1,37 @@
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
+
+import pytest
+
 from proto_to_avro_ql_spark.operators import simsearch as SS
 from proto_to_avro_ql_spark.sources.io import read_table
+
+
+def _vectors(emb, ids) -> dict[int, list[float]]:
+    """vec_id → embedding (as Python floats) for the given ids."""
+    from pyspark.sql import functions as F
+
+    rows = emb.where(F.col("vec_id").isin(sorted(ids))).collect()
+    return {r.vec_id: [float(x) for x in r.embedding] for r in rows}
+
+
+def _cos(a: list[float], b: list[float]) -> float:
+    """Unrounded cosine, summed left to right like the Spark fold."""
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot += x * y
+        na += x * x
+        nb += y * y
+    return dot / (math.sqrt(na) * math.sqrt(nb))
+
+
+def ref_rounded_cosine(a: list[float], b: list[float]) -> float:
+    """Plain-Python rounded cosine: HALF_UP at 6 places on the
+    double's shortest decimal form, as Spark's round() does."""
+    q = Decimal(repr(_cos(a, b))).quantize(Decimal("1e-6"), ROUND_HALF_UP)
+    return float(q)
 
 
 class TestBruteForce:
@@ -37,28 +67,6 @@ class TestLsh:
         for r in approx:
             if (r.query_id, r.neighbor_id) in exact_scores:
                 assert abs(r.cos_sim - exact_scores[(r.query_id, r.neighbor_id)]) < 1e-9
-
-
-class TestIvf:
-    def test_ivf_recall_and_exact_scores(self, spark, sf_dir):
-        emb = read_table(spark, sf_dir, "embeddings")
-        exact = SS.brute_force_topk(emb, query_ids=[0, 1, 2], k=5).collect()
-        approx = SS.ivf_topk(emb, query_ids=[0, 1, 2], k=5, probes=3).collect()
-        exact_set = {(r.query_id, r.neighbor_id) for r in exact}
-        approx_set = {(r.query_id, r.neighbor_id) for r in approx}
-        assert len(approx_set & exact_set) / len(exact_set) >= 0.4
-        scores = {(r.query_id, r.neighbor_id): r.cos_sim for r in exact}
-        for r in approx:
-            if (r.query_id, r.neighbor_id) in scores:
-                assert abs(r.cos_sim - scores[(r.query_id, r.neighbor_id)]) < 1e-9
-
-    def test_kmeans_cells(self, spark, sf_dir):
-        emb = read_table(spark, sf_dir, "embeddings")
-        assigned = SS.kmeans_cells(emb, k=8).collect()
-        assert len(assigned) == emb.count()  # every vector assigned
-        cells = {r.cell for r in assigned}
-        assert 1 < len(cells) <= 8
-        assert all(len(r.centroid) == 64 for r in assigned)
 
 
 class TestSemanticDedup:
@@ -128,6 +136,15 @@ class TestIntegerGridVariants:
         a = {(r.query_id, r.neighbor_id) for r in approx}
         # observed 0.93 at sf0.001/0.01; bound leaves probe-miss room
         assert len(es & a) / len(es) >= 0.4, (len(es & a), len(es))
+        # IVF prunes candidates, never scores: every returned distance
+        # is the exact integer squared L2 of the pair's quantized vectors
+        from tests.test_portable_reference import ref_l2sq, ref_quant
+
+        vecs = _vectors(emb, {i for pair in a for i in pair})
+        for r in approx:
+            assert r.l2_dist == ref_l2sq(
+                ref_quant(vecs[r.query_id]), ref_quant(vecs[r.neighbor_id])
+            ), (r.query_id, r.neighbor_id)
 
     def test_kmeans_int_assigns_every_vector(self, spark, sf_dir):
         from pyspark.sql import functions as F
@@ -156,6 +173,15 @@ class TestIntegerGridVariants:
         p = {(r["query_id"], r["neighbor_id"]) for r in pq}
         # observed 0.34 (sf0.001) / 0.48 (sf0.01); random baseline ~0.01
         assert len(b & p) / len(b) >= 0.2, (len(b & p), len(b))
+        # compression quality: PQ's neighbors keep >= 0.7 of brute
+        # force's mean exact cosine (observed 0.847 / 0.855) on this
+        # weakly-clustered corpus (brute-force mean top-5 cosine ~0.32)
+        vecs = _vectors(emb, {i for pair in b | p for i in pair})
+
+        def mean_cos(pairs):
+            return sum(_cos(vecs[q], vecs[n]) for q, n in pairs) / len(pairs)
+
+        assert mean_cos(p) / mean_cos(b) >= 0.7, (mean_cos(p), mean_cos(b))
 
     def test_mean_vectors_fused_matches_exploded_with_null_vector(self, spark):
         """The fused small-dim centroid update must skip a NULL vector
@@ -292,3 +318,139 @@ class TestMMRSelect:
             )
 
         assert min_pair(mmr_ids) > min_pair(top8)
+
+
+class TestRoundedCosineReference:
+    """The rounded-cosine renderer and its DuckDB twin against the
+    plain-Python reference, and brute_force_topk against
+    brute_force_topk_sql on the same rows: negative cosines, identical
+    vectors, and neighbours that tie after rounding (broken by id)."""
+
+    VECS = {
+        0: [1.0, 0.0, 0.0],
+        1: [1.0, 0.0, 0.0],  # identical to 0
+        2: [1.0, 0.0001, 0.0],  # cos(0, 2) = 0.999999995: ties with 1
+        3: [1.0, 0.0002, 0.0],  # cos(0, 3) = 0.99999998: ties too
+        4: [-1.0, 0.0, 0.0],  # opposite to 0
+        5: [-0.5, 0.25, 0.75],
+        6: [0.5, 0.5, -0.5],
+        7: [0.0, 1.0, 1.0],
+    }
+
+    def _frames(self, spark):
+        import duckdb
+        import numpy as np
+        import pyarrow as pa
+
+        ids = sorted(self.VECS)
+        vecs = {i: [float(np.float32(x)) for x in self.VECS[i]] for i in ids}
+        sdf = spark.createDataFrame(
+            [(i, vecs[i]) for i in ids], "vec_id long, embedding array<float>"
+        )
+        con = duckdb.connect()
+        con.register(
+            "embeddings",
+            pa.table(
+                {
+                    "vec_id": pa.array(ids, pa.int64()),
+                    "embedding": pa.array(
+                        [vecs[i] for i in ids], pa.list_(pa.float32())
+                    ),
+                }
+            ),
+        )
+        return vecs, sdf, con
+
+    def test_pairwise_values(self, spark):
+        from pyspark.sql import functions as F
+
+        vecs, sdf, con = self._frames(spark)
+        ref = {
+            (a, b): ref_rounded_cosine(vecs[a], vecs[b])
+            for a in vecs
+            for b in vecs
+            if a < b
+        }
+        assert ref[(0, 1)] == ref[(0, 2)] == ref[(0, 3)] == 1.0
+        assert _cos(vecs[0], vecs[2]) != _cos(vecs[0], vecs[3])
+        assert ref[(0, 4)] == -1.0 and any(-1.0 < v < 0 for v in ref.values())
+
+        def side(s):
+            return sdf.select(
+                F.col("vec_id").alias(f"id_{s}"),
+                F.col("embedding").alias(f"v_{s}"),
+                SS.l2_norm(F.col("embedding")).alias(f"n_{s}"),
+            )
+
+        spark_vals = {
+            (r.id_a, r.id_b): r.c
+            for r in side("a")
+            .crossJoin(side("b"))
+            .where(F.col("id_a") < F.col("id_b"))
+            .select(
+                "id_a",
+                "id_b",
+                SS.rounded_cosine(
+                    F.col("v_a"), F.col("v_b"), F.col("n_a"), F.col("n_b")
+                ).alias("c"),
+            )
+            .collect()
+        }
+        duck_vals = {
+            (a, b): c
+            for a, b, c in con.execute(
+                f"""SELECT x.vec_id, y.vec_id,
+                       {SS.rounded_cosine_sql("x.embedding", "y.embedding")}
+                    FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id"""
+            ).fetchall()
+        }
+        assert spark_vals == ref
+        assert duck_vals == ref
+
+    def test_topk_twins_break_ties_by_id(self, spark):
+        vecs, sdf, con = self._frames(spark)
+        qids, k = [0, 4], 4
+        ref = set()
+        for q in qids:
+            scored = sorted(
+                (-ref_rounded_cosine(vecs[q], vecs[n]), n) for n in vecs if n != q
+            )
+            ref |= {(q, n, -c, r + 1) for r, (c, n) in enumerate(scored[:k])}
+        assert (0, 1, 1.0, 1) in ref and (0, 3, 1.0, 3) in ref
+        got = {tuple(r) for r in SS.brute_force_topk(sdf, qids, k).collect()}
+        duck = set(con.execute(SS.brute_force_topk_sql(qids, k)).fetchall())
+        assert got == ref
+        assert duck == ref
+
+
+class TestSaltedPairScanReference:
+    """The salted within-key pair scan at SALT 1 and 8 equals an O(n²)
+    Python loop on a small grid with repeated vectors (pairs tied at
+    1.0) and pairs whose rounded cosine equals the threshold."""
+
+    @pytest.mark.parametrize("salt", [1, 8])
+    def test_matches_quadratic_loop(self, spark, monkeypatch, salt):
+        monkeypatch.setattr(SS, "SALT", salt)
+        rows = [
+            (i, [float(i % 3), float((i // 3) % 2), 1.0], i % 4) for i in range(24)
+        ]
+        cos = {
+            (a, b): ref_rounded_cosine(va, vb)
+            for a, va, ca in rows
+            for b, vb, cb in rows
+            if a < b and ca == cb
+        }
+        threshold = sorted(set(cos.values()))[len(set(cos.values())) // 2]
+        expect = {(a, b, c) for (a, b), c in cos.items() if c >= threshold}
+        assert any(c == threshold for _, _, c in expect)
+        assert sum(c == 1.0 for _, _, c in expect) > 1
+        df = spark.createDataFrame(
+            rows, "vec_id long, embedding array<float>, cell int"
+        )
+        got = {
+            tuple(r)
+            for r in SS._salted_pairs(
+                df, "cell", threshold, "vec_id", "embedding"
+            ).collect()
+        }
+        assert got == expect

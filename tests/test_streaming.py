@@ -3,6 +3,8 @@ agg must produce exactly the batch operator's result (Kappa check)."""
 
 from __future__ import annotations
 
+import pytest
+
 from proto_to_avro_ql_spark.functions.stable import dec_sum
 from proto_to_avro_ql_spark.operators.windows import tumbling_window_agg
 from proto_to_avro_ql_spark.sources.io import read_table
@@ -27,14 +29,11 @@ class TestStatefulSessionize:
     def test_stream_sessionize_equals_batch(self, spark, sf_dir):
         """applyInPandasWithState sessionization must reproduce the
         batch window-function sessionization exactly."""
-        import shutil
-
         from proto_to_avro_ql_spark.operators.windows import sessionize
         from proto_to_avro_ql_spark.streaming.sessionize import (
             run_stream_sessionize_to_memory,
         )
 
-        shutil.rmtree("/tmp/ckpt_t_sessions", ignore_errors=True)
         streamed = {
             (r.user_id, r.event_id): r.session_seq
             for r in run_stream_sessionize_to_memory(
@@ -280,8 +279,8 @@ class TestStreamConnector:
 class TestStateReader:
     def test_state_store_equals_batch_and_resumes(self, spark, sf_dir):
         """The statestore read of a completed streaming aggregation
-        equals the batch aggregate, and a second run resumes the
-        offset log (reprocesses nothing) with identical state."""
+        equals the batch aggregate, and a second run over the same
+        data reads back identical state."""
         from proto_to_avro_ql_spark.entry_queries import QUERIES
         from proto_to_avro_ql_spark.sources.io import read_table
 
@@ -310,3 +309,37 @@ class TestStateReader:
             map(tuple, QUERIES["src_state_reader"](spark, sf_dir).collect())
         )
         assert second == first
+
+
+class TestStreamEntriesRerunOnChangedData:
+    """A second run of a stream entry over the same sf_dir after its
+    events changed must read the new data: each run starts from a fresh
+    checkpoint, so no offset log from an earlier run is resumed."""
+
+    @pytest.mark.parametrize("name", ["src_state_reader", "sink_stream_foreachbatch"])
+    def test_second_run_equals_batch_of_new_data(self, spark, sf_dir, tmp_path, name):
+        import shutil
+
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        from proto_to_avro_ql_spark.entry_queries import ORACLES, QUERIES
+        from tests.oracle_check import canon_rows, duckdb_con
+
+        scratch = str(tmp_path / "sf")
+        shutil.copytree(sf_dir, scratch)
+        events = f"{scratch}/events.parquet"
+        full = pq.read_table(events)
+
+        def rows(df):
+            return canon_rows(df.toPandas())
+
+        def batch():
+            return canon_rows(duckdb_con(scratch).execute(ORACLES[name]).fetchdf())
+
+        assert rows(QUERIES[name](spark, scratch)) == batch()
+        subset = full.filter(pc.equal(pc.bit_wise_and(full["event_id"], 1), 0))
+        assert 0 < subset.num_rows < full.num_rows
+        pq.write_table(subset, events)
+        second = rows(QUERIES[name](spark, scratch))
+        assert second == batch()

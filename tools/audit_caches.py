@@ -126,17 +126,12 @@ ALLOWED: dict[str, str] = {
         "(is_eval, lang, v, w, cnt) bigram partials (one tokenize pass; "
         "the train statistics and the eval scoring of every held-out "
         "bigram LM entry both slice it)",
-    "proto_to_avro_ql_spark/operators/simsearch.py:ivf_topk":
-        "trained centroids (probe rank + assignment) and cell-assigned "
-        "embeddings (candidate scan)",
     "proto_to_avro_ql_spark/operators/simsearch.py:semdedup":
         "assigned (id, cell, embedding) relation (both self-join sides "
         "of the within-cluster pair scan + the output spine read it)",
     "proto_to_avro_ql_spark/operators/simsearch.py:ivf_topk_int":
         "trained centroids (probe rank + assignment) and cell-assigned "
         "integer embeddings (query extraction + candidate scan)",
-    "proto_to_avro_ql_spark/operators/simsearch.py:pq_adc_topk":
-        "PQ codes (codebook build + ADC scoring branch)",
     "proto_to_avro_ql_spark/operators/simsearch.py:pq_adc_topk_int":
         "quantized subvectors (codebook training + encoding + query LUT) "
         "AND the trained codebooks (encoding + query LUT both read them; "

@@ -35,7 +35,9 @@ R6 shared-fragment copy (source only, ratchet at zero): each
    label-propagation vote in operators/graphs.py; the held-out
    (is_eval, lang, v, w) bigram aggregate in operators/lexical.py; the
    min-label connected-components closure (local union-find and
-   recursive CTE) in operators/clustering.py. A hand-written copy
+   recursive CTE) in operators/clustering.py; the rounded cosine
+   (Spark dot/norm fold and DuckDB list_cosine_similarity) in
+   operators/simsearch.py. A hand-written copy
    anywhere else in the package can drift from its twin (the
    RE2-vs-Java vertical-tab split was such a drift).
 R7 session-conf write (source only, ratchet at the allowlist): a
@@ -279,6 +281,10 @@ FRAGMENTS: dict[str, tuple[tuple[str, ...], re.Pattern]] = {
         r"while\s+parent(?:\[|\.get\()"
         r"|(?i:SELECT\s+(\w+)\.src,\s*(\w+)\.lab\s+FROM\s+\w+\s+\1\s+"
         r"JOIN\s+\2\s+ON\s+\2\.id\s*=\s*\1\.dst)"
+    )),
+    # round(dot(a, b) / (na * nb), 6) | ROUND(list_cosine_similarity(...), 6)
+    "rounded cosine": (("proto_to_avro_ql_spark/operators/simsearch.py",), re.compile(
+        r"(?i:round\(\s*(?:\w+\.)?(?:dot|list_cosine_similarity)\()"
     )),
 }
 

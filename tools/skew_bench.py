@@ -180,10 +180,11 @@ def main() -> None:
     # -- experiment 5: semdedup hot semantic cell, salt 1 vs 8 ------------
     # Replicate embeddings ×5 (distinct ids, same vectors) and send 50%
     # of rows to ONE cell: the hot cell holds ~5k vectors ≈ 12.5M
-    # in-cell pairs. salt=1 computes them in ONE task; salt=8 splits
-    # the probe side across 8 tasks (build side replicated ×8) — the
-    # deterministic spread for hot/low-cardinality cell sets.
-    from proto_to_avro_ql_spark.operators.simsearch import semantic_dedup_cells
+    # in-cell pairs. SALT=1 computes them in ONE task; SALT=8 (the
+    # module default) splits the probe side across 8 tasks (build side
+    # replicated ×8) — the deterministic spread for hot/low-cardinality
+    # cell sets. The salt is a module constant, patched per variant.
+    from proto_to_avro_ql_spark.operators import simsearch as SS
 
     emb = (
         read_table(spark, sf_dir, "embeddings")
@@ -202,7 +203,11 @@ def main() -> None:
 
     def semdedup(salt: int):
         def run():
-            return semantic_dedup_cells(emb, salt=salt).count()
+            saved, SS.SALT = SS.SALT, salt
+            try:
+                return SS.semantic_dedup_cells(emb).count()
+            finally:
+                SS.SALT = saved
         return run
 
     # warm BOTH variants (r6 ADVICE): salt=1 and salt=8 have different
