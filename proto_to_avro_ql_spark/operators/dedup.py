@@ -8,7 +8,8 @@ Five tiers, all DataFrame-native (no Python in the hot path):
                      blocking + hot-shingle suppression
 - MinHash LSH      — signature + banding for sub-quadratic candidate
                      generation, exact Jaccard verification
-- SimHash          — 32-bit sign-aggregate fingerprint, pure expressions
+- SimHash          — 32-bit sign-aggregate fingerprint of md5 token
+                     hashes, banded hamming blocking
 
 Scale design (the point of this module):
 - Nothing here is O(n²) on the full corpus. Pairwise work only happens
@@ -328,45 +329,12 @@ def contamination_check(
 SIMHASH_BITS = 32
 
 
-def _token_hash(t: Column, hash_fn: str) -> Column:
-    """Per-token hash for simhash. ``xxhash64`` (default) is the fast
-    production path; ``md5`` is the engine-portable variant (first 8 md5
-    hex chars as a 32-bit int — Spark ``conv(substring(md5(x),1,8),16,10)``
-    equals DuckDB ``('0x'||substr(md5(x),1,8))::BIGINT``), used by the
-    oracled entry so the whole pipeline is verifiable in DuckDB."""
-    if hash_fn == "md5":
-        return F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
-    return F.xxhash64(t)
-
-
-def simhash(col: Column, bits: int = SIMHASH_BITS) -> Column:
-    """Sign-aggregated token-hash fingerprint as a long, computed with a
-    single F.aggregate over the token array (per-row, no shuffle)."""
-    toks = tokens(col)
-    zero = F.array_repeat(F.lit(0), bits)
-    counts = F.aggregate(
-        toks,
-        zero,
-        lambda acc, t: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(
-                        F.shiftright(F.xxhash64(t), i).bitwiseAND(F.lit(1)) == 1,
-                        F.lit(1),
-                    ).otherwise(F.lit(-1))
-                    for i in range(bits)
-                ]
-            ),
-            lambda a, b: a + b,
-        ),
-    )
-    out = F.lit(0).cast("long")
-    for i in range(bits):
-        out = out + F.when(F.get(counts, i) > 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return out
+def _token_hash(t: Column) -> Column:
+    """Per-token hash for simhash: the first 8 md5 hex chars as a 32-bit
+    int. Engine-portable — Spark ``conv(substring(md5(x),1,8),16,10)``
+    equals DuckDB ``('0x'||substr(md5(x),1,8))::BIGINT`` — so the DuckDB
+    oracle recomputes the identical fingerprints."""
+    return F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
 
 
 def simhash_table(
@@ -374,19 +342,17 @@ def simhash_table(
     text_col: str = "text",
     id_col: str = "doc_id",
     bits: int = SIMHASH_BITS,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """(id, sh) simhash fingerprints via explode + per-bit sum
     aggregation — one token hash per row, ``bits`` small sum() aggs
-    with map-side combine; shuffle carries one row per doc. The
-    columnar formulation of :func:`simhash` for corpus-scale input.
+    with map-side combine; shuffle carries one row per doc.
 
     Repartitioned by id up front (parallelism for CPU-heavy small-bytes
     input + shuffle-free groupBy), as in minhash_signature_table."""
     n_part = docs.sparkSession.sparkContext.defaultParallelism
     toks = docs.repartition(n_part, F.col(id_col)).select(
         F.col(id_col).alias("id"), F.explode(tokens(F.col(text_col))).alias("t")
-    ).select("id", _token_hash(F.col("t"), hash_fn).alias("h"))
+    ).select("id", _token_hash(F.col("t")).alias("h"))
     per_bit = toks.groupBy("id").agg(
         *[
             F.sum(
@@ -409,14 +375,13 @@ def simhash_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     bands: int = 4,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance ≤ max_hamming.
     Blocking: split the fingerprint into ``bands`` bit-bands — any pair
     within hamming k < bands must collide on ≥1 band (pigeonhole), so
     the banding is exhaustive: output == ALL pairs at ≤ max_hamming."""
     width = SIMHASH_BITS // bands
-    sh = simhash_table(docs, text_col, id_col, hash_fn=hash_fn).persist()
+    sh = simhash_table(docs, text_col, id_col).persist()
     banded = sh.select(
         "id",
         "sh",

@@ -86,13 +86,6 @@ def _decode_and_featurize(payload: bytes) -> list[float]:
     return [round(c / n, 6) for c in bins]
 
 
-def decode_image(payload: bytes):  # pragma: no cover - documented stub
-    """Real image decode — NOT IMPLEMENTED in this container."""
-    raise NotImplementedError(
-        "image codecs unavailable in this environment; wire PIL/cv2 here"
-    )
-
-
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -265,7 +258,7 @@ def audio_window_energy(
     REAL vectorized computation (one numpy frombuffer + segmented
     cumulative-sum windowing per Arrow batch inside mapInPandas); a
     codec-backed decoder (mp3 → PCM) would swap only the frombuffer
-    line (the documented decode_image stub posture). All-integer
+    line (the documented stub-decoder posture of _decode_and_featurize). All-integer
     output, so the DuckDB oracle re-derives the samples from the same
     hex bytes and the energies compare exactly.
 

@@ -1,6 +1,8 @@
 """Event-time window operators (SURVEY.md §2.9 ext_window_agg /
 ext_window_rank) — the batch forms; the streaming variants live in
-proto_to_avro_ql_spark.streaming.
+proto_to_avro_ql_spark.streaming. The per-(window, event_type) event
+totals are written once here, as ``event_totals`` (Spark) and
+``event_totals_sql`` (DuckDB), for every windowed entry and oracle.
 
 Scale notes: tumbling-window agg shuffles once on (window, event_type)
 with map-side partials; the ranking window shuffles once on user_id.
@@ -10,23 +12,34 @@ Both keys are high-cardinality and unskewed here; for skewed users
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from proto_to_avro_ql_spark.functions.stable import dec_avg, dec_sum
 
 
-def tumbling_window_agg(events: DataFrame, duration: str = "1 hour") -> DataFrame:
-    """Per (tumbling window, event_type): count, sum(value), avg(value).
-    Window rendered as ISO string start for portability."""
-    w = F.window("ts", duration)
+def event_totals() -> list[Column]:
+    """The per-group event totals every windowed entry reports:
+    ``n_events`` (all rows) and ``sum_value``, the DECIMAL(38,6) sum of
+    ``value`` rounded half-up to 4 places (null values are skipped; an
+    all-null group sums to null)."""
+    return [F.count(F.lit(1)).alias("n_events"), dec_sum("value", 4).alias("sum_value")]
+
+
+def event_totals_sql() -> str:
+    """DuckDB select-list twin of :func:`event_totals`."""
+    return (
+        "COUNT(*) AS n_events, "
+        "CAST(ROUND(SUM(CAST(value AS DECIMAL(38,6))), 4) AS DOUBLE) AS sum_value"
+    )
+
+
+def _window_totals(events: DataFrame, w: Column) -> DataFrame:
+    """Per (window ``w``, event_type): the event totals and avg(value),
+    the window rendered as its ISO start string for portability."""
     return (
         events.groupBy(w.alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dec_sum("value", 4).alias("sum_value"),
-            dec_avg("value", 6).alias("avg_value"),
-        )
+        .agg(*event_totals(), dec_avg("value", 6).alias("avg_value"))
         .select(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             "event_type",
@@ -35,6 +48,11 @@ def tumbling_window_agg(events: DataFrame, duration: str = "1 hour") -> DataFram
             "avg_value",
         )
     )
+
+
+def tumbling_window_agg(events: DataFrame, duration: str = "1 hour") -> DataFrame:
+    """Per (tumbling window, event_type): count, sum(value), avg(value)."""
+    return _window_totals(events, F.window("ts", duration))
 
 
 def sliding_window_agg(
@@ -45,22 +63,7 @@ def sliding_window_agg(
     window set per row — a bounded explode, factor = duration/slide;
     the aggregation itself is the same map-side-partial hash agg as
     tumbling). Same output schema as tumbling_window_agg."""
-    w = F.window("ts", duration, slide)
-    return (
-        events.groupBy(w.alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dec_sum("value", 4).alias("sum_value"),
-            dec_avg("value", 6).alias("avg_value"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-            "avg_value",
-        )
-    )
+    return _window_totals(events, F.window("ts", duration, slide))
 
 
 def latest_event_per_user(events: DataFrame) -> DataFrame:

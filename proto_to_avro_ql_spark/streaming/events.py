@@ -3,10 +3,15 @@ variant; reference analog: the lazy gRPC row stream, Main.scala:60-66).
 
 The reference consumes a server-side stream as a lazy iterator with no
 state or watermarks; the Spark-native upgrade is a real readStream with
-event-time tumbling windows and late-data watermarking. Tests drive it
-with ``trigger(availableNow=True)`` over the parquet events table and
-assert the result equals the batch operator — the Kappa-architecture
-consistency check.
+event-time tumbling windows and late-data watermarking. Every stream
+here is bounded: :func:`run_to_end` runs one with the ``availableNow``
+trigger (process everything currently available, then stop) under one
+policy — the state width, a time limit, and a failure that raises — and
+:func:`drain_to_memory` collects one into a memory sink and hands back
+the result without leaving a view in the caller's session. The stream
+builders below (window aggregation, stream-stream join, watermarked
+dedup, stream-static enrichment) each equal their batch operator — the
+Kappa-architecture consistency check the oracles and tests pin.
 
 Scale notes: watermark + append output keeps state bounded (windows
 close and evict); the aggregation shuffles on (window, event_type) with
@@ -15,14 +20,16 @@ partial aggregation, identical to the batch plan.
 
 from __future__ import annotations
 
-import contextlib
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 from proto_to_avro_ql_spark.functions.portable import ntz_from_micros
-from proto_to_avro_ql_spark.functions.stable import dec_avg, dec_sum
+from proto_to_avro_ql_spark.functions.stable import dec_avg
+from proto_to_avro_ql_spark.operators.windows import event_totals
 
 # Stateful streaming queries pin their state-partition count from
 # spark.sql.shuffle.partitions at first start (it is burned into the
@@ -41,20 +48,14 @@ from proto_to_avro_ql_spark.functions.stable import dec_avg, dec_sum
 # 8 suits the bench's MB-scale state at any core count; a production
 # job with TB-scale state wants hundreds+.
 STREAM_STATE_PARTITIONS = 8
-
-
-@contextlib.contextmanager
-def stream_state_partitions(spark: SparkSession):
-    """Scope spark.sql.shuffle.partitions to the state-volume-sized
-    streaming value while a streaming query is defined and started;
-    restore the batch setting after. The running query keeps its own
-    conf snapshot, so restoring post-start is safe."""
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_STATE_PARTITIONS)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+# Longest wait for a bounded stream to drain; past it the query is
+# stopped and the run fails instead of returning a partial result.
+RUN_TIMEOUT_S = 300
+# Event-time lateness every watermarked stream tolerates.
+WATERMARK = "2 hours"
+WINDOW = "1 hour"
+# A click is attributed to the same user's views this far before it.
+ATTRIBUTION_MINUTES = 30
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -66,6 +67,42 @@ EVENTS_SCHEMA = T.StructType(
         T.StructField("props", T.StringType()),
     ]
 )
+
+
+def run_to_end(writer: DataStreamWriter) -> None:
+    """Start ``writer`` with the availableNow trigger and wait until it
+    has processed everything available. A failed query raises its
+    StreamingQueryException; one still running after RUN_TIMEOUT_S is
+    stopped and raises TimeoutError.
+
+    The state width is spark.sql.shuffle.partitions as the query STARTS:
+    the query clones the session conf in start(), so scoping the conf to
+    STREAM_STATE_PARTITIONS around start() alone sizes its state and
+    leaves the caller's session as it was."""
+    spark = writer._spark
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_STATE_PARTITIONS)
+    try:
+        q = writer.trigger(availableNow=True).start()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    if not q.awaitTermination(RUN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(f"stream {q.id} still running after {RUN_TIMEOUT_S} s")
+
+
+def drain_to_memory(df: DataFrame, mode: str) -> DataFrame:
+    """Run the bounded stream ``df`` to its end into a memory sink in
+    output ``mode`` and return the result. The sink's temp view, under a
+    name unique to this call, is dropped once the result is resolved:
+    the returned frame holds the sink, not the view."""
+    spark = df.sparkSession
+    name = f"drain_{uuid.uuid4().hex}"
+    try:
+        run_to_end(df.writeStream.format("memory").queryName(name).outputMode(mode))
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,23 +126,14 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.timestamp_micros(F.col("ts")))
 
 
-def stream_tumbling_window_agg(
-    spark: SparkSession,
-    sf_dir: str,
-    duration: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def stream_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming tumbling-window aggregation with late-data watermark.
-    Same output schema as operators.windows.tumbling_window_agg."""
-    ev = stream_events(spark, sf_dir).withWatermark("ts", watermark)
-    w = F.window("ts", duration)
+    Same output schema as operators.windows.tumbling_window_agg; drain
+    it in complete mode (no dependency on append finalization)."""
+    ev = stream_events(spark, sf_dir).withWatermark("ts", WATERMARK)
     return (
-        ev.groupBy(w.alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dec_sum("value", 4).alias("sum_value"),
-            dec_avg("value", 6).alias("avg_value"),
-        )
+        ev.groupBy(F.window("ts", WINDOW).alias("w"), F.col("event_type"))
+        .agg(*event_totals(), dec_avg("value", 6).alias("avg_value"))
         .select(
             F.date_format(
                 F.expr(ntz_from_micros("unix_micros(w.start)")), "yyyy-MM-dd HH:mm:ss"
@@ -118,42 +146,18 @@ def stream_tumbling_window_agg(
     )
 
 
-def run_stream_to_memory(
-    spark: SparkSession, sf_dir: str, table_name: str = "stream_window_agg"
-) -> DataFrame:
-    """Execute the streaming agg with availableNow (process everything
-    currently available, then stop) into an in-memory sink; returns the
-    materialized result. Complete mode: windowed agg without append
-    finalization dependency."""
-    with stream_state_partitions(spark):
-        q = (
-            stream_tumbling_window_agg(spark, sf_dir)
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.table(table_name)
-
-
-def stream_click_attribution(
-    spark: SparkSession,
-    sf_dir: str,
-    gap_minutes: int = 30,
-    watermark: str = "2 hours",
-) -> DataFrame:
+def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked STREAM-STREAM inner join: each click joined to the
-    same user's views in the preceding ``gap_minutes`` (the classic
+    same user's views in the preceding ATTRIBUTION_MINUTES (the classic
     view→click attribution join).
 
     Both sides carry event-time watermarks and the join condition
     bounds view_ts to a window around click_ts, so Spark can evict
     buffered state once the watermark passes — bounded state at
-    unbounded input, the whole point of a watermarked join. With
-    ``availableNow`` over the staged table the result must equal the
-    batch inner join (pinned by the DuckDB oracle + pytest)."""
+    unbounded input, the whole point of a watermarked join. Drained in
+    append mode (an inner join emits rows as matches arrive), the
+    result must equal the batch inner join (pinned by the DuckDB
+    oracle + pytest)."""
     ev = stream_events(spark, sf_dir)
     clicks = (
         ev.where(F.col("event_type") == "click")
@@ -162,7 +166,7 @@ def stream_click_attribution(
             F.col("user_id"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", WATERMARK)
     )
     views = (
         ev.where(F.col("event_type") == "view")
@@ -171,14 +175,14 @@ def stream_click_attribution(
             F.col("user_id").alias("view_user"),
             F.col("ts").alias("view_ts"),
         )
-        .withWatermark("view_ts", watermark)
+        .withWatermark("view_ts", WATERMARK)
     )
     joined = clicks.join(
         views,
         F.expr(
             f"""user_id = view_user
                 AND view_ts <= click_ts
-                AND view_ts >= click_ts - INTERVAL {gap_minutes} MINUTES"""
+                AND view_ts >= click_ts - INTERVAL {ATTRIBUTION_MINUTES} MINUTES"""
         ),
     )
     return joined.select(
@@ -189,49 +193,20 @@ def stream_click_attribution(
     )
 
 
-def run_stream_join_to_memory(
-    spark: SparkSession, sf_dir: str, table_name: str = "stream_click_attr"
-) -> DataFrame:
-    """Execute the stream-stream join with availableNow into a memory
-    sink (append mode — inner joins emit rows as matches arrive)."""
-    with stream_state_partitions(spark):
-        q = (
-            stream_click_attribution(spark, sf_dir)
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.table(table_name)
-
-
-def run_stream_dedup_to_memory(
-    spark: SparkSession, sf_dir: str, table_name: str = "stream_dedup"
-) -> DataFrame:
+def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked STREAMING DEDUPLICATION: the source is read twice and
     unioned (every event arrives twice — the at-least-once delivery
     shape of real queues), then ``dropDuplicatesWithinWatermark`` on the
-    event id emits each exactly once. State for an id is dropped once
-    the watermark passes its event time — bounded state, unlike a plain
-    dropDuplicates which remembers every key forever."""
-    with stream_state_partitions(spark):
-        a = stream_events(spark, sf_dir)
-        b = stream_events(spark, sf_dir)
-        ev = a.union(b).withWatermark("ts", "2 hours")
-        deduped = ev.dropDuplicatesWithinWatermark(["event_id"]).select(
-            "event_id", "user_id", "event_type"
-        )
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.table(table_name)
+    event id emits each exactly once (drain in append mode). State for
+    an id is dropped once the watermark passes its event time — bounded
+    state, unlike a plain dropDuplicates which remembers every key
+    forever."""
+    ev = stream_events(spark, sf_dir).union(stream_events(spark, sf_dir))
+    return (
+        ev.withWatermark("ts", WATERMARK)
+        .dropDuplicatesWithinWatermark(["event_id"])
+        .select("event_id", "user_id", "event_type")
+    )
 
 
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -240,7 +215,8 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     side is a plain batch DataFrame; Spark re-plans it per micro-batch
     and broadcasts it — no streaming state, no watermark, the canonical
     lakehouse enrichment shape (vs the stateful stream-stream join in
-    stream_click_attribution)."""
+    stream_click_attribution). Stateless row-wise: drain in append
+    mode."""
     from proto_to_avro_ql_spark.sources.io import read_table
 
     ev = stream_events(spark, sf_dir)
@@ -249,20 +225,3 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = ev.join(F.broadcast(dim), ev.user_id == dim.c_custkey)
     return joined.select("event_id", "user_id", "event_type", "c_mktsegment")
-
-
-def run_stream_static_enrich_to_memory(
-    spark: SparkSession, sf_dir: str, table_name: str = "stream_static_enrich"
-) -> DataFrame:
-    """Execute the stream-static enrichment with availableNow into a
-    memory sink (append — stateless row-wise enrichment)."""
-    q = (
-        stream_static_enrich(spark, sf_dir)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(table_name)

@@ -5,13 +5,12 @@ Main.scala:60-66).
 
 Per-user state carries (last_ts_micros, session_seq) across micro-
 batches; events in each batch are sorted by event time inside the
-group. With a processing-time timeout the state for idle users is
-dropped — bounded state, the streaming-at-scale requirement.
+group. Drain it with ``events.drain_to_memory(stream_sessionize(...),
+"update")``; each run starts from a fresh checkpoint.
 """
 
 from __future__ import annotations
 
-import tempfile
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
@@ -21,6 +20,9 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from proto_to_avro_ql_spark.streaming.events import stream_events
+
+# A user's next event starts a new session after this much silence.
+SESSION_GAP_MINUTES = 30
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -42,11 +44,10 @@ def _sessionize_group(
     key: Tuple[Any, ...],
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
-    gap_minutes: int = 30,
 ) -> Iterator[pd.DataFrame]:
     (user_id,) = key
     last_ts_us, seq = state.get if state.exists else (None, 0)
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = SESSION_GAP_MINUTES * 60 * 1_000_000
 
     batch = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
     out_seq = []
@@ -67,44 +68,15 @@ def _sessionize_group(
     )
 
 
-def stream_sessionize(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 30
-) -> DataFrame:
+def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = stream_events(spark, sf_dir).select("user_id", "event_id", "ts")
     return ev.groupBy("user_id").applyInPandasWithState(
-        lambda key, pdfs, state: _sessionize_group(key, pdfs, state, gap_minutes),
+        _sessionize_group,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_stream_sessionize_to_memory(
-    spark: SparkSession,
-    sf_dir: str,
-    table_name: str = "stream_sessions",
-    gap_minutes: int = 30,
-) -> DataFrame:
-    from proto_to_avro_ql_spark.streaming.events import stream_state_partitions
-
-    # A fresh checkpoint per run: a reused one would resume its offset
-    # log and process nothing. The memory table outlives it.
-    with stream_state_partitions(spark), tempfile.TemporaryDirectory(
-        prefix="sessionize_ckpt_"
-    ) as ckpt:
-        q = (
-            stream_sessionize(spark, sf_dir, gap_minutes)
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination(300)
-        q.stop()
-    return spark.table(table_name)
 
 
 # Executor workers don't share the driver's sys.path patch — ship this

@@ -1,118 +1,58 @@
-"""Streaming sinks beyond the memory demo: foreachBatch with an
-idempotent overwrite-by-partition parquet write — the exactly-once
-recipe without a transactional table format.
-
-Each micro-batch's aggregates are written with dynamic partition
-overwrite: re-processing a batch after a crash rewrites the same
-partitions with the same content instead of duplicating rows. This is
-the pattern the incremental layer (sources/incremental.py) pairs with.
+"""The append-mode parquet file sink: a windowed aggregation whose
+rows reach storage exactly once, when the watermark passes each
+window's end — the finalization semantics a complete-mode memory
+drain can't show (complete re-emits all state every batch; append is
+what a 100 TB stream must use, since state for closed windows is
+evicted).
 """
 
 from __future__ import annotations
+
+import glob
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from proto_to_avro_ql_spark.functions.portable import epoch_micros, ntz_from_micros
-from proto_to_avro_ql_spark.functions.stable import dec_sum
-from proto_to_avro_ql_spark.streaming.events import (
-    stream_events,
-    stream_state_partitions,
-)
+from proto_to_avro_ql_spark.operators.windows import event_totals
+from proto_to_avro_ql_spark.sources.io import read_table
+from proto_to_avro_ql_spark.streaming.events import WATERMARK, WINDOW, run_to_end
 
-
-def windowed_agg(ev: DataFrame, duration: str = "1 hour") -> DataFrame:
-    w = F.window("ts", duration)
-    return (
-        ev.groupBy(w.alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"), dec_sum("value", 4).alias("sum_value"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd-HH").alias("window_part"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def run_stream_to_partitioned_parquet(
-    spark: SparkSession,
-    sf_dir: str,
-    out_path: str,
-    checkpoint: str,
-    duration: str = "1 hour",
-) -> None:
-    """availableNow streaming run writing per-window partitions
-    idempotently via foreachBatch."""
-    ev = stream_events(spark, sf_dir).withWatermark("ts", "2 hours")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # the stream's ts is an instant; window it as the batch reader's
-        # timestamp_ntz so the partition names are the stored wall clock
-        ntz = batch_df.withColumn("ts", F.expr(ntz_from_micros("unix_micros(ts)")))
-        agg = windowed_agg(ntz, duration)
-        # dynamic overwrite: only partitions present in this batch are
-        # replaced — a replayed batch converges to the same state.
-        agg.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("window_part").parquet(out_path)
-
-    q = (
-        ev.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+# Time-slice files the bounded events table is re-staged as, and the
+# single-row sentinel slices staged after them.
+N_FILES = 4
+N_SENTINELS = 2
 
 
 def run_stream_append_parquet(
-    spark: SparkSession,
-    sf_dir: str,
-    staging: str,
-    out_path: str,
-    checkpoint: str,
-    duration: str = "1 hour",
-    watermark: str = "2 hours",
-    n_files: int = 4,
-    flush_sentinels: int = 0,
+    spark: SparkSession, sf_dir: str, staging: str, out_path: str, checkpoint: str
 ) -> DataFrame:
-    """Native parquet file sink in APPEND output mode: each window row
-    is emitted exactly once, when the watermark passes its end — the
-    finalization semantics the complete-mode memory demo can't show
-    (complete re-emits all state every batch; append is what a 100 TB
-    stream must use, since state for closed windows is evicted).
+    """Run the events through the append-mode parquet sink at
+    ``out_path`` and return the finalized (window_start, window_end,
+    event_type, n_events, sum_value) rows: exactly one per real window
+    and event type, a pure function of the data.
 
-    The bounded events table is re-staged as ``n_files`` time-slice
-    files so the file source (maxFilesPerTrigger=1) delivers
+    The bounded events table is re-staged under ``staging`` as N_FILES
+    time-slice files so the file source (maxFilesPerTrigger=1) delivers
     time-ascending micro-batches and the watermark genuinely advances
     between them; a single-file source yields one batch whose starting
-    watermark finalizes nothing.
+    watermark finalizes nothing. The watermark observed by batch N is
+    computed from data through batch N-1, so on the real slices alone
+    the trailing windows would stay un-emitted. N_SENTINELS single-row
+    'sentinel' slices are therefore staged AFTER the real data, far
+    enough ahead (> watermark + window past max ts) that the advancing
+    watermark passes every REAL window end with at least one batch to
+    spare. The sentinels' own windows never finalize (nothing later
+    advances the watermark past them) and are filtered out here all
+    the same.
 
     Determinism: slice boundaries are FIXED arithmetic on (min, max) ts
     — not repartitionByRange, whose sampled boundaries can shift
     between runs — and each slice's file mtime is set explicitly
     ascending, because the file source orders by mtime and a tie would
     make the batch order (hence the watermark sequence, hence the
-    finalized set) run-dependent.
-
-    ``flush_sentinels`` (round 8): with 0, which windows finalize is a
-    function of Spark's micro-batch watermark protocol (the watermark
-    observed by batch N is computed from data through batch N-1, so
-    the trailing windows stay un-emitted) — reproducible, but
-    implementation-defined. With k >= 2, k single-row 'sentinel'
-    slices are staged AFTER the real data, far enough ahead
-    (> watermark + duration past max ts) that the advancing watermark
-    passes every REAL window end with at least one batch to spare —
-    so the emitted set becomes exactly "all real windows", a pure
-    function of the data, and the append run is DuckDB-oracle-able as
-    a plain windowed aggregation (the sentinels' own windows are never
-    emitted: nothing later advances the watermark past them)."""
-    import glob
-    import os
-
-    from proto_to_avro_ql_spark.sources.io import read_table
-
+    finalized set) run-dependent."""
     # Staged with ts as epoch micros, and read back as the instant
     # stream_events builds, so the watermark has a zoned timestamp.
     ev_batch = read_table(spark, sf_dir, "events").withColumn(
@@ -121,26 +61,23 @@ def run_stream_append_parquet(
     lo, hi = ev_batch.agg(F.min("ts"), F.max("ts")).first()
     span_us = max(hi - lo, 1_000_000)
     slice_expr = F.least(
-        F.lit(n_files - 1), F.floor((F.col("ts") - lo) / (span_us / n_files))
+        F.lit(N_FILES - 1), F.floor((F.col("ts") - lo) / (span_us / N_FILES))
     )
-    base_mtime = int(os.path.getmtime(staging)) - 2 * (n_files + flush_sentinels)
+    base_mtime = int(os.path.getmtime(staging)) - 2 * (N_FILES + N_SENTINELS)
     # All slices + sentinels staged in ONE job: a single dynamic-
     # partition write from one task yields exactly one file per
-    # slice=i dir (the old per-slice loop ran n_files+k sequential
-    # driver jobs, each a full events scan — 6 scans and 6 job
-    # latencies for 4+2 slices). Row order within a file differs from
-    # the old coalesce(1) writes, but the windowed aggregate is
-    # order-insensitive and the watermark sequence depends only on the
-    # per-slice file mtimes set below.
+    # slice=i dir. Row order within a file is arbitrary, but the
+    # windowed aggregate is order-insensitive and the watermark
+    # sequence depends only on the per-slice file mtimes set below.
     staged = ev_batch.withColumn("slice", slice_expr.cast("int"))
-    for j in range(flush_sentinels):
+    for j in range(N_SENTINELS):
         # one future event per sentinel slice: ts beyond watermark +
-        # duration past the real max, each an hour apart so every
+        # window past the real max, each an hour apart so every
         # sentinel batch advances the watermark again.
         sent_ts = F.expr(
             epoch_micros(
-                f"{ntz_from_micros(str(hi))} + INTERVAL {watermark} "
-                f"+ INTERVAL {duration} + INTERVAL {j + 1} HOUR"
+                f"{ntz_from_micros(str(hi))} + INTERVAL {WATERMARK} "
+                f"+ INTERVAL {WINDOW} + INTERVAL {j + 1} HOUR"
             )
         )
         sent = spark.range(1).select(
@@ -150,48 +87,41 @@ def run_stream_append_parquet(
             F.lit("sentinel").alias("event_type"),
             F.lit(0.0).alias("value"),
             F.lit("{}").alias("props"),
-            F.lit(n_files + j).cast("int").alias("slice"),
+            F.lit(N_FILES + j).cast("int").alias("slice"),
         )
         staged = staged.unionByName(sent)
     staged.repartition(1).write.mode("overwrite").partitionBy("slice").parquet(
         staging
     )
-    for s in range(n_files + flush_sentinels):
+    for s in range(N_FILES + N_SENTINELS):
         mt = base_mtime + 2 * s
         for f in glob.glob(os.path.join(staging, f"slice={s}", "*.parquet")):
             os.utime(f, (mt, mt))
 
-    with stream_state_partitions(spark):
-        ev = (
-            spark.readStream.schema(ev_batch.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(staging)
-            .withColumn("ts", F.timestamp_micros("ts"))
-            .withWatermark("ts", watermark)
+    ev = (
+        spark.readStream.schema(ev_batch.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(staging)
+        .withColumn("ts", F.timestamp_micros("ts"))
+        .withWatermark("ts", WATERMARK)
+    )
+    agg = (
+        ev.groupBy(F.window("ts", WINDOW).alias("w"), F.col("event_type"))
+        .agg(*event_totals())
+        .select(
+            F.expr(ntz_from_micros("unix_micros(w.start)")).alias("window_start"),
+            F.expr(ntz_from_micros("unix_micros(w.end)")).alias("window_end"),
+            "event_type",
+            "n_events",
+            "sum_value",
         )
-        agg = (
-            ev.groupBy(F.window("ts", duration).alias("w"), F.col("event_type"))
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                dec_sum("value", 4).alias("sum_value"),
-            )
-            .select(
-                F.expr(ntz_from_micros("unix_micros(w.start)")).alias("window_start"),
-                F.expr(ntz_from_micros("unix_micros(w.end)")).alias("window_end"),
-                "event_type",
-                "n_events",
-                "sum_value",
-            )
-        )
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out_path)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.read.parquet(out_path)
+    )
+    run_to_end(
+        agg.writeStream.format("parquet")
+        .option("path", out_path)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+    )
+    return spark.read.parquet(out_path).where(F.col("event_type") != "sentinel")

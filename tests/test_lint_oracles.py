@@ -12,6 +12,7 @@ from __future__ import annotations
 from tools.lint_oracles import (
     find_conf_writes,
     find_fragment_copies,
+    find_stream_runs,
     find_violations,
     lint_all,
 )
@@ -135,6 +136,13 @@ class TestRelationCopiesFire:
             'q = """SELECT ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),\n'
             '  CAST(b.embedding AS DOUBLE[])), 6) AS cos_sim"""\n',
         ),
+        "event totals": (
+            'a = ev.groupBy("event_type").agg(\n    F.count(F.lit(1)).alias("n_events"),\n'
+            '    dec_sum("value", 4).alias("sum_value"),\n)\n',
+            'q = """SELECT event_type, COUNT(*) AS n_events,\n'
+            '  CAST(ROUND(SUM(CAST(value AS DECIMAL(38,6))), 4) AS DOUBLE) AS sum_value\n'
+            '  FROM events GROUP BY 1"""\n',
+        ),
     }
 
     def test_spark_and_sql_copies_fire(self):
@@ -163,6 +171,25 @@ class TestRelationCopiesFire:
             'c = SS.rounded_cosine(F.col("a"), F.col("b"), F.col("na"), F.col("nb"))\n'
         )
 
+    def test_event_totals_owner_and_renderer_calls_clean(self):
+        windows = "proto_to_avro_ql_spark/operators/windows.py"
+        for src in self.CASES["event totals"]:
+            assert not find_fragment_copies(src, windows)
+        assert not find_fragment_copies(
+            'q = f"""SELECT event_type, {W.event_totals_sql()} FROM events"""\n'
+            'a = ev.groupBy("event_type").agg(*W.event_totals())\n'
+        )
+
+    def test_other_event_aggregates_are_not_totals_copies(self):
+        """A bare count, or the sum in another unit or scale (the
+        foreachBatch entry's integer cents), is a different fact."""
+        assert not find_fragment_copies(
+            'q = """SELECT COUNT(*) AS n_events,\n'
+            "  CAST(ROUND(SUM(CAST(value AS DECIMAL(38,6))) * 100, 0) AS BIGINT) AS cents\n"
+            '  FROM events"""\n'
+            'a = ev.agg(F.count(F.lit(1)).alias("n_events"), dec_sum("value", 2).alias("s"))\n'
+        )
+
     def test_dense_cell_closure_is_not_a_components_copy(self):
         """ext_dbscan_grid's closure is seeded from every dense cell,
         not from the pair nodes: not the connected-components twin."""
@@ -188,9 +215,8 @@ class TestSessionConfWritesFire:
         '    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")\n'
         "    df.sparkSession.conf.unset('spark.sql.files.maxPartitionBytes')\n"
         "\n"
-        "@contextlib.contextmanager\n"
-        "def stream_state_partitions(spark):\n"
-        '    spark.conf.set("spark.sql.shuffle.partitions", 8)\n'
+        "def run_to_end(writer):\n"
+        '    writer._spark.conf.set("spark.sql.shuffle.partitions", 8)\n'
     )
 
     def test_writes_outside_allowlist_fire(self):
@@ -208,6 +234,45 @@ class TestSessionConfWritesFire:
             '    tz = spark.conf.get("spark.sql.session.timeZone")\n'
             '    df.write.option("partitionOverwriteMode", "dynamic").parquet(p)\n',
             "proto_to_avro_ql_spark/streaming/sinks.py",
+        )
+
+
+class TestStreamRunsFire:
+    """R8: a bounded stream started or awaited outside run_to_end."""
+
+    EVENTS = "proto_to_avro_ql_spark/streaming/events.py"
+    SRC = (
+        "def run_to_end(writer):\n"
+        "    q = writer.trigger(availableNow=True).start()\n"
+        "    q.awaitTermination(RUN_TIMEOUT_S)\n"
+        "\n"
+        "def q_entry(spark, sf_dir):\n"
+        '    q = df.writeStream.format("noop").trigger(availableNow=True).start()\n'
+        "    q.awaitTermination()\n"
+        "\n"
+        "def drain(q):\n"
+        "    q.awaitTermination(300)\n"
+    )
+
+    def test_runs_outside_the_runner_fire_once_per_function(self):
+        hits = find_stream_runs(self.SRC, self.EVENTS)
+        assert hits == [
+            "R8 bounded stream run in q_entry (line 6)",
+            "R8 bounded stream run in drain (line 10)",
+        ], hits
+
+    def test_runner_exempt_only_in_its_own_module(self):
+        hits = find_stream_runs(self.SRC, "proto_to_avro_ql_spark/entry_registry.py")
+        assert len(hits) == 3 and "run_to_end" in hits[0], hits
+
+    def test_runner_calls_and_prose_clean(self):
+        assert not find_stream_runs(
+            '"""Docstring: q.awaitTermination(300) and .trigger(once=True)."""\n'
+            "# comment: q.awaitTermination()\n"
+            "def q_entry(spark, sf_dir):\n"
+            '    run_to_end(agg.writeStream.format("noop"))\n'
+            '    return drain_to_memory(df, "append")\n',
+            self.EVENTS,
         )
 
 

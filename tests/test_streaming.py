@@ -1,14 +1,26 @@
-"""Streaming/batch consistency: the Structured Streaming tumbling-window
-agg must produce exactly the batch operator's result (Kappa check)."""
+"""Streaming/batch consistency: each bounded stream must produce exactly
+its batch operator's result (Kappa check); the one runner every stream
+goes through keeps its time limit, its state width and the caller's
+session; the event totals match a plain-Python reference."""
 
 from __future__ import annotations
 
 import pytest
 
-from proto_to_avro_ql_spark.functions.stable import dec_sum
-from proto_to_avro_ql_spark.operators.windows import tumbling_window_agg
+from proto_to_avro_ql_spark.operators.windows import event_totals, tumbling_window_agg
 from proto_to_avro_ql_spark.sources.io import read_table
-from proto_to_avro_ql_spark.streaming.events import run_stream_to_memory
+from proto_to_avro_ql_spark.streaming import events as ST
+
+STREAM_ENTRIES = [
+    "ext_stream_window",
+    "ext_stream_append_sink",
+    "ext_stream_join",
+    "ext_stream_dedup",
+    "ext_stream_static_join",
+    "src_stream_connector",
+    "src_state_reader",
+    "sink_stream_foreachbatch",
+]
 
 
 class TestStreamingWindowAgg:
@@ -19,7 +31,9 @@ class TestStreamingWindowAgg:
         }
         streamed = {
             (r.window_start, r.event_type): (r.n_events, r.sum_value, r.avg_value)
-            for r in run_stream_to_memory(spark, sf_dir).collect()
+            for r in ST.drain_to_memory(
+                ST.stream_tumbling_window_agg(spark, sf_dir), "complete"
+            ).collect()
         }
         assert streamed == batch
         assert len(batch) > 0
@@ -30,15 +44,11 @@ class TestStatefulSessionize:
         """applyInPandasWithState sessionization must reproduce the
         batch window-function sessionization exactly."""
         from proto_to_avro_ql_spark.operators.windows import sessionize
-        from proto_to_avro_ql_spark.streaming.sessionize import (
-            run_stream_sessionize_to_memory,
-        )
+        from proto_to_avro_ql_spark.streaming.sessionize import stream_sessionize
 
         streamed = {
             (r.user_id, r.event_id): r.session_seq
-            for r in run_stream_sessionize_to_memory(
-                spark, sf_dir, table_name="t_sessions"
-            ).collect()
+            for r in ST.drain_to_memory(stream_sessionize(spark, sf_dir), "update").collect()
         }
         batch = {
             (r.user_id, r.event_id): r.session_seq
@@ -48,91 +58,45 @@ class TestStatefulSessionize:
         assert streamed == batch
 
 
-class TestForeachBatchIdempotentSink:
-    def test_stream_partitioned_parquet_equals_batch(self, spark, sf_dir):
-        import shutil
-        import tempfile
-
-        from proto_to_avro_ql_spark.sources.io import read_table
-        from proto_to_avro_ql_spark.streaming.sinks import (
-            run_stream_to_partitioned_parquet,
-            windowed_agg,
-        )
-
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        mode_before = spark.conf.get(mode_key)
-        out = tempfile.mkdtemp(prefix="stream_out_")
-        ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-        run_stream_to_partitioned_parquet(spark, sf_dir, out, ckpt)
-        # the dynamic overwrite is a per-write option: the caller's
-        # session keeps its own mode
-        assert spark.conf.get(mode_key) == mode_before
-        streamed = {
-            (r.window_part, r.event_type): (r.n_events, r.sum_value)
-            for r in spark.read.parquet(out).collect()
-        }
-        batch = {
-            (r.window_part, r.event_type): (r.n_events, r.sum_value)
-            for r in windowed_agg(read_table(spark, sf_dir, "events")).collect()
-        }
-        assert streamed == batch and len(batch) > 0
-
-        # idempotence: re-running from a FRESH checkpoint replays the
-        # data and converges to the same output (no duplication)
-        shutil.rmtree(ckpt)
-        run_stream_to_partitioned_parquet(spark, sf_dir, out, tempfile.mkdtemp(prefix="ck2_"))
-        again = {
-            (r.window_part, r.event_type): (r.n_events, r.sum_value)
-            for r in spark.read.parquet(out).collect()
-        }
-        assert again == batch
-
-
 class TestAppendModeFileSink:
     def test_append_sink_emits_only_finalized_windows(self, spark, sf_dir):
-        """Native parquet sink, append mode: emitted windows are (a) a
-        non-empty subset of the batch result, (b) value-identical to
-        their batch counterparts, and (c) all strictly finalized — no
-        window past the final watermark ever reaches the sink."""
-        import datetime
+        """Native parquet sink, append mode, sentinel slices staged after
+        the data: the emitted rows are exactly the batch window totals —
+        every real window once, no sentinel row, none emitted twice."""
         import tempfile
 
         from pyspark.sql import functions as F
 
-        from proto_to_avro_ql_spark.sources.io import read_table
+        from proto_to_avro_ql_spark.functions.portable import epoch_micros, ntz_from_micros
         from proto_to_avro_ql_spark.streaming.sinks import run_stream_append_parquet
 
         staging = tempfile.mkdtemp(prefix="app_stage_")
         out = tempfile.mkdtemp(prefix="app_out_")
         ckpt = tempfile.mkdtemp(prefix="app_ckpt_")
-        emitted_df = run_stream_append_parquet(spark, sf_dir, staging, out, ckpt)
-        emitted = {
-            (r.window_start, r.event_type): (r.n_events, r.sum_value, r.window_end)
-            for r in emitted_df.collect()
-        }
-
-        ev = read_table(spark, sf_dir, "events")
-        batch = {
-            (r.window_start, r.event_type): (r.n_events, r.sum_value)
-            for r in ev.groupBy(
-                F.window("ts", "1 hour").alias("w"), F.col("event_type")
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                dec_sum("value", 4).alias("sum_value"),
-            )
-            .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
+        emitted = sorted(
+            tuple(r)
+            for r in run_stream_append_parquet(spark, sf_dir, staging, out, ckpt)
+            .select("window_start", "window_end", "event_type", "n_events", "sum_value")
             .collect()
-        }
-        assert len(emitted) > 0
-        for key, (n, s, _end) in emitted.items():
-            assert batch[key] == (n, s)
-
-        # no premature emission: every emitted window closed before the
-        # final watermark (max event time - 2h delay)
-        max_ts = ev.agg(F.max("ts")).first()[0]
-        final_wm = max_ts - datetime.timedelta(hours=2)
-        assert all(end <= final_wm for (_, _, end) in emitted.values())
+        )
+        ev = read_table(spark, sf_dir, "events")
+        start = F.expr(ntz_from_micros(f"{epoch_micros('ts')} DIV 3600000000 * 3600000000"))
+        batch = sorted(
+            tuple(r)
+            for r in ev.groupBy(start.alias("window_start"), "event_type")
+            .agg(*event_totals())
+            .select(
+                "window_start",
+                (F.col("window_start") + F.expr("INTERVAL 1 HOUR")).alias("window_end"),
+                "event_type",
+                "n_events",
+                "sum_value",
+            )
+            .collect()
+        )
+        assert len(batch) > 0
+        assert emitted == batch
+        assert "sentinel" not in {r[2] for r in emitted}
 
 
 class TestStreamStreamJoin:
@@ -142,12 +106,11 @@ class TestStreamStreamJoin:
         from pyspark.sql import functions as F
 
         from proto_to_avro_ql_spark.functions.portable import epoch_micros
-        from proto_to_avro_ql_spark.streaming.events import run_stream_join_to_memory
 
         streamed = {
             (r.click_id, r.view_id): (r.user_id, r.gap_us)
-            for r in run_stream_join_to_memory(
-                spark, sf_dir, table_name="t_stream_join_eq"
+            for r in ST.drain_to_memory(
+                ST.stream_click_attribution(spark, sf_dir), "append"
             ).collect()
         }
         ev = read_table(spark, sf_dir, "events")
@@ -187,15 +150,9 @@ class TestStreamStaticJoin:
     def test_stream_static_enrich_equals_batch(self, spark, sf_dir):
         """Stateless stream-static enrichment must emit exactly the
         batch inner-join rows (same keys, same segments)."""
-        from proto_to_avro_ql_spark.streaming.events import (
-            run_stream_static_enrich_to_memory,
-        )
-
         streamed = {
             r.event_id: (r.user_id, r.event_type, r.c_mktsegment)
-            for r in run_stream_static_enrich_to_memory(
-                spark, sf_dir, table_name="t_stream_static_eq"
-            ).collect()
+            for r in ST.drain_to_memory(ST.stream_static_enrich(spark, sf_dir), "append").collect()
         }
         ev = read_table(spark, sf_dir, "events")
         dim = read_table(spark, sf_dir, "customer")
@@ -252,7 +209,7 @@ class TestStreamConnector:
         def drain() -> None:
             # parquet sink: the memory sink does not support checkpoint
             # recovery, and recovery is exactly what this test pins
-            q = (
+            ST.run_to_end(
                 spark.readStream.format("proto_replay_stream")
                 .option("path", str(staged))
                 .load()
@@ -260,11 +217,7 @@ class TestStreamConnector:
                 .option("path", out_dir)
                 .outputMode("append")
                 .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination(120)
-            q.stop()
 
         drain()
         got1 = {r.event_id for r in spark.read.parquet(out_dir).collect()}
@@ -343,3 +296,112 @@ class TestStreamEntriesRerunOnChangedData:
         pq.write_table(subset, events)
         second = rows(QUERIES[name](spark, scratch))
         assert second == batch()
+
+
+class TestRunToEnd:
+    """The one runner of bounded streams: its time limit, its state
+    width, and the session it leaves behind."""
+
+    def test_timeout_stops_the_query_and_raises(self, spark, sf_dir, monkeypatch):
+        monkeypatch.setattr(ST, "RUN_TIMEOUT_S", 0.001)
+        views = {t.name for t in spark.catalog.listTables()}
+        with pytest.raises(TimeoutError):
+            ST.drain_to_memory(ST.stream_tumbling_window_agg(spark, sf_dir), "complete")
+        assert spark.streams.active == []
+        assert {t.name for t in spark.catalog.listTables()} == views
+
+    @pytest.mark.parametrize("width", ["32", "5"])
+    def test_state_width_is_fixed_and_session_kept(self, spark, sf_dir, tmp_path, width):
+        from pyspark.sql import functions as F
+
+        key = "spark.sql.shuffle.partitions"
+        saved = spark.conf.get(key)
+        spark.conf.set(key, width)
+        try:
+            ckpt = str(tmp_path / "ckpt")
+            agg = ST.stream_events(spark, sf_dir).groupBy("event_type").agg(F.count(F.lit(1)))
+            ST.run_to_end(
+                agg.writeStream.outputMode("complete")
+                .format("noop")
+                .option("checkpointLocation", ckpt)
+            )
+            assert spark.conf.get(key) == width
+            meta = spark.read.format("state-metadata").load(ckpt).collect()
+            assert len(meta) > 0
+            assert {r.numPartitions for r in meta} == {ST.STREAM_STATE_PARTITIONS}
+        finally:
+            spark.conf.set(key, saved)
+
+
+class TestStreamEntriesKeepTheSession:
+    """A stream entry leaves no temp view in the caller's session, and
+    the frame it returns still collects."""
+
+    @pytest.mark.parametrize("name", STREAM_ENTRIES)
+    def test_no_new_view_and_result_collects(self, spark, sf_dir, name):
+        from proto_to_avro_ql_spark.entry_queries import QUERIES
+
+        views = {t.name for t in spark.catalog.listTables()}
+        df = QUERIES[name](spark, sf_dir)
+        assert {t.name for t in spark.catalog.listTables()} == views
+        assert spark.streams.active == []
+        assert len(df.collect()) > 0
+
+
+class TestEventTotalsReference:
+    """``event_totals`` and its DuckDB twin against plain Python: COUNT
+    of all rows, DECIMAL(38,6) sum of the non-null values rounded
+    HALF_UP to 4 places, null for an all-null group."""
+
+    ROWS = [
+        ("a", 1.25), ("a", None), ("a", -3.5), ("a", 0.125),
+        ("tie", 0.00002), ("tie", 0.00003),  # sums to 0.00005: rounds up
+        ("neg_tie", -0.00002), ("neg_tie", -0.00003),  # -0.00005: away from 0
+        ("nulls", None), ("nulls", None),
+        ("one", -7.0),
+    ]
+
+    @staticmethod
+    def reference(rows):
+        from decimal import ROUND_HALF_UP, Decimal
+
+        out = {}
+        for k in dict.fromkeys(k for k, _ in rows):
+            vals = [v for g, v in rows if g == k]
+            present = [
+                Decimal(repr(v)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
+                for v in vals
+                if v is not None
+            ]
+            total = (
+                float(sum(present).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+                if present
+                else None
+            )
+            out[k] = (len(vals), total)
+        return out
+
+    def test_reference_values(self):
+        ref = self.reference(self.ROWS)
+        assert ref["tie"] == (2, 0.0001) and ref["neg_tie"] == (2, -0.0001)
+        assert ref["a"] == (4, -2.125) and ref["nulls"] == (2, None)
+
+    def test_spark_and_duckdb_match_reference(self, spark):
+        import duckdb
+
+        from proto_to_avro_ql_spark.operators.windows import event_totals_sql
+
+        ref = self.reference(self.ROWS)
+        df = spark.createDataFrame(self.ROWS, "k string, value double")
+        got = {
+            r.k: (r.n_events, r.sum_value)
+            for r in df.groupBy("k").agg(*event_totals()).collect()
+        }
+        assert got == ref
+        values = ", ".join(
+            f"('{k}', {'NULL' if v is None else repr(v)}::DOUBLE)" for k, v in self.ROWS
+        )
+        rows = duckdb.sql(
+            f"SELECT k, {event_totals_sql()} FROM (VALUES {values}) t(k, value) GROUP BY k"
+        ).fetchall()
+        assert {k: (n, s) for k, n, s in rows} == ref

@@ -37,19 +37,24 @@ R6 shared-fragment copy (source only, ratchet at zero): each
    min-label connected-components closure (local union-find and
    recursive CTE) in operators/clustering.py; the rounded cosine
    (Spark dot/norm fold and DuckDB list_cosine_similarity) in
-   operators/simsearch.py. A hand-written copy
+   operators/simsearch.py; the per-group event totals (n_events,
+   sum_value) in operators/windows.py. A hand-written copy
    anywhere else in the package can drift from its twin (the
    RE2-vs-Java vertical-tab split was such a drift).
 R7 session-conf write (source only, ratchet at the allowlist): a
    ``conf.set``/``conf.unset`` in a package function changes the
    caller's session. Only the (module, function) pairs in
-   CONF_WRITERS may write: the one entry is the scoped save/restore
-   of the streaming state width, which Spark reads from the session
-   conf when a stateful query starts. Anything else takes a
+   CONF_WRITERS may write: the one entry is streaming's run_to_end,
+   which scopes the state width around a query's start (Spark reads
+   it from the session conf then) and restores it. Anything else takes a
    per-operation option (``.option(...)`` on the write) or a value
    the caller passes. No reader pins the session timezone: the
    parquet timestamps read as timestamp_ntz, which no session zone
    changes.
+R8 bounded stream run (source only, ratchet at zero): a ``.trigger(``
+   or ``awaitTermination(`` call in a package function other than
+   streaming's run_to_end. Every bounded stream runs through that one
+   function, so each runs under the same time limit and state width.
 
 Non-automatable invariants (still prose-only, checked in review):
 ``ROUND(quotient)`` as a final aggregate step is only a straddle when
@@ -286,15 +291,36 @@ FRAGMENTS: dict[str, tuple[tuple[str, ...], re.Pattern]] = {
     "rounded cosine": (("proto_to_avro_ql_spark/operators/simsearch.py",), re.compile(
         r"(?i:round\(\s*(?:\w+\.)?(?:dot|list_cosine_similarity)\()"
     )),
+    "event totals": (("proto_to_avro_ql_spark/operators/windows.py",), re.compile(
+        r'F\.count\(F\.lit\(1\)\)\.alias\("n_events"\),\s*'
+        r'dec_sum\("value",\s*4\)\.alias\("sum_value"\)'
+        r"|(?i:COUNT\(\*\) AS n_events,\s*"
+        r"CAST\(ROUND\(SUM\(CAST\(value AS DECIMAL\(38,\s*6\)\)\),\s*4\) AS DOUBLE\)"
+        r"\s+AS sum_value)"
+    )),
 }
 
 
 # R7: the only package functions that may write a session conf.
-CONF_WRITERS = {
-    ("proto_to_avro_ql_spark/streaming/events.py", "stream_state_partitions"): (
-        "scoped save/restore of spark.sql.shuffle.partitions"
-    ),
-}
+STREAM_RUNNER = ("proto_to_avro_ql_spark/streaming/events.py", "run_to_end")
+CONF_WRITERS = {STREAM_RUNNER: "scoped save/restore of spark.sql.shuffle.partitions"}
+
+
+def _calls_by_function(source: str):
+    """(enclosing function name, call node) for every call in
+    ``source``; module-level calls are under ''."""
+    import ast
+
+    def visit(node: ast.AST, func: str):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield from visit(child, child.name)
+                continue
+            if isinstance(child, ast.Call):
+                yield func, child
+            yield from visit(child, func)
+
+    return visit(ast.parse(source), "")
 
 
 def find_conf_writes(source: str, rel: str) -> list[str]:
@@ -303,28 +329,39 @@ def find_conf_writes(source: str, rel: str) -> list[str]:
     import ast
 
     hits: list[str] = []
-
-    def visit(node: ast.AST, func: str) -> None:
-        for child in ast.iter_child_nodes(node):
-            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                visit(child, child.name)
-                continue
-            f = getattr(child, "func", None) if isinstance(child, ast.Call) else None
-            if (
-                isinstance(f, ast.Attribute)
-                and f.attr in ("set", "unset")
-                and isinstance(f.value, ast.Attribute)
-                and f.value.attr == "conf"
-                and (rel, func) not in CONF_WRITERS
-            ):
-                hits.append(
-                    f"R7 session-conf write in {func or '<module>'}"
-                    f" (line {child.lineno}): {ast.unparse(child)[:60]}"
-                )
-            visit(child, func)
-
-    visit(ast.parse(source), "")
+    for func, call in _calls_by_function(source):
+        f = call.func
+        if (
+            isinstance(f, ast.Attribute)
+            and f.attr in ("set", "unset")
+            and isinstance(f.value, ast.Attribute)
+            and f.value.attr == "conf"
+            and (rel, func) not in CONF_WRITERS
+        ):
+            hits.append(
+                f"R7 session-conf write in {func or '<module>'}"
+                f" (line {call.lineno}): {ast.unparse(call)[:60]}"
+            )
     return hits
+
+
+def find_stream_runs(source: str, rel: str) -> list[str]:
+    """R8 hits in one package source file: one per function, other than
+    STREAM_RUNNER, that calls ``.trigger(`` or ``awaitTermination(``."""
+    import ast
+
+    first: dict[str, int] = {}
+    for func, call in _calls_by_function(source):
+        if (
+            isinstance(call.func, ast.Attribute)
+            and call.func.attr in ("trigger", "awaitTermination")
+            and (rel, func) != STREAM_RUNNER
+        ):
+            first.setdefault(func, call.lineno)
+    return [
+        f"R8 bounded stream run in {func or '<module>'} (line {line})"
+        for func, line in first.items()
+    ]
 
 
 def _strip_comments(source: str) -> str:
@@ -436,6 +473,7 @@ def lint_all(repo_root: str | Path | None = None) -> dict[str, list[str]]:
             ]
             hits += find_fragment_copies(path.read_text(), rel)
             hits += find_conf_writes(path.read_text(), rel)
+            hits += find_stream_runs(path.read_text(), rel)
             if hits:
                 bad[rel] = hits
     return bad
