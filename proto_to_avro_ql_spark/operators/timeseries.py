@@ -26,7 +26,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from proto_to_avro_ql_spark.functions.stable import DEC, dec_sum
+from proto_to_avro_ql_spark.functions.stable import DEC
+from proto_to_avro_ql_spark.operators.windows import event_totals
 from proto_to_avro_ql_spark.sources.io import read_table
 
 
@@ -74,22 +75,16 @@ def resample_daily(
     events: DataFrame,
     key_col: str = "user_id",
     ts_col: str = "ts",
-    value_col: str = "value",
 ) -> DataFrame:
     """Per-entity dense daily grid from the entity's first to last
     observed day; days with no events report n_events=0 and a null sum
     (COUNT/SUM outer-join semantics — the classic gap-filling shape).
+    The per-day figures are the event totals of operators/windows.py.
 
     Output: key, day (ISO string), n_events, sum_value.
     """
     day = F.date_trunc("day", F.col(ts_col))
-    sparse = (
-        events.groupBy(F.col(key_col), day.alias("_day"))
-        .agg(
-            F.count("*").alias("n_events"),
-            dec_sum(value_col, 4).alias("sum_value"),
-        )
-    )
+    sparse = events.groupBy(F.col(key_col), day.alias("_day")).agg(*event_totals())
     spans = events.groupBy(key_col).agg(
         F.date_trunc("day", F.min(ts_col)).alias("_d0"),
         F.date_trunc("day", F.max(ts_col)).alias("_d1"),

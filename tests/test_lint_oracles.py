@@ -180,6 +180,19 @@ class TestRelationCopiesFire:
             'a = ev.groupBy("event_type").agg(*W.event_totals())\n'
         )
 
+    def test_event_totals_count_star_spelling_fires(self):
+        """The ``F.count("*")`` spelling over a value-column parameter
+        (resample_daily's former copy) is the same fact."""
+        src = (
+            'sparse = ev.groupBy("user_id", "_day").agg(\n'
+            '    F.count("*").alias("n_events"),\n'
+            '    dec_sum(value_col, 4).alias("sum_value"),\n)\n'
+        )
+        for rel in ("proto_to_avro_ql_spark/entry_registry.py",
+                    "proto_to_avro_ql_spark/operators/timeseries.py"):
+            assert any("(event totals)" in h for h in find_fragment_copies(src, rel))
+        assert not find_fragment_copies(src, "proto_to_avro_ql_spark/operators/windows.py")
+
     def test_other_event_aggregates_are_not_totals_copies(self):
         """A bare count, or the sum in another unit or scale (the
         foreachBatch entry's integer cents), is a different fact."""

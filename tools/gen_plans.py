@@ -31,7 +31,7 @@ AUDIT = {
     "ext_repetition_score": "repetition signals (two keyed aggs, text never shuffles)",
     "ext_lm_score": "unigram LM score (vocab agg + token-keyed rejoin)",
     "ext_domain_mix": "domain-mix solver (per-source agg + 1-row budget)",
-    "src_proto_decode": "proto wire decode (mapInPandas, no shuffle)",
+    "src_proto_decode": "proto wire decode (mapInArrow, no shuffle)",
     "ext_multi_join_report": "3-hop star join (only nation broadcast-hinted)",
     "ext_doc_chunk": "fixed-window chunking (narrow explode, zero exchanges)",
     "ext_segment_dedup": "segment dedup (md5+ids shuffle, text stays at scan)",

@@ -292,8 +292,8 @@ FRAGMENTS: dict[str, tuple[tuple[str, ...], re.Pattern]] = {
         r"(?i:round\(\s*(?:\w+\.)?(?:dot|list_cosine_similarity)\()"
     )),
     "event totals": (("proto_to_avro_ql_spark/operators/windows.py",), re.compile(
-        r'F\.count\(F\.lit\(1\)\)\.alias\("n_events"\),\s*'
-        r'dec_sum\("value",\s*4\)\.alias\("sum_value"\)'
+        r'F\.count\((?:F\.lit\(1\)|"\*")\)\.alias\("n_events"\),\s*'
+        r'dec_sum\((?:"value"|\w+),\s*4\)\.alias\("sum_value"\)'
         r"|(?i:COUNT\(\*\) AS n_events,\s*"
         r"CAST\(ROUND\(SUM\(CAST\(value AS DECIMAL\(38,\s*6\)\)\),\s*4\) AS DOUBLE\)"
         r"\s+AS sum_value)"
