@@ -9,6 +9,12 @@ id reachable through the pair graph: an exact local union-find up to
 (O(log n) distributed rounds) above it. ``connected_components_sql``
 renders the same closure as a DuckDB recursive CTE for the oracles.
 
+Every driver-side tail in the package (the union-find and k-core
+peel here, label propagation in graphs.py, BPE training in the
+registry) crosses the JVM boundary once each way through Arrow:
+``local_rows`` sizes and collects its input, ``local_frame`` hands
+its result back as a ``LocalTableScan`` leaf.
+
 Labels are the node keys, edges live in the shuffle — never the
 document text. The distributed loops reach the exact fixpoint within
 their round cap (``CC_MAX_ROUNDS``, ``KCORE_MAX_ROUNDS``) or raise.
@@ -16,8 +22,11 @@ their round cap (``CC_MAX_ROUNDS``, ``KCORE_MAX_ROUNDS``) or raise.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructField, StructType
 
 # Inputs with at most this many rows run on the driver (see
 # ``local_rows``): the collected edge or word list is a few fields per
@@ -29,15 +38,40 @@ CC_MAX_ROUNDS = 12
 KCORE_MAX_ROUNDS = 16
 
 
-def local_rows(df: DataFrame) -> list | None:
-    """The collected rows of ``df`` when it holds at most
+def local_rows(df: DataFrame) -> pa.Table | None:
+    """The rows of ``df`` as one Arrow table when it holds at most
     ``LOCAL_CUTOFF`` rows, else ``None``: the one size guard in front
-    of every driver-side tail (connected components, BPE training,
-    label propagation). One ``limit(cutoff + 1)`` action both sizes
-    and collects, so a small input is read once and a large one stops
-    after ``cutoff + 1`` rows."""
-    rows = df.limit(LOCAL_CUTOFF + 1).collect()
-    return rows if len(rows) <= LOCAL_CUTOFF else None
+    of every driver-side tail (connected components, k-core, BPE
+    training, label propagation). One ``limit(cutoff + 1).toArrow()``
+    both sizes and collects, so a small input is read once and a large
+    one stops after ``cutoff + 1`` rows. The limited plan runs as one
+    job whose final stage keeps its full width, where ``collect()``
+    would run Spark's incremental take (one serial job per batch of
+    partitions, the first one task wide), and the rows cross to the
+    driver as Arrow batches instead of pickled Rows."""
+    table = df.limit(LOCAL_CUTOFF + 1).toArrow()
+    return table if table.num_rows <= LOCAL_CUTOFF else None
+
+
+def local_frame(spark, schema: StructType | str, columns) -> DataFrame:
+    """A driver-side tail's result as a DataFrame: ``columns`` holds one
+    sequence (list or numpy array) per field of ``schema`` (a
+    StructType or DDL string). The columns become one Arrow table
+    typed from the Spark schema, so long, int and string keys
+    round-trip exactly; it crosses to the JVM in one call and plans as
+    a ``LocalTableScan`` leaf."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def table_rows(table: pa.Table):
+    """The rows of a collected Arrow table, as tuples of Python values."""
+    return zip(*(c.to_pylist() for c in table.columns))
 
 
 def _round_cap_error(algo: str, cap_name: str, cap: int) -> ValueError:
@@ -54,8 +88,6 @@ def local_components(spark, edges, id_type) -> DataFrame:
     per node seen, in first-seen order. Comparison semantics match the
     distributed plan: Python's ``<`` on ints is Spark's long order, and
     on strings it is code-point order == Spark's binary UTF-8 order."""
-    from pyspark.sql.types import StructField, StructType
-
     parent: dict = {}
 
     def find(x):
@@ -82,8 +114,7 @@ def local_components(spark, edges, id_type) -> DataFrame:
     schema = StructType(
         [StructField("id", id_type, True), StructField("cluster_id", id_type, True)]
     )
-    rows = [(n, find(n)) for n in seen]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, schema, [seen, [find(n) for n in seen]])
 
 
 def _edge_metrics() -> list:
@@ -157,10 +188,12 @@ def connected_components(pairs: DataFrame, cast: str | None = "long") -> DataFra
     raw = pairs.select(ua.alias("u"), vb.alias("v")).persist()
     # raw (not the oriented distinct relation) is collected so
     # self-loop-only nodes keep their row in the node universe
-    rows = local_rows(raw)
-    if rows is not None:
+    table = local_rows(raw)
+    if table is not None:
         raw.unpersist()
-        return local_components(pairs.sparkSession, rows, raw.schema["u"].dataType)
+        return local_components(
+            pairs.sparkSession, table_rows(table), raw.schema["u"].dataType
+        )
     nodes = raw.select("u").unionAll(raw.select(F.col("v").alias("u"))).distinct()
     edges = (
         raw.where(F.col("u") != F.col("v"))
@@ -266,11 +299,12 @@ def kcore_nodes(pairs: DataFrame, k: int = 3) -> DataFrame:
     r04 sweep inversion: sf0.01 peels 11 rounds and took 3× sf0.1's 3
     rounds). So the loop runs distributed rounds only WHILE the
     relation exceeds ``LOCAL_CUTOFF`` edges, then collects the bounded
-    tail and finishes the peel in numpy. If ``KCORE_MAX_ROUNDS`` ends
+    tail with ``local_rows`` and finishes the peel in numpy: a graph
+    below the cutoff is sized and collected by one Arrow action, and
+    only rounds above it pay a ``count()``. If ``KCORE_MAX_ROUNDS`` ends
     with the relation still above the cutoff, one count-only probe
     peel confirms the fixpoint or the call raises."""
     import numpy as np
-    import pandas as pd
 
     edges = (
         pairs.select(
@@ -281,10 +315,12 @@ def kcore_nodes(pairs: DataFrame, k: int = 3) -> DataFrame:
         .persist()
     )
     spark = pairs.sparkSession
-    n_prev = edges.count()
+    # one Arrow action sizes the input and, below the cutoff, collects it
+    tail = local_rows(edges)
+    n_prev = None if tail is not None else edges.count()
     converged = False
     for rnd in range(KCORE_MAX_ROUNDS):
-        if n_prev <= LOCAL_CUTOFF:
+        if tail is not None:
             break
         nxt = _peel(edges, k).persist()
         if rnd % 3 == 2:
@@ -298,8 +334,10 @@ def kcore_nodes(pairs: DataFrame, k: int = 3) -> DataFrame:
             converged = True
             break
         n_prev = n_cur
+        if n_cur <= LOCAL_CUTOFF:
+            tail = local_rows(edges)
 
-    if n_prev > LOCAL_CUTOFF:
+    if tail is None:
         # peeling only ever removes edges: an unchanged count after one
         # more (unpersisted) peel means the loop already reached it
         if not converged and _peel(edges, k).count() != n_prev:
@@ -310,10 +348,9 @@ def kcore_nodes(pairs: DataFrame, k: int = 3) -> DataFrame:
             F.count(F.lit(1)).alias("core_degree")
         )
 
-    pdf = edges.toPandas()  # ≤ LOCAL_CUTOFF rows
     edges.unpersist()
-    u = pdf["u"].to_numpy(dtype=np.int64)
-    v = pdf["v"].to_numpy(dtype=np.int64)
+    u = tail.column("u").to_numpy().astype(np.int64)
+    v = tail.column("v").to_numpy().astype(np.int64)
     while len(u):
         ids, counts = np.unique(np.concatenate([u, v]), return_counts=True)
         alive = ids[counts >= k]
@@ -321,12 +358,5 @@ def kcore_nodes(pairs: DataFrame, k: int = 3) -> DataFrame:
         if mask.all():
             break
         u, v = u[mask], v[mask]
-    if len(u):
-        ids, counts = np.unique(np.concatenate([u, v]), return_counts=True)
-        out = pd.DataFrame(
-            {"id": ids.astype(np.int64), "core_degree": counts.astype(np.int64)}
-        )
-    else:
-        out = pd.DataFrame({"id": pd.Series(dtype="int64"),
-                            "core_degree": pd.Series(dtype="int64")})
-    return spark.createDataFrame(out, schema="id bigint, core_degree bigint")
+    ids, counts = np.unique(np.concatenate([u, v]), return_counts=True)
+    return local_frame(spark, "id bigint, core_degree bigint not null", [ids, counts])

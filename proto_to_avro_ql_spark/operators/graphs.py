@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from proto_to_avro_ql_spark.operators import clustering as CL
+
 
 def copurchase_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (ok, pk): which parts each order contains."""
@@ -131,12 +133,10 @@ def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
     the adjacency, which this operator builds and persists."""
     from pyspark.sql import Window
 
-    from proto_to_avro_ql_spark.operators import clustering as CL
-
-    rows = CL.local_rows(edges.select("u", "v"))
-    if rows is not None:
+    table = CL.local_rows(edges.select("u", "v"))
+    if table is not None:
         return _local_label_propagation(
-            edges.sparkSession, rows, rounds, edges.schema["u"].dataType
+            edges.sparkSession, CL.table_rows(table), rounds, edges.schema["u"].dataType
         )
     adj = (
         edges.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
@@ -182,7 +182,7 @@ def _local_label_propagation(spark, edges, rounds: int, key_type) -> DataFrame:
     schema = StructType(
         [StructField("node", key_type, True), StructField("label", key_type, True)]
     )
-    return spark.createDataFrame(list(labels.items()), schema)
+    return CL.local_frame(spark, schema, [list(labels), list(labels.values())])
 
 
 def label_propagation_sql(rounds: int) -> str:

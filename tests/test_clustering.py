@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import pytest
+
 from proto_to_avro_ql_spark.operators import clustering as CL
 from proto_to_avro_ql_spark.operators.clustering import (
     connected_components,
@@ -256,3 +258,96 @@ class TestRoundCapContract:
         assert sorted((r["id"], r["cluster_id"]) for r in out) == [
             (1, 1), (2, 1), (3, 1)
         ]
+
+
+class TestArrowRoundTrip:
+    """Every driver-side tail crosses the JVM boundary once each way
+    through Arrow: ``local_rows`` sizes and collects its input in one
+    ``toArrow()`` action, ``local_frame`` returns the result as one
+    Arrow table (a LocalTableScan leaf)."""
+
+    def test_local_rows_at_the_cutoff(self, spark, monkeypatch):
+        monkeypatch.setattr(CL, "LOCAL_CUTOFF", 5)
+        rows = [(i, str(i)) for i in range(6)]
+        five = CL.local_rows(spark.createDataFrame(rows[:5], "k long, s string"))
+        assert five is not None and five.num_rows == 5
+        assert sorted(CL.table_rows(five)) == rows[:5]
+        assert CL.local_rows(spark.createDataFrame(rows, "k long, s string")) is None
+
+    def test_local_rows_runs_no_incremental_take(self, spark):
+        """On a relation whose final stage has 4 partitions, ``collect()``
+        of the limit runs Spark's incremental take: a first job one
+        task wide, then a second over the other partitions. The Arrow
+        collect runs the stage at full width in one job, so no job
+        that ``local_rows`` launches runs exactly one task."""
+        import time
+
+        sc = spark.sparkContext
+        df = spark.createDataFrame(
+            sc.parallelize([(i % 97, i) for i in range(4000)], 4), "k long, v long"
+        ).where("v >= 0")
+        group = "local_rows_no_incremental_take"
+        sc.setJobGroup(group, group)
+        try:
+            table = CL.local_rows(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert table is not None and table.num_rows == 4000
+        tracker = sc.statusTracker()
+        deadline = time.monotonic() + 30
+        while True:  # the status store is fed by the async listener bus
+            jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+            if jobs and all(j and j.status == "SUCCEEDED" for j in jobs):
+                break
+            assert time.monotonic() < deadline, jobs
+            time.sleep(0.05)
+        ran = [
+            sum(tracker.getStageInfo(s).numCompletedTasks for s in j.stageIds)
+            for j in jobs
+        ]
+        assert ran and 1 not in ran, ran
+        assert sum(ran) >= 4, ran
+
+    KEYS = {
+        "long": [10**12 + i for i in range(10)],
+        "int": [7 - i for i in range(10)],
+        "string": [f"n{i:02d}" for i in (5, 3, 9, 0, 1, 8, 2, 7, 4, 6)],
+    }
+    EDGES = [(0, 1), (1, 2), (3, 4), (4, 4), (5, 3), (6, 7), (7, 8), (8, 6), (6, 9),
+             (2, 0), (9, 7)]
+
+    def _local_and_distributed(self, monkeypatch, build):
+        local = build()
+        with monkeypatch.context() as m:
+            m.setattr(CL, "LOCAL_CUTOFF", 0)
+            dist = build()
+        assert local.schema == dist.schema
+        assert sorted(map(tuple, local.collect())) == sorted(
+            map(tuple, dist.collect())
+        )
+        return local
+
+    @pytest.mark.parametrize("key_type", ["long", "int", "string"])
+    @pytest.mark.parametrize("empty", [False, True])
+    def test_local_equals_distributed(self, spark, monkeypatch, key_type, empty):
+        from pyspark.sql import functions as F
+
+        from proto_to_avro_ql_spark.operators import graphs as GR
+
+        keys = self.KEYS[key_type]
+        edges = [] if empty else [(keys[a], keys[b]) for a, b in self.EDGES]
+        pairs = spark.createDataFrame(edges, f"id_a {key_type}, id_b {key_type}")
+        cc = self._local_and_distributed(
+            monkeypatch, lambda: connected_components(pairs, cast=None)
+        )
+        assert cc.schema["id"].dataType == pairs.schema["id_a"].dataType
+        uv = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+        lpa = self._local_and_distributed(
+            monkeypatch, lambda: GR.label_propagation(uv, 2)
+        )
+        assert lpa.schema["node"].dataType == pairs.schema["id_a"].dataType
+        if key_type != "string":
+            self._local_and_distributed(monkeypatch, lambda: kcore_nodes(pairs, k=2))
+        if not empty:
+            assert cc.count() == 10 and lpa.count() == 10

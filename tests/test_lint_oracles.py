@@ -168,7 +168,7 @@ class TestRelationCopiesFire:
             assert not find_fragment_copies(src, simsearch)
         assert not find_fragment_copies(
             'q = f"""SELECT {SS.rounded_cosine_sql("a.embedding", "b.embedding")}"""\n'
-            'c = SS.rounded_cosine(F.col("a"), F.col("b"), F.col("na"), F.col("nb"))\n'
+            'c = SS.rounded_cosine("a", "b", "na", "nb")\n'
         )
 
     def test_event_totals_owner_and_renderer_calls_clean(self):

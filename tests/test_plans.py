@@ -819,11 +819,26 @@ class TestSession6Plans:
     def test_label_propagation_local_tail_has_no_rounds(self, spark, sf_dir):
         """Below the cutoff the rounds run on the driver: the labels are
         a collected leaf, so the plan keeps no per-round argmax window
-        and no per-round join — one exchange for the community count."""
+        and no per-round join — one exchange for the community count.
+        The leaf is the Arrow table the tail sent back, a
+        LocalTableScan, not pickled rows decoded in tasks."""
         plan = self._plan(spark, sf_dir, "ext_label_propagation")
         assert "Window" not in plan, plan
         assert "Join" not in plan, plan
         assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert "LocalTableScan" in plan, plan
+        assert "ExistingRDD" not in plan, plan
+
+    @pytest.mark.parametrize(
+        "name", ["ext_cc_starcontraction", "ext_bpe_train", "ext_kcore"]
+    )
+    def test_local_tails_return_local_table_scans(self, spark, sf_dir, name):
+        """The union-find, BPE-training and k-core tails hand their
+        result back as one Arrow table: a LocalTableScan leaf, no
+        ExistingRDD scan of pickled rows."""
+        plan = self._plan(spark, sf_dir, name)
+        assert "LocalTableScan" in plan, plan
+        assert "ExistingRDD" not in plan, plan
 
 
 class TestSession7Plans:

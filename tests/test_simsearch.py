@@ -379,7 +379,7 @@ class TestRoundedCosineReference:
             return sdf.select(
                 F.col("vec_id").alias(f"id_{s}"),
                 F.col("embedding").alias(f"v_{s}"),
-                SS.l2_norm(F.col("embedding")).alias(f"n_{s}"),
+                SS.l2_norm("embedding").alias(f"n_{s}"),
             )
 
         spark_vals = {
@@ -390,9 +390,7 @@ class TestRoundedCosineReference:
             .select(
                 "id_a",
                 "id_b",
-                SS.rounded_cosine(
-                    F.col("v_a"), F.col("v_b"), F.col("n_a"), F.col("n_b")
-                ).alias("c"),
+                SS.rounded_cosine("v_a", "v_b", "n_a", "n_b").alias("c"),
             )
             .collect()
         }
@@ -454,3 +452,153 @@ class TestSaltedPairScanReference:
             ).collect()
         }
         assert got == expect
+
+
+def _fold_dot(a, b):
+    """Σ a[i]·b[i] summed left to right in doubles; None on a null
+    element or on arrays of different lengths."""
+    if len(a) != len(b) or None in a or None in b:
+        return None
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
+
+
+def _round6(x):
+    """HALF_UP at 6 places on the double's shortest decimal form."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+class TestKernelReference:
+    """The SQL-text kernels against plain left-to-right double math over
+    float32 inputs: negative values, a null element and a ragged pair
+    (both NULL), a zero vector (NULL cosine), and the bucket of every
+    vector against the seeded hyperplanes."""
+
+    ROWS = [
+        (0, [0.5, -1.25, 3.0, 0.1], [2.0, 0.3, -0.7, 0.001]),
+        (1, [-1.0, -2.0, -3.0, -4.0], [4.0, 3.0, 2.0, 1.0]),
+        (2, [0.1, 0.2, 0.3, 0.4], [0.1, 0.2, 0.3, 0.4]),
+        (3, [1.0, None, 2.0, 3.0], [1.0, 1.0, 1.0, 1.0]),  # null element
+        (4, [1.0, 2.0, 3.0], [1.0, 2.0, 3.0, 4.0]),  # ragged pair
+        (5, [0.0, 0.0, 0.0, 0.0], [-0.3, 0.7, 1.1, -2.5]),  # zero vector
+    ]
+
+    def test_kernels_match_plain_python(self, spark):
+        import numpy as np
+
+        def f32(v):
+            return [None if x is None else float(np.float32(x)) for x in v]
+
+        rows = [(i, f32(a), f32(b)) for i, a, b in self.ROWS]
+        planes = SS._hyperplanes(4, 3)
+        expect = {}
+        for i, a, b in rows:
+            d = _fold_dot(a, b)
+            na, nb = _fold_dot(a, a), _fold_dot(b, b)
+            na = None if na is None else math.sqrt(na)
+            nb = None if nb is None else math.sqrt(nb)
+            cos = None
+            if None not in (d, na, nb) and na * nb != 0:
+                cos = _round6(d / (na * nb))
+            bucket = 0
+            for k, p in enumerate(planes):
+                h = _fold_dot(a, p)
+                if h is not None and h >= 0:
+                    bucket += 1 << k
+            expect[i] = (d, na, nb, cos, bucket)
+        assert expect[3][:4] == (None, None, 2.0, None)
+        assert expect[4][0] is None and expect[4][3] is None
+        assert expect[5][1] == 0.0 and expect[5][3] is None
+        assert expect[1][3] < 0 and len({e[4] for e in expect.values()}) > 2
+
+        df = spark.createDataFrame(rows, "i int, a array<float>, b array<float>")
+        got = df.select(
+            "i", "a", "b",
+            SS.dot("a", "b").alias("d"),
+            SS.l2_norm("a").alias("na"),
+            SS.l2_norm("b").alias("nb"),
+        ).select(
+            "i", "d", "na", "nb",
+            SS.rounded_cosine("a", "b", "na", "nb").alias("cos"),
+            SS.lsh_bucket("a", 4, 3).alias("bucket"),
+        )
+        assert {r.i: tuple(r)[1:] for r in got.collect()} == expect
+
+
+class TestZeroVector:
+    """An all-zero embedding has no direction: its cosine with anything
+    is NULL on both engines (DuckDB's bare list_cosine_similarity says
+    -1.0; Spark's ANSI division would raise). Pairs never include it,
+    and in a top-k its NULL scores sort after every scored neighbour,
+    ties broken by neighbour id."""
+
+    ZERO = (4, 9)
+
+    def _frames(self, spark):
+        import random
+
+        import duckdb
+        import numpy as np
+        import pyarrow as pa
+
+        rng = random.Random(7)
+        vecs = {i: [rng.gauss(0.0, 1.0) for _ in range(64)] for i in range(10)}
+        vecs[3] = [2.0 * x for x in vecs[1]]  # a duplicate direction of 1
+        for z in self.ZERO:
+            vecs[z] = [0.0] * 64
+        vecs = {i: [float(np.float32(x)) for x in v] for i, v in vecs.items()}
+        ids = sorted(vecs)
+        sdf = spark.createDataFrame(
+            [(i, vecs[i]) for i in ids], "vec_id long, embedding array<float>"
+        )
+        con = duckdb.connect()
+        con.register(
+            "embeddings",
+            pa.table({
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array([vecs[i] for i in ids], pa.list_(pa.float32())),
+            }),
+        )
+        return sdf, con
+
+    def test_pairs_skip_the_zero_vector(self, spark):
+        sdf, con = self._frames(spark)
+        cos = SS.rounded_cosine_sql("a.embedding", "b.embedding")
+        exact_sql = f"""SELECT id_a, id_b, cos_sim FROM (
+            SELECT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cos_sim
+            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
+            WHERE cos_sim >= 0.9"""
+        lsh_sql = f"""WITH e AS (SELECT vec_id, embedding,
+              {SS.lsh_bucket_sql()} AS bucket FROM embeddings)
+            SELECT id_a, id_b, cos_sim FROM (
+              SELECT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cos_sim
+              FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
+            WHERE cos_sim >= 0.9"""
+        for exact, sql in ((True, exact_sql), (False, lsh_sql)):
+            got = {
+                tuple(r)
+                for r in SS.embedding_near_dup_pairs(sdf, 0.9, exact=exact).collect()
+            }
+            assert got == {(1, 3, 1.0)}, exact
+            assert set(con.execute(sql).fetchall()) == got, exact
+        zero_pair = con.execute(
+            f"""SELECT {cos} FROM embeddings a, embeddings b
+                WHERE a.vec_id = 4 AND b.vec_id = 1"""
+        ).fetchall()
+        assert zero_pair == [(None,)]
+
+    def test_topk_sorts_null_scores_last(self, spark):
+        sdf, con = self._frames(spark)
+        qids, k = [1, 4], 9
+        got = {tuple(r) for r in SS.brute_force_topk(sdf, qids, k).collect()}
+        assert got == set(con.execute(SS.brute_force_topk_sql(qids, k)).fetchall())
+        by_q = {q: sorted((r, n, c) for qq, n, c, r in got if qq == q) for q in qids}
+        # the zero vector as query: every score NULL, neighbours by id
+        assert by_q[4] == [(r + 1, n, None) for r, n in enumerate(
+            [0, 1, 2, 3, 5, 6, 7, 8, 9])]
+        # the zero vectors as neighbours: after every scored one
+        assert [(n, c) for _, n, c in by_q[1][-2:]] == [(4, None), (9, None)]
+        assert all(c is not None for _, _, c in by_q[1][:-2])
+        assert by_q[1][0][1:] == (3, 1.0)

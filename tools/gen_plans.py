@@ -17,7 +17,7 @@ AUDIT = {
     "proj_paths": "nested projection over the synthesized view",
     "join_equi_inner": "dimension join",
     "ext_dedup_near": "normalize+hash dedup",
-    "ext_sim_search": "brute-force cosine top-k",
+    "ext_sim_search": "brute-force cosine top-k (each kernel one SQL-text expression)",
     "ext_window_rank": "per-user latest event",
     "ext_sessionize": "gap sessionization",
     "ext_asof_join": "as-of join via union+window",
@@ -101,13 +101,13 @@ AUDIT = {
     "ext_attribution": "integer-ledger attribution (user join + pid window)",
     "ext_snapshot_diff": "CDC diff (full-outer on id, hashes shuffle)",
     "ext_gopher_rules": "quality gate (zero exchanges, scan-stage only)",
-    "ext_label_propagation": "3-round LPA (driver-side rounds over the collected edges; keyed rounds over a cached adjacency above LOCAL_CUTOFF)",
+    "ext_label_propagation": "3-round LPA (driver-side rounds over the Arrow-collected edges, labels back as a LocalTableScan; keyed rounds over a cached adjacency above LOCAL_CUTOFF)",
     # round 3 session 5 additions
-    "ext_cc_starcontraction": "star-contraction CC (log-round, edge-keyed rounds)",
+    "ext_cc_starcontraction": "CC (union-find over the Arrow-collected edges, a LocalTableScan leaf; log-round edge-keyed star contraction above LOCAL_CUTOFF)",
     "ext_event_paths": "journey paths (ordering inside the agg, TakeOrdered)",
     "ext_rolling_median": "rolling exact median (one keyed window)",
     "ext_mann_whitney": "U test (banded midrank prefix sums, cached cents)",
-    "ext_kcore": "k-core (distributed peel while large; bounded local tail, so the bench-SF plan is the local createDataFrame)",
+    "ext_kcore": "k-core (distributed peel while large; bounded numpy tail, so the bench-SF plan is its Arrow LocalTableScan)",
     "ext_freq_triples": "apriori triples (cached pairs, keyed self-joins)",
     "ext_trend_ols": "OLS trend (one moment aggregate, no window)",
     "ext_time_weighted_avg": "TWA (one keyed window, 128-bit weights)",
@@ -230,7 +230,7 @@ AUDIT = {
     # round 9
     "ext_dsir_weights": "DSIR selection (bucketed token counts, broadcast ratios, TakeOrdered)",
     "ext_dsir_bigram": "DSIR bigram features (map-side zip_with pairing, same scoring tail)",
-    "ext_bpe_train": "BPE merge training (one word-freq pass, driver-side merge loop; k pair-count aggregates above LOCAL_CUTOFF)",
+    "ext_bpe_train": "BPE merge training (one word-freq pass, driver-side merge loop, rules back as a LocalTableScan; k pair-count aggregates above LOCAL_CUTOFF)",
     "ext_bpe_encode": "BPE encoding (trained rules as k literal replaces over (lang, word) counts)",
     "ext_kneser_ney": "KN bigram LM (one corpus partial-agg, vocab-bounded joins, broadcast T)",
     "ext_kneser_ney_holdout": "held-out KN (split in the one partial-agg, vocab-bounded LEFT joins, OOV floor)",
